@@ -158,10 +158,9 @@ def digest(t: pa.Table) -> str:
     return h.hexdigest()[:16]
 
 
-def write_source(t: pa.Table, out_dir: str, n_files: int,
-                 compression: str = "zstd", threads: int = 4) -> list[str]:
-    """Write `t` as `n_files` row-contiguous Parquet files (file order =
-    row order). Returns the file paths."""
+def write_source(t: pa.Table, out_dir: str, n_files: int) -> list[str]:
+    """Write `t` as `n_files` row-contiguous zstd Parquet files (file order
+    = row order), four at a time. Returns the file paths."""
     from concurrent.futures import ThreadPoolExecutor
 
     os.makedirs(out_dir, exist_ok=True)
@@ -169,9 +168,8 @@ def write_source(t: pa.Table, out_dir: str, n_files: int,
     parts = [(os.path.join(out_dir, f"part-{k:05d}.parquet"),
               t.slice(k * per, per)) for k in range(n_files)
              if k * per < t.num_rows]
-    with ThreadPoolExecutor(threads) as ex:
-        for fut in [ex.submit(pq.write_table, part, p,
-                              compression=compression)
+    with ThreadPoolExecutor(4) as ex:
+        for fut in [ex.submit(pq.write_table, part, p, compression="zstd")
                     for p, part in parts]:
             fut.result()
     return [p for p, _ in parts]

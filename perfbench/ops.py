@@ -51,12 +51,10 @@ class Source:
 
 def make_source(seed: int, raw_budget: int, mean_tokens: int, src_dir: str,
                 n_files: int) -> Source:
+    """Generate the seeded table, write it to `n_files` source files in row
+    order, and compute the oracle values the gates compare against."""
     t = gen.make_table(seed, raw_budget, mean_tokens)
-    return source_of(t, gen.write_source(t, src_dir, n_files))
-
-
-def source_of(t: pa.Table, files: list[str]) -> Source:
-    """Oracle values of table `t`, which `files` hold in row order."""
+    files = gen.write_source(t, src_dir, n_files)
     toks = t["tokens"].combine_chunks()
     vals = toks.values.to_numpy().astype(np.int64)
     offs = toks.offsets.to_numpy()
@@ -201,15 +199,16 @@ def decode_rows(spark, src: Source, specs, enc_dir: str, sample: list[int],
     Arrow batches before Spark sees them."""
     from pyspark.sql import functions as F
 
+    from tokenc.engine import from_arrow_schema
     from tokenc.files import decode_files
 
     ids = [src.table["doc_id"][i].as_py() for i in sample]
+    # the window covers the whole public call: decode_files lists the
+    # encoded files and plans on the driver before any row is decoded
+    t0 = time.perf_counter()
     df = decode_files(spark, enc_dir, specs, gen.SCHEMA)
     if tamper is not None:
-        from tokenc.engine import from_arrow_schema
-
         df = df.mapInArrow(tamper, from_arrow_schema(gen.SCHEMA))
-    t0 = time.perf_counter()
     r = df.agg(
         F.count("*"), F.sum("n_tok"), F.sum(F.size("tokens")),
         F.sum(F.octet_length("doc_id")), F.sum(F.octet_length("source")),

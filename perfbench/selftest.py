@@ -3,10 +3,12 @@
 
     python3 perfbench/selftest.py
 
-Checks two things and exits non-zero if either fails:
+Checks three things and exits non-zero if any fails:
   1. a timed run prints every end_to_end metric of BENCHMARK.json, and a
      traced run every per_layer metric, each with the unit declared there;
-  2. a decode whose output was tampered with (one token changed) is
+  2. the traced run's s-unit layer entries plus trace.unattributed_frac
+     times the traced wall add up to that wall;
+  3. a decode whose output was tampered with (one token changed) is
      counted as a failed operation by the correctness gate.
 """
 
@@ -54,6 +56,18 @@ def check_names(result: dict, declared: list[dict], what: str) -> list[str]:
     return errs
 
 
+def check_ledger(result: dict, declared: list[dict]) -> list[str]:
+    got = result["metrics"]
+    wall = result["detail"]["traced_wall_s"]
+    total = (sum(got[d["name"]]["value"] for d in declared
+                 if d["unit"] == "s")
+             + got["trace.unattributed_frac"]["value"] * wall)
+    if abs(total - wall) > 1e-6 * wall:
+        return [f"ledger: layer seconds + unattributed = {total:.6f} s, "
+                f"traced wall = {wall:.6f} s"]
+    return []
+
+
 def main() -> int:
     sys.path.insert(0, ROOT)
     from perfbench import ops, run, timed, trace
@@ -66,9 +80,9 @@ def main() -> int:
     try:
         name, mean_tokens = next(iter(run.WORKLOADS.items()))
         for mod, key in ((timed, "end_to_end"), (trace, "per_layer")):
-            errs += check_names(
-                mod.run(name, mean_tokens, 1, 1, work, TINY_RAW_BYTES),
-                bench[key], f"{mod.__name__} run")
+            result = mod.run(name, mean_tokens, 1, 1, work, TINY_RAW_BYTES)
+            errs += check_names(result, bench[key], f"{mod.__name__} run")
+        errs += check_ledger(result, bench["per_layer"])
 
         src = ops.make_source(2, TINY_RAW_BYTES, mean_tokens,
                               os.path.join(work, "tamper_src"), 2)

@@ -5,7 +5,8 @@ one process:
   - tokenc.local.write_table / read_table over the workload's source, with
     spans around the layer entry points they reach: selector.choose,
     encode_chunk / decode_chunk, the codec kernels (chunk._encode_payload /
-    _decode_payload, which name the codec), the bloom build, and the
+    _decode_payload, which name the codec, and the factorize / assemble
+    steps a paged DICT chunk calls instead), the bloom build, and the
     pyarrow Parquet write/read of the container;
   - the file-granular Spark calls (files.*) and the DataFrame-API
     frontends (engine.encode_df / decode_df), each timed as a whole call;
@@ -15,8 +16,9 @@ one process:
 Spans are recorded from this file by wrapping those functions where they
 are looked up; the engine is not edited. A span holds name, layer, start,
 end, parent and a byte count. A layer's self time is its spans' time minus
-their child spans'; the root span's self time is the unattributed rest.
-Spans stay in memory and are written as JSON lines at the end.
+their child spans'. Every span's self time lands in exactly one s-unit
+ledger entry or in trace.unattributed_frac, so the two add up to the traced
+wall. Spans stay in memory and are written as JSON lines at the end.
 """
 
 from __future__ import annotations
@@ -65,7 +67,8 @@ def per_layer_names() -> list[str]:
     names += [f"bytes.payload.{col}" for col in COLUMNS]
     names += ["files.encode_compute_s", "files.write_s",
               "files.decode_kernels_s", "files.pivot_s",
-              "sorted_index.build_s", "engine.rg_total",
+              "sorted_index.build_s", "engine.scan_s", "engine.get_s",
+              "engine.prune_s", "chunk.page_filter_s", "engine.rg_total",
               "engine.scan.rg_kept_frac", "engine.get.rg_kept_frac",
               "chunk.page_rows_frac", "engine.scan.spark_jobs",
               "engine.get.spark_jobs", "engine.encode_df_s",
@@ -140,7 +143,7 @@ def instrument(tr: Tracer):
     import tokenc.engine as engine
     import tokenc.local as local
     import tokenc.selector as selector
-    from tokenc.codecs import CODEC_NAMES
+    from tokenc.codecs import CODEC_NAMES, dict_codec
 
     def choose(orig):
         def f(phys, **kw):
@@ -164,6 +167,33 @@ def instrument(tr: Tracer):
                     rec["values"], rec["bytes"] = args[1], len(args[0])
             return out
         return f
+
+    def dict_step(orig):
+        """A paged DICT chunk factorizes once and assembles every page
+        itself, without _encode_payload: time those steps as dict encode.
+        The values and payload bytes are booked on the assemble step."""
+        def f(*args):
+            layer = "selector" if tr.in_layer("selector") else "codecs"
+            with tr.span("codecs.dict.encode", layer) as rec:
+                out = orig(*args)
+                assembled = orig.__name__.startswith("assemble")
+                rec["values"] = len(args[0]) if assembled else 0
+                rec["bytes"] = len(out) if assembled else 0
+            return out
+        return f
+
+    class DictCodec:
+        """dict_codec as tokenc.chunk sees it, with the paged steps timed.
+        The codec's own encode_* keep calling the originals, so a
+        _encode_payload span never nests a second dict span."""
+
+        def __getattr__(self, name):
+            return getattr(dict_codec, name)
+
+    paged_dict = DictCodec()
+    for name in ("factorize_binary", "factorize_numeric", "assemble_binary",
+                 "assemble_numeric"):
+        setattr(paged_dict, name, dict_step(getattr(dict_codec, name)))
 
     def encode_chunk(orig):
         def f(**kw):
@@ -211,6 +241,7 @@ def instrument(tr: Tracer):
     tr.wrap(local, "decode_chunk", decode_chunk)
     tr.wrap(engine, "_chunk_bloom", bloom)
     tr.wrap(local, "pq", lambda o: Container())
+    tr.wrap(chunk, "dict_codec", lambda o: paged_dict)
 
 
 def local_replay(tr: Tracer | None, src, specs, out_dir: str,
@@ -433,6 +464,7 @@ def run(name: str, mean_tokens: int, seed: int, seconds: float,
     names = per_layer_names()
     detail = {"workload": name, "seed": seed, "source_digest": src.digest,
               "spans": len(tr.spans), "traced_local_s": round(traced_s, 3),
+              "traced_wall_s": traced_wall(tr),
               "unlisted": {k: v for k, v in m.items() if k not in names},
               "untraced_local_s": round(untraced_s, 3),
               "errors": gate.errors}
@@ -442,12 +474,47 @@ def run(name: str, mean_tokens: int, seed: int, seconds: float,
                         for k in names}}
 
 
+# span name -> the ledger entry that gets its self time
+SELF_ENTRY = {
+    "chunk.encode_chunk": "chunk.encode_self_s",
+    "chunk.decode_chunk": "chunk.decode_self_s",
+    "bloom.build": "bloom.build_s",
+    "local.write_table": "local.write_self_s",
+    "local.read_table": "local.read_self_s",
+    "container.write": "container.write_s",
+    "container.read": "container.read_s",
+    "engine.encode_df": "engine.encode_df_s",
+    "engine.decode_df": "engine.decode_df_s",
+    "sorted_index.build": "sorted_index.build_s",
+    "engine.scan": "engine.scan_s",
+    "engine.get": "engine.get_s",
+    "engine.prune_rowgroups_str": "engine.prune_s",
+    "engine.prune_rowgroups_eq": "engine.prune_s",
+    "chunk.page_filter_row_runs": "chunk.page_filter_s",
+    "chunk.page_filter_row_runs_multi": "chunk.page_filter_s",
+}
+
+
+def traced_wall(tr: Tracer) -> float:
+    root = next(s for s in tr.spans if s["name"] == "trace")
+    return root["end"] - root["start"]
+
+
 def ledger(tr: Tracer) -> dict:
-    """Per-layer sums over the recorded spans."""
+    """Per-layer sums over the recorded spans.
+
+    Each span's self time goes to one s-unit entry or to the unattributed
+    rest, which holds: the self time of the root and of the local.replay
+    grouping span, the codec kernels without an entry of their own (see
+    CODECS), and the two probe calls (files.encode_compute,
+    files.decode_kernels) that files.write_s and files.pivot_s subtract
+    from the whole calls: the probe's work is booked once, inside the
+    whole call, and its second run is the measuring's own cost."""
     own = tr.self_times()
     m = {k: 0 for k in per_layer_names()}
     by_name: dict[str, float] = {}
     payload = blob = 0
+    rest = 0.0
     for s, self_s in zip(tr.spans, own):
         by_name[s["name"]] = by_name.get(s["name"], 0.0) + self_s
         if s["layer"] == "codecs":
@@ -457,6 +524,8 @@ def ledger(tr: Tracer) -> dict:
                          (f"codecs.{codec}.payload_bytes",
                           s["bytes"] if op == "encode" else 0)):
                 m[k] = m.get(k, 0) + v
+            if codec not in CODECS:
+                rest += self_s
             if op == "encode":
                 payload += s["bytes"]
         elif s["layer"] == "selector":
@@ -465,28 +534,21 @@ def ledger(tr: Tracer) -> dict:
                 m["selector.calls"] += 1
                 k = f"selector.picks.{s['column']}.{s['codec']}"
                 m[k] = m.get(k, 0) + 1
-        elif s["name"] == "chunk.encode_chunk":
+        elif s["name"] in SELF_ENTRY:
+            m[SELF_ENTRY[s["name"]]] += self_s
+        elif s["name"] in ("trace", "local.replay"):
+            rest += self_s
+        elif not s["name"].startswith("files."):
+            raise ValueError(f"span {s['name']} has no ledger entry")
+        if s["name"] == "chunk.encode_chunk":
             blob += s["bytes"]
-    m["chunk.encode_self_s"] = by_name.get("chunk.encode_chunk", 0.0)
-    m["chunk.decode_self_s"] = by_name.get("chunk.decode_chunk", 0.0)
     m["chunk.overhead_bytes"] = blob - payload
-    m["bloom.build_s"] = by_name.get("bloom.build", 0.0)
-    m["local.write_self_s"] = by_name.get("local.write_table", 0.0)
-    m["local.read_self_s"] = by_name.get("local.read_table", 0.0)
-    m["container.write_s"] = by_name.get("container.write", 0.0)
-    m["container.read_s"] = by_name.get("container.read", 0.0)
     m["files.encode_compute_s"] = by_name["files.encode_compute"]
     m["files.write_s"] = (by_name["files.encode_write"]
                           - by_name["files.encode_compute"])
     m["files.decode_kernels_s"] = by_name["files.decode_kernels"]
     m["files.pivot_s"] = (by_name["files.decode_rows"]
                           - by_name["files.decode_kernels"])
-    m["engine.encode_df_s"] = by_name["engine.encode_df"]
-    m["engine.decode_df_s"] = by_name["engine.decode_df"]
-    m["sorted_index.build_s"] = by_name["sorted_index.build"]
-    root = next(i for i, s in enumerate(tr.spans) if s["name"] == "trace")
-    wall = tr.spans[root]["end"] - tr.spans[root]["start"]
-    # the local.replay grouping span is bookkeeping: its self time counts
-    # as unattributed too
-    m["trace.unattributed_frac"] = (own[root] + by_name["local.replay"]) / wall
+    rest += by_name["files.encode_compute"] + by_name["files.decode_kernels"]
+    m["trace.unattributed_frac"] = rest / traced_wall(tr)
     return m
