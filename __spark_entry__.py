@@ -791,7 +791,7 @@ def q_pruned_scan_str(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRING range-predicate pruning at both granularities: row groups
     drop on lexicographic manifest min/max (engine.prune_rowgroups_str),
     then inside surviving blobs only the pages whose covering 8-byte
-    prefix bounds overlap are decoded (chunk.decode_chunk_filter — the
+    prefix bounds overlap are decoded (chunk.page_filter_row_runs — the
     reference ColumnIndex stores byte-array min/max too,
     writer/writer.go:418-481; truncated bounds like Iceberg truncate(L)
     can only widen, so pruning stays sound). Keys are range-clustered so

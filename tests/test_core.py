@@ -1,0 +1,115 @@
+"""The shared encode accumulator and decode core behind every frontend.
+
+Every encoder (encode_df, encode_files, local.write_table) cuts row groups
+with engine._encode_batches and every Spark decoder assembles Arrow with
+engine._decode_groups, so the same source must encode to the same row
+groups and decode to the same rows whichever frontend runs it.
+"""
+
+from __future__ import annotations
+
+import glob
+import os
+
+import pyarrow.parquet as pq
+import pytest
+
+from tokenc.schema import specs_from_arrow_schema
+
+N_ROWS = 2000      # one Spark Arrow batch (4096 cap) and one parquet batch
+TARGET = 128 << 10  # the single source batch is ~8x this
+# forced codecs: the per-worker selector memo may hold picks from earlier
+# tests, so auto-selection could differ between frontends
+CODECS = {"doc_id": "fsst", "tokens": "for", "n_tok": "rles",
+          "source": "dict"}
+
+
+def _source_df(spark):
+    """Uniform rows (fixed-width id, 128 tokens): every row has the same
+    Arrow size, so a row group's bytes are its row count times that."""
+    from pyspark.sql import functions as F
+
+    return spark.range(0, N_ROWS, 1, 1).select(
+        F.format_string("d%06d", "id").alias("doc_id"),
+        F.expr("transform(sequence(0, 127), x -> cast(x * 7 + id as int))")
+        .alias("tokens"),
+        F.lit(128).alias("n_tok"),
+        F.lit("web").alias("source"))
+
+
+@pytest.fixture(scope="module")
+def src(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("core")
+    _source_df(spark).coalesce(1).write.parquet(str(d / "src"))
+    path = glob.glob(str(d / "src" / "*.parquet"))[0]
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    table = pq.read_table(path)
+    specs = specs_from_arrow_schema(table.schema, codec_overrides=CODECS)
+    return d, path, table, specs
+
+
+def _groups(tbl) -> list[tuple[int, str]]:
+    """(n_rows, rg_id) in (rg_part, rg_idx) order."""
+    rows = sorted(zip(tbl["rg_part"].to_pylist(), tbl["rg_idx"].to_pylist(),
+                      tbl["n_rows"].to_pylist(), tbl["rg_id"].to_pylist()))
+    return [(n, rg) for _, _, n, rg in rows]
+
+
+def _rows(tbl, names) -> list[tuple]:
+    cols = [tbl.column(c).to_pylist() for c in names]
+    return sorted(zip(*cols))
+
+
+def test_oversized_batch_cut_into_target_sized_groups(spark, src):
+    """One Arrow batch of ~8x the target: each slice is its own row group,
+    so no group holds two slices (the old accumulator buffered them in
+    pairs, 2x the target)."""
+    from tokenc.engine import encode_df
+
+    _, _, table, specs = src
+    per_row = table.nbytes / table.num_rows
+    assert table.nbytes >= 4 * TARGET
+    enc = encode_df(_source_df(spark), specs, target_raw_bytes=TARGET) \
+        .select("rg_part", "rg_idx", "n_rows", "rg_id").toArrow()
+    n_rows = [n for n, _ in _groups(enc)]
+    assert sum(n_rows) == N_ROWS and len(n_rows) > 4
+    assert max(n_rows) * per_row <= 1.25 * TARGET
+
+
+def test_frontends_agree(spark, src):
+    """encode_df, encode_files and local.write_table cut the same row
+    groups; decode_df, decode_files, read_range, scan and local.read_table
+    return the source rows bit for bit."""
+    from tokenc import local
+    from tokenc.engine import decode_df, encode_df, read_range, scan
+    from tokenc.files import decode_files, encode_files
+
+    d, path, table, specs = src
+    names = table.column_names
+    want = _rows(table, names)
+
+    by_df = encode_df(_source_df(spark), specs, target_raw_bytes=TARGET) \
+        .select("rg_part", "rg_idx", "n_rows", "rg_id").toArrow()
+    enc_dir = str(d / "enc")
+    encode_files(spark, [path], specs, target_raw_bytes=TARGET) \
+        .write.mode("overwrite").parquet(enc_dir)
+    by_files = pq.read_table(enc_dir,
+                             columns=["rg_part", "rg_idx", "n_rows", "rg_id"])
+    local_dir = str(d / "local")
+    local.write_table(table, local_dir, specs=specs, target_raw_bytes=TARGET)
+    by_local = pq.read_table(os.path.join(local_dir, "part-00000.parquet"),
+                             columns=["rg_part", "rg_idx", "n_rows", "rg_id"])
+    assert len(_groups(by_df)) > 1
+    assert _groups(by_df) == _groups(by_files) == _groups(by_local)
+
+    schema = table.schema
+    enc = spark.read.parquet(enc_dir)
+    decoded = {
+        "decode_df": decode_df(enc, specs, schema),
+        "decode_files": decode_files(spark, enc_dir, specs, schema),
+        "read_range": read_range(enc, specs, schema, 0, N_ROWS),
+        "scan": scan(enc, specs, schema, [("doc_id", ">=", "d")]),
+    }
+    for name, df in decoded.items():
+        assert _rows(df.toArrow(), names) == want, name
+    assert _rows(local.read_table(local_dir), names) == want

@@ -168,6 +168,18 @@ class TestRLESoA:
         with pytest.raises(ValueError):
             rle_soa.decode(blob, 4)
 
+    def test_surplus_count_raises(self):
+        # runs summing past `count` are a corrupt stream, not a prefix
+        blob = rle_soa.encode(np.array([1, 1, 2, 2, 2], np.int64))
+        with pytest.raises(ValueError, match="holds 5 values, need 3"):
+            rle_soa.decode(blob, 3)
+
+    def test_empty_stream_with_count_raises(self):
+        # n_runs == 0 decodes to nothing; claiming values is corrupt
+        blob = rle_soa.encode(np.empty(0, np.int64))
+        with pytest.raises(ValueError, match="holds 0 values, need 7"):
+            rle_soa.decode(blob, 7)
+
     def test_int64_extremes(self):
         vals = np.array([np.iinfo(np.int64).min, np.iinfo(np.int64).max,
                          0, 0, 0, np.iinfo(np.int64).min], np.int64)

@@ -61,15 +61,16 @@ def encode(vals: np.ndarray) -> bytes:
 def decode(buf: bytes | np.ndarray, count: int, pos: int = 0,
            out_dtype=np.int64) -> tuple[np.ndarray, int]:
     """→ (values, next_pos). `out_dtype=np.int32` takes for_bp's
-    uint32-lane fast path for int32-physical columns."""
+    uint32-lane fast path for int32-physical columns. Raises ValueError
+    unless the run lengths sum to exactly `count`."""
     raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
     n_runs, pos = varint.decode_uvarint(raw, pos)
     if n_runs == 0:
-        return np.empty(0, out_dtype), pos
-    lens, pos = for_bp.decode(raw, n_runs, pos)
-    run_vals, pos = for_bp.decode(raw, n_runs, pos, out_dtype=out_dtype)
+        lens = run_vals = np.empty(0, out_dtype)
+    else:
+        lens, pos = for_bp.decode(raw, n_runs, pos)
+        run_vals, pos = for_bp.decode(raw, n_runs, pos, out_dtype=out_dtype)
     total = int(lens.sum())
-    if total < count:
+    if total != count:
         raise ValueError(f"rle_soa stream holds {total} values, need {count}")
-    out = np.repeat(run_vals, lens)
-    return (out[:count] if total > count else out), pos
+    return np.repeat(run_vals, lens), pos

@@ -31,7 +31,8 @@ import numpy as np
 import pyarrow as pa
 
 from . import arrow_util, codecs, selector
-from .chunk import ChunkStats, decode_chunk, decode_chunk_rows, encode_chunk
+from .chunk import (ChunkStats, decode_chunk, decode_chunk_rows_multi,
+                    encode_chunk, page_filter_row_runs)
 from .codecs.plain import _ranges_to_indices
 from .schema import ColumnSpec
 
@@ -528,6 +529,48 @@ def _encode_rowgroup(batch: pa.Table, specs: list[ColumnSpec],
     return row
 
 
+def _encode_batches(batches, specs: list[ColumnSpec], target_raw_bytes: int,
+                    page_bytes: int, sel_cache: dict | None):
+    """The one batch → row-group accumulator behind every encode frontend
+    (row-group cut analog of writer/writer.go:242-257). `batches` yields
+    (batch, keep): keep is None or a boolean mask of the rows deletes
+    leave. Kept rows buffer until their bytes reach the target, then
+    encode as one group; a batch above the target is cut (before masking)
+    into max(1, rows*target/nbytes)-row slices, each its own group.
+    Yields (row, start): `start` is the group's first source row, deleted
+    rows counted, so it strictly increases. All-deleted groups are
+    skipped."""
+    buf: list[pa.RecordBatch] = []
+    buf_bytes = buf_start = src = 0
+
+    def flush():
+        nonlocal buf, buf_bytes
+        tbl = pa.Table.from_batches(buf)
+        buf, buf_bytes = [], 0
+        if tbl.num_rows:
+            yield _encode_rowgroup(tbl, specs, sel_cache, page_bytes), buf_start
+
+    for b, keep in batches:
+        n = b.num_rows
+        alone = n and b.nbytes > target_raw_bytes
+        step = max(1, int(n * target_raw_bytes / b.nbytes)) if alone else n
+        for o in range(0, n, step) if alone else (0,):
+            part = b.slice(o, step) if alone else b
+            if keep is not None:
+                part = part.filter(pa.array(keep[o:o + part.num_rows]))
+            if alone and buf:
+                yield from flush()
+            if not buf:
+                buf_start = src + o
+            buf.append(part)
+            buf_bytes += part.nbytes
+            if alone or buf_bytes >= target_raw_bytes:
+                yield from flush()
+        src += n
+    if buf:
+        yield from flush()
+
+
 def make_encoder(specs: list[ColumnSpec],
                  target_raw_bytes: int = DEFAULT_TARGET_RAW_BYTES,
                  page_bytes: int = DEFAULT_PAGE_BYTES):
@@ -539,46 +582,16 @@ def make_encoder(specs: list[ColumnSpec],
 
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
-        buf: list[pa.RecordBatch] = []
-        buf_bytes = 0
-        rg_idx = 0
-        sel_cache = selector.WORKER_MEMO  # per-WORKER memo (reused tasks)
-
-        def flush():
-            nonlocal buf, buf_bytes, rg_idx
-            if not buf:
-                return None
-            tbl = pa.Table.from_batches(buf)
-            row = _encode_rowgroup(tbl, specs, sel_cache, page_bytes)
+        groups = _encode_batches(((b, None) for b in batches), specs,
+                                 target_raw_bytes, page_bytes,
+                                 selector.WORKER_MEMO)  # per-WORKER memo
+        for rg_idx, (row, _) in enumerate(groups):
             # (rg_part, rg_idx) is a total order over row groups whenever the
             # input partitioning is ordered (e.g. repartitionByRange + sort):
             # the SkipRows/ReadByNumber cursor analog (reader/reader.go:179-253)
             row["rg_part"] = part_id
             row["rg_idx"] = rg_idx
-            rg_idx += 1
-            buf = []
-            buf_bytes = 0
-            return pa.RecordBatch.from_pylist([row], schema=out_schema)
-
-        for b in batches:
-            # split oversized incoming batches (zero-copy slices) so row
-            # groups honor target_raw_bytes even when Arrow hands us one
-            # giant batch — rowgroup sizing analog of writer/writer.go:242-257
-            if b.num_rows and b.nbytes > target_raw_bytes:
-                rows_per = max(1, int(b.num_rows * target_raw_bytes / b.nbytes))
-                parts = [b.slice(o, rows_per) for o in range(0, b.num_rows, rows_per)]
-            else:
-                parts = [b]
-            for p in parts:
-                buf.append(p)
-                buf_bytes += p.nbytes
-                if buf_bytes >= target_raw_bytes:
-                    out = flush()
-                    if out is not None:
-                        yield out
-        out = flush()
-        if out is not None:
-            yield out
+            yield pa.RecordBatch.from_pylist([row], schema=out_schema)
 
     return encode_fn, out_schema
 
@@ -614,6 +627,31 @@ def _blob_views(tbl: pa.Table, name: str) -> list[np.ndarray]:
     return [data[offs[i]:offs[i + 1]] for i in range(len(col))]
 
 
+def _decode_groups(views: list[list[np.ndarray]], specs: list[ColumnSpec],
+                   out_schema: pa.Schema, groups, runs=None):
+    """The one chunk → Arrow assembly behind every Spark decode frontend:
+    decode row groups `groups` (indexes into each column's blob views,
+    `views[j]` for `specs[j]`) into ONE RecordBatch of `out_schema`.
+    `runs[k]` says what group `groups[k]` contributes: None → the whole
+    chunk (decode_chunk); a list of (row_lo, row_hi) runs → exactly those
+    rows, each chunk parsed once for all runs (decode_chunk_rows_multi);
+    [] → nothing. Returns None when no group contributes."""
+    cols: list[list[pa.Array]] = [[] for _ in specs]
+    for k, i in enumerate(groups):
+        r = None if runs is None else runs[k]
+        if r is not None and not r:
+            continue
+        for j, spec in enumerate(specs):
+            cds = ([decode_chunk(views[j][i])] if r is None
+                   else decode_chunk_rows_multi(views[j][i], r)[0])
+            cols[j].extend(_rebuild(cd, spec) for cd in cds)
+    if not cols or not cols[0]:
+        return None
+    return pa.RecordBatch.from_arrays(
+        [a[0] if len(a) == 1 else pa.concat_arrays(a) for a in cols],
+        schema=out_schema)
+
+
 def make_decoder(specs: list[ColumnSpec], out_schema: pa.Schema):
     """mapInArrow decode: zero-copy views into the scanned blob buffers,
     multiple row groups decoded per yielded RecordBatch (amortizes the
@@ -631,12 +669,8 @@ def make_decoder(specs: list[ColumnSpec], out_schema: pa.Schema):
                 acc += sum(len(v[i]) for v in views)
                 if acc < DECODE_BATCH_BYTES and i < n - 1:
                     continue
-                cols = []
-                for j, spec in enumerate(specs):
-                    arrs = [_rebuild(decode_chunk(views[j][x]), spec)
-                            for x in range(start, i + 1)]
-                    cols.append(arrs[0] if len(arrs) == 1 else pa.concat_arrays(arrs))
-                yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+                yield _decode_groups(views, specs, out_schema,
+                                     range(start, i + 1))
                 start, acc = i + 1, 0
 
     return decode_fn
@@ -794,7 +828,7 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             n_rows_col = tbl.column("n_rows").to_pylist()
             # one row group per input row; interior groups decode fully,
             # boundary groups decode ONLY the sub-chunk pages overlapping
-            # the requested rows (decode_chunk_rows)
+            # the requested rows
             for i in range(tbl.num_rows):
                 key = (parts[i] << 32) | idxs[i]
                 exp = expect_n.get(key)
@@ -813,14 +847,9 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                                          n_rows_col[i], exp))
                 ent = bounds.get(key)
                 skip, take = ent[:2] if ent is not None else (0, n_rows_col[i])
-                if skip == 0 and take == n_rows_col[i]:
-                    cols = [_rebuild(decode_chunk(views[j][i]), spec)
-                            for j, spec in enumerate(specs)]
-                else:
-                    cols = [_rebuild(decode_chunk_rows(views[j][i], skip,
-                                                       skip + take)[0], spec)
-                            for j, spec in enumerate(specs)]
-                yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+                whole = skip == 0 and take == n_rows_col[i]
+                yield _decode_groups(views, specs, out_schema, [i],
+                                     [None if whole else [(skip, skip + take)]])
 
     return pruned.mapInArrow(decode_slice, from_arrow_schema(out_schema))
 
@@ -1064,13 +1093,11 @@ def decode_filtered(enc_df, spec: ColumnSpec, out_schema: pa.Schema,
     drop on manifest min/max BEFORE any scan (prune_rowgroups /
     prune_rowgroups_str), then inside each surviving blob only the
     sub-chunk PAGES whose min/max overlap are decoded
-    (chunk.decode_chunk_filter — the reference's ColumnIndex-driven page
+    (chunk.page_filter_row_runs — the reference's ColumnIndex-driven page
     skip, reader/columnbuffer.go:158-230 + writer/writer.go:418-481).
     String columns prune on lexicographic stats + covering 8-byte page
     prefix bounds (lo/hi as str/bytes). Returns candidate rows; callers
     reapply the exact predicate."""
-    from .chunk import decode_chunk_filter
-
     if spec.phys == codecs.PHYS_BYTE_ARRAY:
         pruned = prune_rowgroups_str(enc_df, spec.name, lo, hi) \
             .select(f"{spec.name}_blob")
@@ -1084,10 +1111,11 @@ def decode_filtered(enc_df, spec: ColumnSpec, out_schema: pa.Schema,
             if tbl.num_rows == 0:
                 continue
             views = _blob_views(tbl, f"{spec.name}_blob")
-            arrs = [_rebuild(decode_chunk_filter(v, lo, hi)[0], spec)
-                    for v in views]
-            arr = arrs[0] if len(arrs) == 1 else pa.concat_arrays(arrs)
-            yield pa.RecordBatch.from_arrays([arr], schema=out_schema)
+            rb = _decode_groups(
+                [views], [spec], out_schema, range(len(views)),
+                [page_filter_row_runs(v, lo, hi) for v in views])
+            if rb is not None:
+                yield rb
 
     return pruned.mapInArrow(fn, from_arrow_schema(out_schema))
 
@@ -1232,8 +1260,6 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     path for free; unclustered layouts keep the stats-scan prune."""
     from pyspark.sql import functions as F
 
-    from .chunk import decode_chunk_rows_multi, page_filter_row_runs
-
     spec_by = {s.name: s for s in specs}
     if page_column is not None and page_column not in spec_by:
         raise KeyError(
@@ -1335,23 +1361,14 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                 continue
             views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
             dviews = (_blob_views(tbl, f"{drv}_blob") if drv else None)
-            cols = [[] for _ in specs]
-            for i in range(tbl.num_rows):
-                runs = (page_filter_row_runs(dviews[i], dlo, dhi)
-                        if dviews is not None else None)
-                if runs is None:
-                    runs = [(0, 1 << 31)]  # clamped to the chunk's n_rows
-                if not runs:
-                    continue
-                # each column's chunk parses ONCE for all runs
-                for j, spec in enumerate(specs):
-                    cds, _ = decode_chunk_rows_multi(views[j][i], runs)
-                    cols[j].extend(_rebuild(cd, spec) for cd in cds)
-            if not cols[0]:
-                continue
-            arrs = [a[0] if len(a) == 1 else pa.concat_arrays(a)
-                    for a in cols]
-            yield pa.RecordBatch.from_arrays(arrs, schema=out_schema)
+            # None (no driving column / no usable page directory) decodes
+            # the whole chunk; [] (no page can match) skips the group
+            runs = [page_filter_row_runs(v, dlo, dhi) for v in dviews] \
+                if dviews is not None else None
+            rb = _decode_groups(views, specs, out_schema,
+                                range(tbl.num_rows), runs)
+            if rb is not None:
+                yield rb
 
     dec = sel.mapInArrow(fn, from_arrow_schema(out_schema))
     # tier 3: exact residual predicate
@@ -1388,7 +1405,7 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     from pyspark.sql import functions as F
 
     from . import bloom as _bloom
-    from .chunk import decode_chunk_rows_multi, page_filter_row_runs_multi
+    from .chunk import page_filter_row_runs_multi
 
     spec_by = {s.name: s for s in specs}
     if key_column not in spec_by:
@@ -1430,35 +1447,28 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                 continue
             views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
             blooms = tbl.column("__key_bloom").to_pylist()
-            cols = [[] for _ in specs]
+            runs = []
             for i in range(tbl.num_rows):
                 bb = None if blooms[i] is None else bytes(blooms[i])
                 live = [(v, pageable) for v, hs, pageable in probes
                         if bb is None or hs is None
                         or bool(_bloom.might_contain(bb, hs).any())]
                 if not live:
-                    continue
-                if any(not pageable for _, pageable in live):
+                    runs.append([])
+                elif any(not pageable for _, pageable in live):
                     # an un-comparable probe type can't page-prune — the
-                    # whole chunk is the run
-                    runs = [(0, 1 << 31)]
+                    # whole chunk decodes
+                    runs.append(None)
                 else:
                     # ONE parse (incl. decompression) for all k probes —
-                    # the per-value form re-parsed the key chunk k times
-                    runs = page_filter_row_runs_multi(
-                        views[key_i][i], [v for v, _ in live])
-                    if runs is None:  # no usable page directory
-                        runs = [(0, 1 << 31)]
-                if not runs:
-                    continue
-                for j in range(len(specs)):
-                    cds, _ = decode_chunk_rows_multi(views[j][i], runs)
-                    cols[j].extend(_rebuild(cd, specs[j]) for cd in cds)
-            if not cols[0]:
-                continue
-            arrs = [a[0] if len(a) == 1 else pa.concat_arrays(a)
-                    for a in cols]
-            yield pa.RecordBatch.from_arrays(arrs, schema=out_schema)
+                    # the per-value form re-parsed the key chunk k times;
+                    # None (no usable page directory) decodes it whole
+                    runs.append(page_filter_row_runs_multi(
+                        views[key_i][i], [v for v, _ in live]))
+            rb = _decode_groups(views, specs, out_schema,
+                                range(tbl.num_rows), runs)
+            if rb is not None:
+                yield rb
 
     dec = sel.mapInArrow(fn, from_arrow_schema(out_schema))
     # tier 4: exact residual

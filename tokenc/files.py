@@ -26,13 +26,18 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-from .engine import (INVARIANT_SCHEMA, _blob_views, _encode_rowgroup,
-                     _invariant_rows, _rebuild, encoded_schema,
+from .engine import (DEFAULT_PAGE_BYTES, DEFAULT_TARGET_RAW_BYTES,
+                     INVARIANT_SCHEMA, _blob_views, _decode_groups,
+                     _encode_batches, _invariant_rows, encoded_schema,
                      from_arrow_schema)
-from .chunk import decode_chunk
 from .schema import ColumnSpec
 
 DEFAULT_BATCH_ROWS = 8192
+# encoded row groups read per pyarrow batch: decoded-rows batches are
+# yielded per DECODE_GROUPS groups; the invariants path reduces each
+# batch to tiny rows, so it reads more groups at a time
+DECODE_GROUPS = 4
+INVARIANT_GROUPS = 8
 
 
 def resolve_fs(path: str, filesystem=None):
@@ -266,7 +271,7 @@ def _load_delete_positions(path: str, fs, delete_files, key: str = ""):
 
 
 def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
-                 target_raw_bytes: int = 32 << 20,
+                 target_raw_bytes: int = DEFAULT_TARGET_RAW_BYTES,
                  tasks_per_file: int = 1,
                  n_tasks: int | None = None,
                  filesystem=None,
@@ -391,68 +396,49 @@ def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
                                      if w in spec_by else eq_type[w])
                             if fn is None else
                             rb.column(rb.schema.names.index(fn)))
-                    rb2 = pa.RecordBatch.from_arrays(arrays, names=wanted)
-                    if eq_tables:
-                        keep = _eq_keep_mask(rb2, eq_tables)
-                        if not keep.all():
-                            rb2 = rb2.filter(pa.array(keep))
-                    return rb2.select(cols) if wanted != cols else rb2
-                # rg_idx = absolute starting row offset of the flush in the
-                # file: a total file-position order no matter how parquet
-                # row groups and flush boundaries interleave. With deletes
-                # it stays the PRE-delete offset (offsets remain strictly
-                # increasing, which is all the ordering contract needs).
+                    return pa.RecordBatch.from_arrays(arrays, names=wanted)
+
                 row_off = sum(pf.metadata.row_group(g).num_rows
                               for g in range(lo_rg))
-                file_pos = row_off  # pre-delete read cursor
-                buf: list[pa.RecordBatch] = []
-                buf_bytes = 0
-                buf_src_rows = 0
 
-                def flush():
-                    nonlocal buf, buf_bytes, buf_src_rows, row_off
-                    if not buf:
-                        return None
-                    tbl = pa.Table.from_batches(buf)
-                    if row_off > 0x7FFFFFFF:
+                def source():
+                    """(batch, keep-mask) per parquet batch: position and
+                    equality deletes become ONE mask, applied by the
+                    accumulator after any oversized-batch cut."""
+                    import numpy as np
+
+                    file_pos = row_off  # pre-delete read cursor
+                    for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
+                                              row_groups=rgs,
+                                              columns=read_cols):
+                        n_src = rb.num_rows
+                        keep = np.ones(n_src, dtype=bool)
+                        if dels is not None and len(dels):
+                            lo = np.searchsorted(dels, file_pos)
+                            hi = np.searchsorted(dels, file_pos + n_src)
+                            keep[dels[lo:hi] - file_pos] = False
+                        file_pos += n_src
+                        if remap:
+                            rb = remap_batch(rb)
+                            if eq_tables:
+                                keep &= _eq_keep_mask(rb, eq_tables)
+                            if wanted != cols:
+                                rb = rb.select(cols)
+                        yield rb, (None if keep.all() else keep)
+
+                # rg_idx = absolute starting row offset of the group in the
+                # file: a total file-position order no matter how parquet
+                # row groups and group boundaries interleave. With deletes
+                # it stays the PRE-delete offset (offsets remain strictly
+                # increasing, which is all the ordering contract needs).
+                for row, start in _encode_batches(
+                        source(), specs, target_raw_bytes, DEFAULT_PAGE_BYTES,
+                        sel_cache):
+                    if row_off + start > 0x7FFFFFFF:
                         raise ValueError("file exceeds 2^31 rows; rg_idx overflow")
-                    start = row_off
-                    row_off += buf_src_rows
-                    buf = []
-                    buf_bytes = 0
-                    buf_src_rows = 0
-                    if tbl.num_rows == 0:  # every buffered row deleted
-                        return None
-                    row = _encode_rowgroup(tbl, specs, sel_cache)
                     row["rg_part"] = unit["file_idx"]
-                    row["rg_idx"] = start
-                    return pa.RecordBatch.from_pylist([row], schema=out_schema)
-
-                for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
-                                          row_groups=rgs, columns=read_cols):
-                    n_src = rb.num_rows
-                    if dels is not None and len(dels):
-                        import numpy as np
-
-                        lo = np.searchsorted(dels, file_pos)
-                        hi = np.searchsorted(dels, file_pos + n_src)
-                        if hi > lo:
-                            mask = np.ones(n_src, dtype=bool)
-                            mask[dels[lo:hi] - file_pos] = False
-                            rb = rb.filter(pa.array(mask))
-                    file_pos += n_src
-                    if remap:
-                        rb = remap_batch(rb)
-                    buf.append(rb)
-                    buf_bytes += rb.nbytes
-                    buf_src_rows += n_src
-                    if buf_bytes >= target_raw_bytes:
-                        out = flush()
-                        if out is not None:
-                            yield out
-                out = flush()
-                if out is not None:
-                    yield out
+                    row["rg_idx"] = row_off + start
+                    yield pa.RecordBatch.from_pylist([row], schema=out_schema)
 
     return fdf.mapInArrow(encode_fn, from_arrow_schema(out_schema))
 
@@ -474,8 +460,8 @@ def _files_df(spark, enc_path: str | list[str], n_tasks: int | None = None,
 
 
 def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
-                 out_schema, *, batch_groups: int = 4,
-                 n_tasks: int | None = None, filesystem=None):
+                 out_schema, *, n_tasks: int | None = None,
+                 filesystem=None):
     """File-granular decode: tasks read the encoded blob parquet directly
     with pyarrow — the read mirror of `encode_files`. The JVM never scans
     or ships the blob bytes; only the DECODED rows cross the Python→JVM
@@ -486,10 +472,11 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
     # Spark has no FixedSizeBinary type: FLBA columns surface as plain
     # binary at the DataFrame boundary (exactly Spark's own FLBA-parquet
     # behavior); Arrow-native consumers use tokenc.local for the exact type
-    out_schema = pa.schema([
+    spark_schema = pa.schema([
         pa.field(f.name, pa.binary(), f.nullable)
         if pa.types.is_fixed_size_binary(f.type) else f
         for f in out_schema])
+    has_flba = spark_schema != out_schema
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -497,27 +484,20 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
         for b in batches:
             for unit in b.to_pylist():
                 pf = pq.ParquetFile(unit["path"], filesystem=fs)
-                for rb in pf.iter_batches(batch_size=batch_groups,
+                for rb in pf.iter_batches(batch_size=DECODE_GROUPS,
                                           columns=blob_cols):
                     tbl = pa.Table.from_batches([rb])
                     views = [_blob_views(tbl, c) for c in blob_cols]
-                    cols = []
-                    for j, spec in enumerate(specs):
-                        arrs = [_rebuild(decode_chunk(v), spec)
-                                for v in views[j]]
-                        arr = (arrs[0] if len(arrs) == 1
-                               else pa.concat_arrays(arrs))
-                        if pa.types.is_fixed_size_binary(arr.type):
-                            arr = arr.cast(pa.binary())
-                        cols.append(arr)
-                    yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+                    out = _decode_groups(views, specs, out_schema,
+                                         range(tbl.num_rows))
+                    if out is not None:
+                        yield out.cast(spark_schema) if has_flba else out
 
-    return fdf.mapInArrow(fn, from_arrow_schema(out_schema))
+    return fdf.mapInArrow(fn, from_arrow_schema(spark_schema))
 
 
 def decode_invariants_files(spark, enc_path: str | list[str],
                             specs: list[ColumnSpec], *,
-                            batch_groups: int = 8,
                             n_tasks: int | None = None, filesystem=None):
     """File-granular decode_invariants: full decode compute inside tasks
     reading the blob parquet with pyarrow; only tiny invariant rows cross
@@ -535,7 +515,7 @@ def decode_invariants_files(spark, enc_path: str | list[str],
             for unit in b.to_pylist():
                 pf = pq.ParquetFile(unit["path"], filesystem=fs)
                 rows = []
-                for rb in pf.iter_batches(batch_size=batch_groups,
+                for rb in pf.iter_batches(batch_size=INVARIANT_GROUPS,
                                           columns=blob_cols):
                     tbl = pa.Table.from_batches([rb])
                     views = [_blob_views(tbl, c) for c in blob_cols]

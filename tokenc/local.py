@@ -3,13 +3,16 @@
 The reference is first a LIBRARY — a single process writes and reads its own
 files (writer/writer.go:58-225, reader/reader.go:41-379). This module is
 that mode for tokenc: a pyarrow Table in, an encoded directory out, and
-back — bit-identical with what the Spark jobs produce and read, because both
-go through the same `_encode_rowgroup`/`decode_chunk` kernels and the same
-Parquet blob container. Nested columns (struct/map/array at any depth) go
-through the same shred decomposition as the Spark path (shred.py), executed
-on Arrow arrays directly (marshal/unmarshal analog, marshal/marshal.go:
-227-343). Useful for tools, tests, and small-data callers; the Spark paths
-(engine.py, files.py) are the distributed mode.
+back. The write cuts row groups with the Spark encoders' accumulator
+(engine._encode_batches, the table as one batch), so a table that reaches
+encode_df or encode_files as one batch gets the same row groups; the read
+uses the decode_chunk/_rebuild kernels of engine._decode_groups and gives
+the same rows (tests/test_core.py checks both). Nested columns
+(struct/map/array at any depth) go through the same shred decomposition
+as the Spark path (shred.py), executed on Arrow arrays directly
+(marshal/unmarshal analog, marshal/marshal.go:227-343). Useful for tools,
+tests, and small-data callers; the Spark paths (engine.py, files.py) are
+the distributed mode.
 """
 
 from __future__ import annotations
@@ -20,7 +23,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .engine import _encode_rowgroup, _rebuild, encoded_schema, from_arrow_schema
+from .engine import (DEFAULT_PAGE_BYTES, DEFAULT_TARGET_RAW_BYTES,
+                     _encode_batches, _rebuild, encoded_schema,
+                     from_arrow_schema)
 from .chunk import decode_chunk
 from .schema import ColumnSpec, specs_from_arrow_schema
 
@@ -41,7 +46,8 @@ def write_table(table: pa.Table, out_dir: str, *,
                 specs: list[ColumnSpec] | None = None,
                 codec_overrides: dict[str, str] | None = None,
                 compression: dict[str, str] | str | None = None,
-                target_raw_bytes: int = 32 << 20) -> list[ColumnSpec]:
+                target_raw_bytes: int = DEFAULT_TARGET_RAW_BYTES
+                ) -> list[ColumnSpec]:
     """Encode a pyarrow Table into `out_dir` (one parquet of blob rows).
 
     Composite columns are shredded to flat leaves first (same decomposition
@@ -66,20 +72,16 @@ def write_table(table: pa.Table, out_dir: str, *,
                                         compression)
     with open(os.path.join(out_dir, FLAT_SCHEMA_FILE), "wb") as f:
         f.write(table.schema.serialize().to_pybytes())
-    out_schema = encoded_schema(specs)
     rows = []
-    n = table.num_rows
-    rows_per = max(1, int(n * target_raw_bytes / max(table.nbytes, 1))) if n else n
-    rg_idx = 0
-    sel_cache: dict = {}
-    for lo in range(0, n, rows_per or 1):
-        part = table.slice(lo, rows_per)
-        row = _encode_rowgroup(part.combine_chunks(), specs, sel_cache)
+    # the whole table is ONE batch: it is cut into target-sized slices,
+    # each its own row group (the Spark encoders' sizing rule)
+    batches = ((b, None) for b in table.combine_chunks().to_batches())
+    for rg_idx, (row, _) in enumerate(_encode_batches(
+            batches, specs, target_raw_bytes, DEFAULT_PAGE_BYTES, {})):
         row["rg_part"] = 0
         row["rg_idx"] = rg_idx
-        rg_idx += 1
         rows.append(row)
-    enc = pa.Table.from_pylist(rows, schema=out_schema)
+    enc = pa.Table.from_pylist(rows, schema=encoded_schema(specs))
     pq.write_table(enc, os.path.join(out_dir, "part-00000.parquet"),
                    compression="zstd")
     return specs

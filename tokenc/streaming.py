@@ -13,13 +13,14 @@ from __future__ import annotations
 
 import os
 
-from .engine import encode_df
+from .engine import DEFAULT_TARGET_RAW_BYTES, encode_df
 from .manifest import manifest_df
 from .schema import ColumnSpec
 
 
 def streaming_encode(stream_df, specs: list[ColumnSpec], out_root: str, *,
-                     checkpoint: str, target_raw_bytes: int = 32 << 20,
+                     checkpoint: str,
+                     target_raw_bytes: int = DEFAULT_TARGET_RAW_BYTES,
                      trigger_once: bool = True):
     """readStream DF (tokens schema) → encoded row-group appends.
 
