@@ -333,23 +333,31 @@ def q_stats_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stats-pruned decode: row groups outside [lo, hi] on l_orderkey are
-    skipped before decode; exact filter reapplied after — bit-exact vs SQL."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
+    """Predicate pruning at row-group AND page granularity through the one
+    predicate path (engine.scan; reference ColumnIndex + skip-without-
+    decode, writer/writer.go:418-481 + reader/columnbuffer.go:158-230):
+    row groups outside [lo, hi] on l_orderkey drop on manifest min/max
+    (asserted here via engine.prune), then inside each surviving blob only
+    the sub-chunk pages whose exact min/max overlap are decoded; the
+    exact filter is reapplied after — bit-exact vs SQL."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from tokenc.engine import decode_df, encode_df, prune_rowgroups
+    from tokenc.engine import encode_df, prune, scan
     from tokenc.schema import specs_from_arrow_schema
 
-    df = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_orderkey")
-    arrow_schema = to_arrow_schema(df.schema)
-    specs = specs_from_arrow_schema(arrow_schema)
-    enc = encode_df(df, specs, target_raw_bytes=256 << 10)  # many row groups
-    lo, hi = 1000, 5000
-    pruned = prune_rowgroups(enc, "l_orderkey", lo, hi)
-    dec = decode_df(pruned, specs, arrow_schema)
-    return dec.where(F.col("l_orderkey").between(lo, hi))
+    src = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+           .select("l_orderkey")
+           .repartitionByRange(4, "l_orderkey")
+           .sortWithinPartitions("l_orderkey"))
+    schema = to_arrow_schema(src.schema)
+    specs = specs_from_arrow_schema(schema)
+    enc = encode_df(src, specs, target_raw_bytes=1 << 20,
+                    page_bytes=8 << 10).cache()
+    total = enc.count()
+    flt = [("l_orderkey", "between", (2000, 3500))]
+    assert prune(enc, specs, flt).count() < total, \
+        "min/max pruning dropped no row group"
+    return scan(enc, specs, schema, flt)
 
 
 def _nested_roundtrip(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -482,30 +490,6 @@ def q_rt_strlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dec.select("doc_id", F.posexplode("words").alias("pos", "word"))
 
 
-def q_pruned_scan_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Predicate pruning at PAGE granularity (reference ColumnIndex +
-    skip-without-decode, writer/writer.go:418-481 +
-    reader/columnbuffer.go:158-230): row groups prune on manifest min/max,
-    then inside each surviving blob only sub-chunk pages whose exact
-    min/max overlap [lo, hi] are decoded; exact filter reapplied after."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from tokenc.engine import decode_filtered, encode_df
-    from tokenc.schema import specs_from_arrow_schema
-
-    src = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-           .select("l_orderkey")
-           .repartitionByRange(4, "l_orderkey")
-           .sortWithinPartitions("l_orderkey"))
-    schema = to_arrow_schema(src.schema)
-    specs = specs_from_arrow_schema(schema)
-    enc = encode_df(src, specs, target_raw_bytes=1 << 20, page_bytes=8 << 10)
-    lo, hi = 2000, 3500
-    cand = decode_filtered(enc, specs[0], schema, lo, hi)
-    return cand.where(F.col("l_orderkey").between(lo, hi))
-
-
 def q_rt_tslist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Logical-typed elements under a repeated group (reference
     schema/schemahandler.go:297-335): array<timestamp>, array<date>, and
@@ -627,8 +611,9 @@ def q_pruned_scan_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
       whose bloom proves the key absent, before any blob decode.
       Upgrade-over-reference (parquet-go has no bloom filters); structure
       from the public parquet-format SBBF.
-    * src='dict' — dictionary-distinct pruning (prune_rowgroups_match
-      over ColumnSpec.distinct): orders clustered by o_orderpriority, the
+    * src='dict' — dictionary-distinct pruning (engine.prune with a
+      'match' conjunct over ColumnSpec.distinct): orders clustered by
+      o_orderpriority, the
       manifest records each chunk's DISTINCT list (the dictionary-page
       pruning analog — reference dictionaries, layout/dictpage.go:74-152
       — consulted at METADATA scale), and a LIKE pattern drops row groups
@@ -640,8 +625,7 @@ def q_pruned_scan_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from tokenc.engine import (decode_df, encode_df, prune_rowgroups_eq,
-                               prune_rowgroups_match)
+    from tokenc.engine import decode_df, encode_df, prune, prune_rowgroups_eq
     from tokenc.schema import specs_from_arrow_schema
 
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -668,7 +652,7 @@ def q_pruned_scan_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_enc = encode_df(orders, o_specs, target_raw_bytes=64 << 10).cache()
     o_total = o_enc.count()
     pred = lambda x: x.like("1-%") | x.like("2-%")  # noqa: E731
-    o_kept = prune_rowgroups_match(o_enc, "o_orderpriority", pred)
+    o_kept = prune(o_enc, o_specs, [("o_orderpriority", "match", pred)])
     assert o_kept.count() < o_total, "distinct pruning dropped no row group"
     o_dec = decode_df(o_kept, o_specs, o_schema)
     dict_half = (o_dec.where(F.col("o_orderpriority").like("1-%")
@@ -788,19 +772,19 @@ def q_sorted_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pruned_scan_str(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STRING range-predicate pruning at both granularities: row groups
-    drop on lexicographic manifest min/max (engine.prune_rowgroups_str),
-    then inside surviving blobs only the pages whose covering 8-byte
-    prefix bounds overlap are decoded (chunk.page_filter_row_runs — the
-    reference ColumnIndex stores byte-array min/max too,
-    writer/writer.go:418-481; truncated bounds like Iceberg truncate(L)
-    can only widen, so pruning stays sound). Keys are range-clustered so
-    stats are selective; the exact predicate is reapplied after decode."""
+    """STRING range-predicate pruning at both granularities through
+    engine.scan: row groups drop on lexicographic manifest min/max
+    (asserted here via engine.prune), then inside surviving blobs only
+    the pages whose covering 8-byte prefix bounds overlap are decoded
+    (chunk.page_filter_row_runs — the reference ColumnIndex stores
+    byte-array min/max too, writer/writer.go:418-481; truncated bounds
+    like Iceberg truncate(L) can only widen, so pruning stays sound).
+    Keys are range-clustered so stats are selective; the exact predicate
+    is reapplied after decode."""
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from tokenc.engine import (decode_filtered, encode_df,
-                               prune_rowgroups_str)
+    from tokenc.engine import encode_df, prune, scan
     from tokenc.schema import specs_from_arrow_schema
 
     src = (spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -811,12 +795,10 @@ def q_pruned_scan_str(spark: SparkSession, sf_dir: str) -> DataFrame:
     specs = specs_from_arrow_schema(arrow_schema)
     enc = encode_df(src, specs, target_raw_bytes=64 << 10).cache()
     total = enc.count()
-    lo, hi = "doc00000100", "doc00000299"
-    assert prune_rowgroups_str(enc, "key", lo, hi).count() < total, \
+    flt = [("key", "between", ("doc00000100", "doc00000299"))]
+    assert prune(enc, specs, flt).count() < total, \
         "string stats pruning dropped no row group"
-    dec = decode_filtered(enc, specs[0], arrow_schema, lo, hi)
-    return (dec.where(F.col("key").between(lo, hi))
-            .orderBy("key").select("key"))
+    return scan(enc, specs, arrow_schema, flt).orderBy("key").select("key")
 
 
 def q_verify_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1157,7 +1139,7 @@ def q_iceberg_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     then planned with a row_filter — files whose bounds can't match are
     dropped on the driver from a few KB of metadata, before any data byte
     is read (the 10^12-sequence planning move; engine-side analog
-    tokenc.engine.prune_rowgroups, reference footer-stats pruning
+    tokenc.engine.prune, reference footer-stats pruning
     writer/writer.go:418-481 + reader/columnbuffer.go:158-230). Pruning is
     may-match/file-granular, so the exact predicate re-applies on decoded
     rows; the oracle checks no matching row was lost to pruning."""
@@ -1416,6 +1398,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # rt_strings_codecs, 2 decimals → rt_decimal, 3 sim → sim_search) keep
     # every operator family inside the reported window. Families that went
     # unreported in round 3 (sim/mm/streaming) sit early as insurance.
+    # pruned_scan absorbed pruned_scan_pages once both became the same
+    # scan() call; tests/test_contracts.py holds the count.
     return {
         "rt_tokens_agg": q_rt_tokens_agg,
         "rt_tokens_explode": q_rt_tokens_explode,
@@ -1458,7 +1442,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "projected_decode": q_projected_decode,
         "stats_minmax": q_stats_minmax,
         "pruned_scan": q_pruned_scan,
-        "pruned_scan_pages": q_pruned_scan_pages,
         "selector_picks": q_selector_picks,
         "dedup_exact": q_dedup_exact,
         "dedup_minhash": q_dedup_minhash,
@@ -1719,8 +1702,7 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL
             SELECT 'l_quantity', count(l_quantity), 0, min(l_quantity), max(l_quantity) FROM lineitem
             ORDER BY "column" """,
-        "pruned_scan": "SELECT l_orderkey FROM lineitem WHERE l_orderkey BETWEEN 1000 AND 5000",
-        "pruned_scan_pages": "SELECT l_orderkey FROM lineitem WHERE l_orderkey BETWEEN 2000 AND 3500",
+        "pruned_scan": "SELECT l_orderkey FROM lineitem WHERE l_orderkey BETWEEN 2000 AND 3500",
         "selector_picks": """
             SELECT * FROM (VALUES
                 ('docid', 'dba'), ('flags', 'rle'), ('flts', 'bss'),

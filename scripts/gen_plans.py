@@ -8,6 +8,7 @@ from __future__ import annotations
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -27,7 +28,8 @@ def main():
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from tokenc.datagen import TOKENS_ARROW_SCHEMA, tokens_from_documents
-    from tokenc.engine import decode_df, encode_df, prune_rowgroups, read_range
+    from tokenc.engine import (decode_df, encode_df, prune, read_range,
+                               scan)
     from tokenc.files import encode_files
     from tokenc.schema import specs_from_arrow_schema
 
@@ -38,6 +40,7 @@ def main():
     specs = specs_from_arrow_schema(TOKENS_ARROW_SCHEMA)
 
     plans: dict[str, str] = {}
+    tmp = tempfile.mkdtemp(prefix="plans_")  # honours TMPDIR
 
     # 1. DataFrame-path encode over the documents-derived tokens table
     src = tokens_from_documents(spark, SF_DIR)
@@ -45,7 +48,7 @@ def main():
     plans["ENCODE (DataFrame path)"] = plan_of(enc)
 
     # materialize an encoded dir for the read-side plans
-    out = "/tmp/plans_enc"
+    out = f"{tmp}/enc"
     enc.write.mode("overwrite").parquet(out)
     enc_read = spark.read.parquet(out)
 
@@ -64,7 +67,8 @@ def main():
     plans["DECODE (2-column projection)"] = plan_of(dec2)
 
     # 4. stats pruning: metadata-only predicate
-    pruned = prune_rowgroups(enc_read, "n_tok", lo=100, hi=200).select("rg_id", "n_rows")
+    pruned = prune(enc_read, specs, [("n_tok", "between", (100, 200))]) \
+        .select("rg_id", "n_rows")
     plans["STATS PRUNE (metadata only)"] = plan_of(pruned)
 
     # 5. read_range: manifest-count pruning + sliced decode
@@ -85,15 +89,13 @@ def main():
     plans["DEDUP_EMBED (LSH bucket joins)"] = plan_of(
         embed_neardup(emb, threshold=0.4))
 
-    # 8. predicate-pruned decode: manifest min/max prune + page-level skip;
-    # plan shows the meta-struct filter before the blob scan, no Exchange
-    from tokenc.engine import decode_filtered
-
+    # 8. one-range scan: manifest min/max prune + page-level skip; plan
+    # shows the meta-struct filter before the blob scan, no Exchange
     nt_spec = next(s for s in specs if s.name == "n_tok")
-    df8 = decode_filtered(enc_read, nt_spec,
-                          to_arrow_schema(src.select("n_tok").schema),
-                          lo=100, hi=200)
-    plans["DECODE_FILTERED (stats + page pruning)"] = plan_of(df8)
+    df8 = scan(enc_read, [nt_spec],
+               to_arrow_schema(src.select("n_tok").schema),
+               [("n_tok", "between", (100, 200))])
+    plans["RANGE SCAN (stats + page pruning)"] = plan_of(df8)
 
     # 9. nested shred/unshred: shred is a pure projection (no Exchange, no
     # Python); deep unshred is one mapInArrow pass
@@ -132,33 +134,29 @@ def main():
     benc = encode_df(spark.read.parquet(f"{SF_DIR}/documents.parquet")
                      .select("doc_id", "n_chars"), bspecs,
                      target_raw_bytes=1 << 20)
-    benc.write.mode("overwrite").parquet("/tmp/plans_bloom")
+    benc.write.mode("overwrite").parquet(f"{tmp}/bloom")
     plans["BLOOM PRUNE (point lookup, metadata only)"] = plan_of(
-        prune_rowgroups_eq(spark.read.parquet("/tmp/plans_bloom"),
-                           "doc_id", 42))
+        prune_rowgroups_eq(spark.read.parquet(f"{tmp}/bloom"), "doc_id", 42))
 
-    # 12. dictionary-distinct prune: LIKE-predicate pruning as a pure JVM
-    # expression (from_json + exists) over the meta struct — no UDF, no
-    # blob column in the scan
-    from tokenc.engine import prune_rowgroups_match
-
+    # 12. dictionary-distinct prune: a 'match' conjunct (LIKE predicate)
+    # as a pure JVM expression (from_json + exists) over the meta struct —
+    # no UDF, no blob column in the scan
     dspecs = specs_from_arrow_schema(to_arrow_schema(
         spark.read.parquet(f"{SF_DIR}/documents.parquet")
         .select("doc_id", "source").schema), distinct_columns=["source"])
     denc = encode_df(spark.read.parquet(f"{SF_DIR}/documents.parquet")
                      .select("doc_id", "source"), dspecs,
                      target_raw_bytes=1 << 20)
-    denc.write.mode("overwrite").parquet("/tmp/plans_distinct")
+    denc.write.mode("overwrite").parquet(f"{tmp}/distinct")
     plans["DISTINCT PRUNE (LIKE predicate, metadata only)"] = plan_of(
-        prune_rowgroups_match(spark.read.parquet("/tmp/plans_distinct"),
-                              "source", lambda x: x.like("c%"))
+        prune(spark.read.parquet(f"{tmp}/distinct"), dspecs,
+              [("source", "match", lambda x: x.like("c%"))])
         .select("rg_id", "n_rows"))
 
     # 13. compound-predicate scan: per-conjunct metadata prunes (min/max +
-    # bloom + distinct) all evaluate on meta structs BEFORE the single
-    # blob-decoding mapInArrow; residual filter after
-    from tokenc.engine import scan as engine_scan
-
+    # distinct) all evaluate on meta structs BEFORE the single
+    # blob-decoding mapInArrow, which checks the '=' bloom per value;
+    # residual filter after
     mspecs = specs_from_arrow_schema(to_arrow_schema(
         spark.read.parquet(f"{SF_DIR}/documents.parquet")
         .select("doc_id", "n_chars", "source").schema),
@@ -166,10 +164,10 @@ def main():
     menc = encode_df(spark.read.parquet(f"{SF_DIR}/documents.parquet")
                      .select("doc_id", "n_chars", "source"), mspecs,
                      target_raw_bytes=1 << 20)
-    menc.write.mode("overwrite").parquet("/tmp/plans_multi")
+    menc.write.mode("overwrite").parquet(f"{tmp}/multi")
     plans["COMPOUND SCAN (conjunction: 3 metadata tiers + residual)"] = \
-        plan_of(engine_scan(
-            spark.read.parquet("/tmp/plans_multi"), mspecs,
+        plan_of(scan(
+            spark.read.parquet(f"{tmp}/multi"), mspecs,
             to_arrow_schema(spark.read.parquet(f"{SF_DIR}/documents.parquet")
                             .select("doc_id", "n_chars", "source").schema),
             [("doc_id", "between", (50, 250)), ("n_chars", "<=", 4000),
@@ -180,10 +178,9 @@ def main():
     # no per-row scan of row-group stats at all
     from tokenc.sorted_index import SortedKeyIndex
 
-    sidx = SortedKeyIndex.build(spark.read.parquet("/tmp/plans_multi"),
-                                "doc_id")
+    sidx = SortedKeyIndex.build(spark.read.parquet(f"{tmp}/multi"), "doc_id")
     plans["SORTED LOOKUP (binary-searched rg_id IN-list)"] = plan_of(
-        sidx.filter(spark.read.parquet("/tmp/plans_multi"), 100, 120)
+        sidx.filter(spark.read.parquet(f"{tmp}/multi"), 100, 120)
         .select("rg_id", "n_rows"))
 
     n_exchange = {k: v.count("Exchange") for k, v in plans.items()}
@@ -206,16 +203,16 @@ def main():
         "4. **Row-group pruning touches no blobs.** The stats-prune plan "
         "reads only `rg_id`, `n_rows` + the `n_tok_meta` struct "
         "(nested-schema pruning); blobs decode only after pruning. "
-        "read_range prunes on (rg_part, rg_idx, n_rows) the same way.",
+        "read_range prunes on (rg_part, rg_idx) the same way.",
         "5. **File-granular decode moves no data through the JVM**: its "
         "plan distributes only the file list; blob bytes are read with "
         "pyarrow inside tasks and only tiny invariant rows come back.",
         "6. **dedup_embed joins bucket-equal only** — LSH signatures are "
         "pure projections; the pair join keys on (tbl, bucket); no cross "
         "join appears anywhere.",
-        "7. **Predicate-pruned decode filters on the meta struct BEFORE "
-        "the blob scan** (decode_filtered): manifest min/max prune, then "
-        "page-level min/max skip inside the task — no Exchange.",
+        "7. **A range scan filters on the meta struct BEFORE the blob "
+        "scan** (scan with one range conjunct): manifest min/max prune, "
+        "then page-level min/max skip inside the task — no Exchange.",
         "8. **Nested shredding is a pure projection** — no Exchange, no "
         "Python stage; the deep unshred is exactly one mapInArrow pass.",
         "9. **Sequence packing shuffles arrays, not tokens.** Its "
@@ -235,10 +232,12 @@ def main():
         "`from_json` + `exists` over `source_meta.distinct_json` evaluate "
         "the LIKE pattern against each chunk's recorded distinct set; no "
         "UDF, no blob column in the scan's ReadSchema.",
-        "12. **Compound scan stays Exchange-free**: all three conjuncts' "
-        "metadata prunes (min/max + bloom + distinct) filter the manifest "
-        "scan before the single blob-decoding mapInArrow; the residual "
-        "predicate is an ordinary Spark Filter after it.",
+        "12. **Compound scan stays Exchange-free and has one Python "
+        "stage**: all three conjuncts' metadata prunes (min/max + "
+        "distinct) filter the manifest scan in one Filter before the "
+        "single blob-decoding mapInArrow, which also checks the `=` "
+        "conjunct's bloom per value (no pandas-UDF filter stage); the "
+        "residual predicate is an ordinary Spark Filter after it.",
         "13. **Sorted-key lookup plans as a tiny rg_id IN-list** — the "
         "binary search over row-group bounds happens on the driver's "
         "cached index (O(log n) probed bounds), so the cluster-side plan "
@@ -249,7 +248,8 @@ def main():
         "dedup_embed, the shuffles of the bucket-equality joins themselves "
         "(keyed by uniformly-distributed hashes). Every data-carrying "
         "encode/decode stage is Exchange-free. read_range's manifest "
-        "collect is a separate metadata-only job (rg_part/rg_idx/n_rows).\n",
+        "collect is a separate metadata-only job "
+        "(rg_part/rg_idx/n_rows/rg_id).\n",
     ]
     for name, p in plans.items():
         lines.append(f"\n=== {name} ===\n")

@@ -289,6 +289,46 @@ class TestDegenerateShapes:
         assert a.equals(b)
 
 
+class TestReadRangeDivergence:
+    def test_same_count_different_content_raises(self, spark, tmp_path):
+        """read_range checks each decoded group's content-hash rg_id
+        against the manifest pass: a group that re-materializes between
+        the two actions with the SAME row count but different rows must
+        raise, not decode a silently wrong slice."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from tokenc.engine import read_range
+
+        src = spark.range(4000, numPartitions=1).select(F.col("id").alias("k"))
+        schema = to_arrow_schema(src.schema)
+        specs = specs_from_arrow_schema(schema)
+        enc_a = encode_df(src, specs, target_raw_bytes=8 << 10)
+        a = enc_a.toArrow()
+        b = encode_df(src.select((F.col("k") + 1).alias("k")), specs,
+                      target_raw_bytes=8 << 10).toArrow()
+        assert a["n_rows"].to_pylist() == b["n_rows"].to_pylist()
+        assert a["rg_id"].to_pylist() != b["rg_id"].to_pylist()
+        assert a.num_rows > 2
+        version = tmp_path / "version"
+        version.write_text("a")
+        tables = {"a": a, "b": b}
+
+        def serve(batches):
+            # the encoded table as the file names it: A, or the swapped-in B
+            for _ in batches:
+                pass
+            yield from tables[version.read_text()].to_batches()
+
+        enc = spark.range(1, numPartitions=1).mapInArrow(serve, enc_a.schema)
+        out = read_range(enc, specs, schema, 100, 3000)
+        assert out.count() == 3000
+        out = read_range(enc, specs, schema, 100, 3000)
+        version.write_text("b")
+        with pytest.raises(Exception) as err:
+            out.collect()
+        assert "re-materialized" in str(err.value)
+
+
 class TestReadRangePredicateShape:
     def test_no_in_list_in_plan(self, spark):
         """read_range prunes with ONE range predicate on the composite key,
@@ -320,12 +360,12 @@ class TestReadRangePredicateShape:
 
 class TestDecodeFiltered:
     def test_page_pruned_predicate_scan(self, spark):
-        """decode_filtered: row groups prune on manifest stats, pages prune
-        on the page directory's exact min/max; exact filter on the
-        candidates equals the SQL answer."""
+        """A one-range scan: row groups prune on manifest stats, pages
+        prune on the page directory's exact min/max; the result equals
+        the SQL answer."""
         from pyspark.sql import functions as F
         from pyspark.sql.pandas.types import to_arrow_schema
-        from tokenc.engine import decode_filtered
+        from tokenc.engine import prune, scan
 
         src = (spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
                .select("l_orderkey")
@@ -334,16 +374,18 @@ class TestDecodeFiltered:
         schema = to_arrow_schema(src.schema)
         specs = specs_from_arrow_schema(schema)
         enc = encode_df(src, specs, target_raw_bytes=1 << 20,
-                        page_bytes=8 << 10)
+                        page_bytes=8 << 10).cache()
         lo, hi = 1000, 3000
-        cand = decode_filtered(enc, specs[0], schema, lo, hi)
-        got = (cand.where(F.col("l_orderkey").between(lo, hi))
+        flt = [("l_orderkey", "between", (lo, hi))]
+        assert prune(enc, specs, flt).count() < enc.count()
+        got = (scan(enc, specs, schema, flt)
                .groupBy().agg(F.count("*").alias("c"),
                               F.sum("l_orderkey").alias("s")).toPandas())
         want = (src.where(F.col("l_orderkey").between(lo, hi))
                 .groupBy().agg(F.count("*").alias("c"),
                                F.sum("l_orderkey").alias("s")).toPandas())
         assert got.equals(want)
+        enc.unpersist()
 
 
 class TestPruneKeepsStatlessChunks:
@@ -353,7 +395,7 @@ class TestPruneKeepsStatlessChunks:
         from pyspark.sql import functions as F
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from tokenc.engine import encode_df, prune_rowgroups
+        from tokenc.engine import encode_df, prune
 
         src = (spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
                .select("l_orderkey").limit(5000).repartition(4))
@@ -364,7 +406,8 @@ class TestPruneKeepsStatlessChunks:
         total = enc.count()
         assert total > 1
         # no stats → pruning must be a no-op, never a silent row loss
-        kept = prune_rowgroups(enc, "l_orderkey", lo=10, hi=20).count()
+        kept = prune(enc, specs, [("l_orderkey", "between", (10, 20))],
+                     auto_index=False).count()
         assert kept == total
 
     def test_omit_stats_string_chunks_never_pruned(self, spark):
@@ -372,7 +415,7 @@ class TestPruneKeepsStatlessChunks:
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from tokenc.engine import encode_df, prune_rowgroups_str
+        from tokenc.engine import encode_df, prune
 
         src = (spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
                .select("l_returnflag").limit(5000).repartition(4))
@@ -384,13 +427,14 @@ class TestPruneKeepsStatlessChunks:
         assert total > 1
         # 'z' > every real flag AND > the literal 'null' json — a wrong
         # missing-stat sentinel would prune everything here
-        kept = prune_rowgroups_str(enc, "l_returnflag", "z", "zz").count()
+        kept = prune(enc, specs, [("l_returnflag", "between", ("z", "zz"))],
+                     auto_index=False).count()
         assert kept == total
 
     def test_real_null_string_value_stats_still_prune(self, spark):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from tokenc.engine import encode_df, prune_rowgroups_str
+        from tokenc.engine import encode_df, prune
 
         # the string VALUE "null" must not read as a missing stat
         src = (spark.createDataFrame(
@@ -400,5 +444,6 @@ class TestPruneKeepsStatlessChunks:
         specs = specs_from_arrow_schema(schema)
         enc = encode_df(src, specs, target_raw_bytes=1 << 10).cache()
         total = enc.count()
-        kept = prune_rowgroups_str(enc, "s", "a", "b").count()
+        kept = prune(enc, specs, [("s", "between", ("a", "b"))],
+                     auto_index=False).count()
         assert kept < total  # stats exist and do prune

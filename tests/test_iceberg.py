@@ -147,6 +147,22 @@ class TestSingleValueSer:
         assert ser_value(1, "long") == b"\x01" + b"\x00" * 7
         assert ser_value(True, "boolean") == b"\x01"
 
+    def test_decimal_bounds_round_outward(self):
+        # a value with more fractional digits than the scale: the lower
+        # bound must not exceed it and the upper bound must not fall
+        # below it (half-even rounds 1.234 DOWN to 1.23, an unsound max)
+        from decimal import ROUND_CEILING, ROUND_FLOOR, Decimal
+
+        t = "decimal(10, 2)"
+        for v in (Decimal("1.234"), Decimal("1.235"), Decimal("-1.234"),
+                  Decimal("-1.236"), Decimal("0.001"), Decimal("7.50")):
+            lo = deser_value(ser_value(v, t, ROUND_FLOOR), t)
+            hi = deser_value(ser_value(v, t, ROUND_CEILING), t)
+            assert lo <= v <= hi, (v, lo, hi)
+            assert hi - lo <= Decimal("0.01")
+        assert deser_value(ser_value(Decimal("1.234"), t, ROUND_CEILING),
+                           t) == Decimal("1.24")
+
     def test_trunc_lower_is_prefix(self):
         assert _trunc_lower("a" * 40) == "a" * 16
         assert _trunc_lower(b"b" * 40) == b"b" * 16

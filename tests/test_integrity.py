@@ -139,11 +139,11 @@ class TestDistinctPruning:
     def test_isin_prunes_and_is_exact(self, spark, enc_orders):
         from pyspark.sql import functions as F
 
-        from tokenc.engine import decode_df, prune_rowgroups_isin
+        from tokenc.engine import decode_df, prune
 
         enc, specs, schema = enc_orders
         total = enc.count()
-        kept = prune_rowgroups_isin(enc, "pri", ["2-HIGH"])
+        kept = prune(enc, specs, [("pri", "in", ["2-HIGH"])])
         assert kept.count() < total
         dec = decode_df(kept, specs, schema).where(F.col("pri") == "2-HIGH")
         assert dec.count() == 800
@@ -151,21 +151,22 @@ class TestDistinctPruning:
     def test_match_like_prunes_and_is_exact(self, spark, enc_orders):
         from pyspark.sql import functions as F
 
-        from tokenc.engine import decode_df, prune_rowgroups_match
+        from tokenc.engine import decode_df, prune
 
         enc, specs, schema = enc_orders
         total = enc.count()
-        kept = prune_rowgroups_match(enc, "pri", lambda x: x.like("5-%"))
+        kept = prune(enc, specs, [("pri", "match", lambda x: x.like("5-%"))])
         assert kept.count() < total
         dec = decode_df(kept, specs, schema).where(F.col("pri").like("5-%"))
         assert dec.count() == 800
 
     def test_no_distinct_info_keeps_everything(self, spark, enc_orders):
-        from tokenc.engine import prune_rowgroups_isin
+        from tokenc.engine import prune
 
-        enc, _, _ = enc_orders
-        # ok has no recorded distinct set → nothing may be dropped
-        kept = prune_rowgroups_isin(enc, "ok", [123456789])
+        enc, specs, _ = enc_orders
+        # ok has no recorded distinct set → nothing may be dropped ('match'
+        # consults only the distinct set; an 'in' would also hit min/max)
+        kept = prune(enc, specs, [("ok", "match", lambda x: x == 123456789)])
         assert kept.count() == enc.count()
 
     def test_high_cardinality_opts_out(self, spark):

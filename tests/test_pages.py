@@ -7,8 +7,9 @@ import numpy as np
 import pytest
 
 from tokenc import codecs
-from tokenc.chunk import (F_PAGED, chunk_page_stats, decode_chunk,
-                          decode_chunk_rows, encode_chunk)
+from tokenc.chunk import (F_PAGED, ChunkData, chunk_page_stats, decode_chunk,
+                          decode_chunk_rows_multi, encode_chunk,
+                          page_filter_row_runs)
 
 N = 20_000
 PAGE = 32 << 10  # force many pages
@@ -103,7 +104,7 @@ class TestRowRangeDecode:
         kw = _mk_numeric(codecs.PLAIN, codecs.PHYS_INT32)
         paged, _ = encode_chunk(**kw, page_bytes=PAGE)
         full = decode_chunk(paged)
-        cd, decoded = decode_chunk_rows(paged, 9_750, 10_250)
+        (cd,), decoded = decode_chunk_rows_multi(paged, [(9_750, 10_250)])
         assert cd.n_rows == 500
         np.testing.assert_array_equal(
             np.asarray(cd.values), np.asarray(full.values)[9_750:10_250])
@@ -113,7 +114,7 @@ class TestRowRangeDecode:
         assert decoded < len(paged) / 2
         # unpaged chunk: full decode, exact same slice
         flat, _ = encode_chunk(**kw)
-        cd2, dec2 = decode_chunk_rows(flat, 9_750, 10_250)
+        (cd2,), dec2 = decode_chunk_rows_multi(flat, [(9_750, 10_250)])
         np.testing.assert_array_equal(np.asarray(cd2.values),
                                       np.asarray(cd.values))
         assert dec2 > decoded
@@ -128,7 +129,7 @@ class TestRowRangeDecode:
                   values=vals, validity=validity, list_lengths=lens_valid)
         paged, _ = encode_chunk(**kw, page_bytes=PAGE)
         lo, hi = 4_321, 5_000
-        cd, _ = decode_chunk_rows(paged, lo, hi)
+        (cd,), _ = decode_chunk_rows_multi(paged, [(lo, hi)])
         # reconstruct expected slice from the full decode
         full = decode_chunk(paged)
         per_row = np.zeros(N, np.int64)
@@ -150,7 +151,7 @@ class TestRowRangeDecode:
         paged, _ = encode_chunk(phys=codecs.PHYS_BYTE_ARRAY, codec=codecs.PLAIN,
                                 n_rows=N, ba_data=data, ba_offsets=offs,
                                 page_bytes=PAGE)
-        cd, decoded = decode_chunk_rows(paged, 15_000, 15_100)
+        (cd,), decoded = decode_chunk_rows_multi(paged, [(15_000, 15_100)])
         got = [bytes(np.asarray(cd.ba_data)[cd.ba_offsets[i]:cd.ba_offsets[i + 1]]).decode()
                for i in range(100)]
         assert got == words[15_000:15_100]
@@ -166,7 +167,8 @@ class TestRowRangeProperty:
     @settings(max_examples=40, deadline=None)
     def test_any_range_matches_full_slice(self, data):
         """Property: for random row counts, null patterns, list lengths,
-        page sizes and ranges, decode_chunk_rows(lo, hi) equals the
+        page sizes and ranges, decode_chunk_rows_multi over one range
+        [(lo, hi)] equals the
         corresponding slice of the full decode."""
         st = self.st
         n = data.draw(st.integers(10, 3000))
@@ -192,7 +194,7 @@ class TestRowRangeProperty:
         blob, _ = encode_chunk(**kw, page_bytes=page_bytes)
         lo = data.draw(st.integers(0, n - 1))
         hi = data.draw(st.integers(lo + 1, n))
-        cd, _ = decode_chunk_rows(blob, lo, hi)
+        (cd,), _ = decode_chunk_rows_multi(blob, [(lo, hi)])
         full = decode_chunk(blob)
         per_row = np.zeros(n, np.int64)
         if is_list:
@@ -217,9 +219,7 @@ class TestRowRangeProperty:
     @settings(max_examples=25, deadline=None)
     def test_multi_ranges_match_singles(self, data):
         """Property: decode_chunk_rows_multi over random disjoint ranges
-        equals per-range decode_chunk_rows (same parse, done once)."""
-        from tokenc.chunk import decode_chunk_rows_multi
-
+        equals one call per range (same parse, done once)."""
         st = self.st
         n = data.draw(st.integers(10, 2000))
         rng = np.random.default_rng(data.draw(st.integers(0, 2**31)))
@@ -235,7 +235,7 @@ class TestRowRangeProperty:
             return
         cds, _ = decode_chunk_rows_multi(blob, ranges)
         for (lo, hi), cd in zip(ranges, cds):
-            single, _ = decode_chunk_rows(blob, lo, hi)
+            (single,), _ = decode_chunk_rows_multi(blob, [(lo, hi)])
             np.testing.assert_array_equal(np.asarray(cd.values),
                                           np.asarray(single.values))
             assert cd.n_rows == single.n_rows == hi - lo
@@ -261,20 +261,40 @@ class TestPageStats:
         assert chunk_page_stats(flat) is None
 
 
+def _page_filtered(blob, lo, hi):
+    """Candidate rows of the pages whose min/max overlap [lo, hi]
+    (page_filter_row_runs), decoded with decode_chunk_rows_multi and
+    joined → (ChunkData, payload bytes decoded). A chunk without a usable
+    page directory decodes whole; no overlapping page decodes nothing."""
+    runs = page_filter_row_runs(blob, lo, hi)
+    cds, decoded = decode_chunk_rows_multi(
+        blob, [(0, 1 << 62)] if runs is None else runs or [(0, 0)])
+    if cds[0].values is not None:
+        return ChunkData(phys=cds[0].phys, n_rows=sum(c.n_rows for c in cds),
+                         validity=None, list_lengths=None,
+                         values=np.concatenate([c.values for c in cds])), decoded
+    ends = np.cumsum([0] + [int(c.ba_offsets[-1]) for c in cds])
+    offs = [np.zeros(1, np.int64)] + [np.asarray(c.ba_offsets[1:], np.int64) + e
+                                      for c, e in zip(cds, ends)]
+    return ChunkData(phys=cds[0].phys, n_rows=sum(c.n_rows for c in cds),
+                     validity=None, list_lengths=None,
+                     ba_data=np.concatenate([np.asarray(c.ba_data) for c in cds]),
+                     ba_offsets=np.concatenate(offs)), decoded
+
+
 class TestPredicatePageFilter:
-    """decode_chunk_filter: pages whose exact min/max miss the predicate
-    are never decoded (ColumnIndex-driven page skip analog)."""
+    """page_filter_row_runs + decode_chunk_rows_multi: pages whose exact
+    min/max miss the predicate are never decoded (ColumnIndex-driven page
+    skip analog)."""
 
     def test_sorted_selective_predicate_skips_pages(self):
-        from tokenc.chunk import decode_chunk_filter
-
         vals = np.arange(N, dtype=np.int64)  # sorted → pages are ranges
         blob, _ = encode_chunk(phys=codecs.PHYS_INT64, codec=codecs.DELTA_BP,
                                n_rows=N, values=vals, page_bytes=PAGE)
         full = decode_chunk(blob)
         assert full.values.size == N
         lo, hi = 5000, 5400
-        cd, decoded = decode_chunk_filter(blob, lo, hi)
+        cd, decoded = _page_filtered(blob, lo, hi)
         # all matching rows survive...
         got = cd.values[(cd.values >= lo) & (cd.values <= hi)]
         assert np.array_equal(np.sort(got), np.arange(lo, hi + 1))
@@ -283,39 +303,33 @@ class TestPredicatePageFilter:
         assert decoded < len(blob) // 4
 
     def test_unsorted_data_still_exact(self):
-        from tokenc.chunk import decode_chunk_filter
-
         rng = np.random.default_rng(3)
         vals = rng.integers(0, 100_000, N).astype(np.int64)
         blob, _ = encode_chunk(phys=codecs.PHYS_INT64, codec=codecs.PLAIN,
                                n_rows=N, values=vals, page_bytes=PAGE)
         lo, hi = 10, 99
-        cd, _ = decode_chunk_filter(blob, lo, hi)
+        cd, _ = _page_filtered(blob, lo, hi)
         got = cd.values[(cd.values >= lo) & (cd.values <= hi)]
         want = vals[(vals >= lo) & (vals <= hi)]
         assert np.array_equal(np.sort(got), np.sort(want))
 
     def test_no_overlap_returns_empty_typed(self):
-        from tokenc.chunk import decode_chunk_filter
-
         vals = np.arange(N, dtype=np.int32)
         blob, _ = encode_chunk(phys=codecs.PHYS_INT32, codec=codecs.PLAIN,
                                n_rows=N, values=vals, page_bytes=PAGE)
-        cd, decoded = decode_chunk_filter(blob, N + 10, N + 20)
+        cd, decoded = _page_filtered(blob, N + 10, N + 20)
         assert cd.values.size == 0 and cd.values.dtype == np.int32
         assert decoded == 0
 
     def test_unpaged_and_null_chunks_fall_back(self):
-        from tokenc.chunk import decode_chunk_filter
-
         vals = np.arange(500, dtype=np.int64)
         blob, _ = encode_chunk(phys=codecs.PHYS_INT64, codec=codecs.PLAIN,
                                n_rows=500, values=vals)  # unpaged
-        cd, _ = decode_chunk_filter(blob, 0, 10)
+        cd, _ = _page_filtered(blob, 0, 10)
         assert cd.n_rows == 500  # full decode, filter reapplied by caller
         kw = _mk_numeric(codecs.PLAIN, codecs.PHYS_INT64, with_nulls=True)
         blob2, _ = encode_chunk(page_bytes=PAGE, **kw)
-        cd2, _ = decode_chunk_filter(blob2, 0, 10)
+        cd2, _ = _page_filtered(blob2, 0, 10)
         assert cd2.n_rows == N
 
 
@@ -339,55 +353,45 @@ class TestByteArrayPageFilter:
     (writer/writer.go:418-481); truncation only widens the range."""
 
     def test_sorted_keys_skip_pages(self):
-        from tokenc.chunk import decode_chunk_filter
-
         keys = [b"doc%08d" % i for i in range(N)]
         blob = _ba_chunk(keys)
         lo, hi = b"doc00005000", b"doc00005400"
-        cd, decoded = decode_chunk_filter(blob, lo, hi)
+        cd, decoded = _page_filtered(blob, lo, hi)
         got = [v for v in _ba_values(cd) if lo <= v <= hi]
         assert sorted(got) == [b"doc%08d" % i for i in range(5000, 5401)]
         assert cd.n_rows < N // 4
         assert decoded < len(blob) // 4
 
     def test_str_bounds_and_exactness_unsorted(self):
-        from tokenc.chunk import decode_chunk_filter
-
         rng = np.random.default_rng(5)
         keys = [b"k%06d" % x for x in rng.integers(0, 1_000_000, N)]
         blob = _ba_chunk(keys)
-        cd, _ = decode_chunk_filter(blob, "k000100", "k000999")
+        cd, _ = _page_filtered(blob, "k000100", "k000999")
         got = [v for v in _ba_values(cd) if b"k000100" <= v <= b"k000999"]
         want = [v for v in keys if b"k000100" <= v <= b"k000999"]
         assert sorted(got) == sorted(want)
 
     def test_shared_long_prefix_never_false_prunes(self):
-        from tokenc.chunk import decode_chunk_filter
-
         # every value shares a >8-byte prefix → all page bounds equal →
         # truncation makes pruning a no-op, never a loss
         keys = [b"commonprefix-%05d" % i for i in range(N)]
         blob = _ba_chunk(keys)
         lo, hi = b"commonprefix-01000", b"commonprefix-01009"
-        cd, decoded = decode_chunk_filter(blob, lo, hi)
+        cd, decoded = _page_filtered(blob, lo, hi)
         got = [v for v in _ba_values(cd) if lo <= v <= hi]
         assert len(got) == 10
         assert decoded > 0
 
     def test_short_and_empty_values(self):
-        from tokenc.chunk import decode_chunk_filter
-
         keys = ([b""] * 100 + [b"a"] * 100 + [b"ab"] * 100
                 + [b"zz" * 10] * 100) * 50
         blob = _ba_chunk(keys)
-        cd, _ = decode_chunk_filter(blob, b"a", b"ab")
+        cd, _ = _page_filtered(blob, b"a", b"ab")
         got = [v for v in _ba_values(cd) if b"a" <= v <= b"ab"]
         want = [v for v in keys if b"a" <= v <= b"ab"]
         assert sorted(got) == sorted(want)
 
     def test_short_hi_bound_equal_to_page_min(self):
-        from tokenc.chunk import decode_chunk_filter
-
         # regression: a page whose min IS a sub-8-byte hi bound. Stored
         # page min is zero-padded (b'ab\x00...'); an unpadded query hi
         # b'ab' compared below it and the page was falsely dropped —
@@ -395,29 +399,25 @@ class TestByteArrayPageFilter:
         # convention (lo ljust-00, hi ljust-FF).
         keys = [b"aa"] * 400 + [b"ab"] * 400 + [b"ac"] * 400 + [b"b"] * 400
         blob = _ba_chunk(sorted(keys))
-        cd, _ = decode_chunk_filter(blob, b"aa", b"ab")
+        cd, _ = _page_filtered(blob, b"aa", b"ab")
         got = [v for v in _ba_values(cd) if b"aa" <= v <= b"ab"]
         assert sorted(got) == sorted(v for v in keys if b"aa" <= v <= b"ab")
         # and the lo side: page max b'ab'+FF-pad vs zero-padded lo b'ab'
-        cd2, _ = decode_chunk_filter(blob, b"ab", None)
+        cd2, _ = _page_filtered(blob, b"ab", None)
         got2 = [v for v in _ba_values(cd2) if v >= b"ab"]
         assert sorted(got2) == sorted(v for v in keys if v >= b"ab")
 
     def test_no_overlap_empty_typed(self):
-        from tokenc.chunk import decode_chunk_filter
-
         keys = [b"m%06d" % i for i in range(N)]
         blob = _ba_chunk(keys)
-        cd, decoded = decode_chunk_filter(blob, b"z", b"zz")
+        cd, decoded = _page_filtered(blob, b"z", b"zz")
         assert cd.n_rows == 0 and decoded == 0
         assert cd.ba_offsets.tolist() == [0]
 
     def test_dict_coded_pages_prune_too(self):
-        from tokenc.chunk import decode_chunk_filter
-
         keys = [b"p%04d" % (i // 100) for i in range(N)]  # sorted, low card
         blob = _ba_chunk(keys, codec=codecs.DICT)
-        cd, decoded = decode_chunk_filter(blob, b"p0050", b"p0051")
+        cd, decoded = _page_filtered(blob, b"p0050", b"p0051")
         got = [v for v in _ba_values(cd) if b"p0050" <= v <= b"p0051"]
         assert sorted(set(got)) == [b"p0050", b"p0051"]
         assert decoded < len(blob)

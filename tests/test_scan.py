@@ -70,11 +70,12 @@ class TestCompoundScan:
         pd.testing.assert_frame_equal(got.reset_index(drop=True), want.reset_index(drop=True))
 
     def test_rowgroups_pruned_before_decode(self, spark, scan_enc):
-        from tokenc.engine import prune_rowgroups
+        from tokenc.engine import prune
 
         enc, specs, schema = scan_enc
         total = enc.count()
-        kept = prune_rowgroups(enc, "k", 5000, 9000).count()
+        kept = prune(enc, specs, [("k", "between", (5000, 9000))],
+                     auto_index=False).count()
         assert kept < total / 2, (kept, total)
 
     def test_string_range_driving_column(self, spark, scan_enc):
@@ -198,3 +199,112 @@ class TestScanEdges:
                              & (p <= pl) & (t == tag))
             assert got["k"].tolist() == want["k"].tolist()
             assert got["price"].tolist() == want["price"].tolist()
+
+
+def _rows(df):
+    return df.orderBy("k", "tag").toPandas()
+
+
+class TestOnePredicatePath:
+    def test_get_equals_scan_in_and_eq(self, spark, scan_enc):
+        """get(k, vals), scan([(k, 'in', vals)]) and scan([(k, '=', v)])
+        are one predicate path: identical rows, on a numeric key and on
+        the bloom + distinct string column."""
+        from tokenc.engine import get, scan
+
+        enc, specs, schema = scan_enc
+        vals = [3, 4444, 12001, 39999, -5]
+        got = _rows(get(enc, specs, schema, "k", vals))
+        assert got["k"].tolist() == [3, 4444, 12001, 39999]
+        pd.testing.assert_frame_equal(
+            got, _rows(scan(enc, specs, schema, [("k", "in", vals)])))
+        for col, v in [("k", 4444), ("k", -5), ("tag", "t3")]:
+            one = _rows(get(enc, specs, schema, col, [v]))
+            pd.testing.assert_frame_equal(
+                one, _rows(scan(enc, specs, schema, [(col, "in", [v])])))
+            pd.testing.assert_frame_equal(
+                one, _rows(scan(enc, specs, schema, [(col, "=", v)])))
+        assert len(one) == sum(1 for i in range(40_000) if i % 7 == 3)
+
+    def test_point_plans_have_no_python_filter_stage(self, spark, scan_enc):
+        """Blooms are checked inside the one decode task: neither get()
+        nor an '=' scan adds a pandas-UDF filter node to the plan."""
+        import io
+        from contextlib import redirect_stdout
+
+        from tokenc.engine import get, scan
+
+        enc, specs, schema = scan_enc
+        for df in (get(enc, specs, schema, "tag", ["t3"]),
+                   scan(enc, specs, schema, [("tag", "=", "t3")])):
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain(True)
+            plan = buf.getvalue()
+            assert "ArrowEvalPython" not in plan
+            assert "BatchEvalPython" not in plan
+
+    def test_match_op_prunes_and_is_exact(self, spark, scan_enc):
+        from pyspark.sql import functions as F
+
+        from tokenc.engine import prune, scan
+
+        enc, specs, schema = scan_enc
+        five = F.lit("t5")  # a Column: the predicate must never ship
+        want = _expected(lambda k, p, t: (t == "t5") & (k < 9000))
+        for pred in (lambda x: x.like("t5%"), lambda x: x == five):
+            flt = [("tag", "match", pred), ("k", "<", 9000)]
+            got = _rows(scan(enc, specs, schema, flt))
+            assert got["k"].tolist() == want["k"].tolist()
+            assert prune(enc, specs, flt).count() < enc.count()
+
+    def test_prune_never_drops_a_matching_group(self, spark, scan_enc):
+        """Property: over random conjunctions of between/=/in/match, with
+        and without the auto index, every row group that holds a matching
+        row survives prune()."""
+        import random
+
+        import tokenc.engine as eng
+
+        enc, specs, schema = scan_enc
+        tbl = enc.toArrow()
+        views = [eng._blob_views(tbl, f"{s.name}_blob") for s in specs]
+        groups = {rid: eng._decode_groups(views, specs, schema, [i]).to_pandas()
+                  for i, rid in enumerate(tbl["rg_id"].to_pylist())}
+        rng = random.Random(29)
+
+        def conjunct():
+            col = rng.choice(["k", "price", "tag"])
+            top = {"k": 40_000, "price": 1000, "tag": 7}[col]
+
+            def lit(x):
+                return f"t{x % 7}" if col == "tag" else (
+                    float(x) if col == "price" else x)
+            op = rng.choice(["between", "=", "in", "match"])
+            if op == "between":
+                a = rng.randrange(top)
+                b = a + rng.randrange(1 + top // 10)
+                lo, hi = sorted((lit(a), lit(b)))
+                return (col, op, (lo, hi)), lambda s: s.between(lo, hi)
+            if op == "=":
+                v = lit(rng.randrange(-2, top + 2))
+                return (col, op, v), lambda s: s == v
+            vs = [lit(rng.randrange(-2, top + 2))
+                  for _ in range(rng.randrange(1, 4))]
+            if op == "in":
+                return (col, op, vs), lambda s: s.isin(vs)
+            return (col, op, lambda c: c.isin(*vs)), lambda s: s.isin(vs)
+
+        pruned_some = False
+        for trial in range(30):
+            conj = [conjunct() for _ in range(rng.randrange(1, 4))]
+            flt = [f for f, _ in conj]
+            kept = set(eng.prune(enc, specs, flt, auto_index=trial % 2 == 0)
+                       .select("rg_id").toPandas()["rg_id"])
+            for rid, g in groups.items():
+                m = np.ones(len(g), bool)
+                for (col, _, _), match in conj:
+                    m &= match(g[col]).to_numpy()
+                assert not m.any() or rid in kept, (flt, rid)
+            pruned_some |= len(kept) < len(groups)
+        assert pruned_some

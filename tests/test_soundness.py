@@ -11,7 +11,7 @@ import pytest
 
 from tokenc import codecs
 from tokenc.chunk import (MAGIC, chunk_page_stats, decode_chunk,
-                          decode_chunk_filter, encode_chunk,
+                          decode_chunk_rows_multi, encode_chunk,
                           page_filter_row_runs, page_filter_row_runs_multi)
 
 CODEC_OFF = len(MAGIC) + 1  # header: MAGIC, version, codec, phys, flags
@@ -61,10 +61,16 @@ class TestNanStats:
                             n_rows=vals.size, values=vals,
                             page_bytes=128 << 10), vals
 
+    @staticmethod
+    def _candidates(blob, lo, hi):
+        """Values of the pages page_filter_row_runs keeps for [lo, hi]."""
+        cds, _ = decode_chunk_rows_multi(blob,
+                                         page_filter_row_runs(blob, lo, hi))
+        return np.concatenate([np.asarray(c.values) for c in cds])
+
     def test_page_filter_keeps_nan_page_for_matching_rows(self):
         (blob, _), vals = self._blob()
-        cd, _ = decode_chunk_filter(blob, 0.5, 1.5)
-        got = np.asarray(cd.values)
+        got = self._candidates(blob, 0.5, 1.5)
         want = vals[(vals >= 0.5) & (vals <= 1.5)]
         # candidate decode is may-match (superset), but must cover all hits
         assert np.count_nonzero(got == 1.0) == want.size
@@ -73,8 +79,7 @@ class TestNanStats:
         # x >= 1.5 matches NaN rows in Spark's total order: the NaN-max
         # page must stay
         (blob, _), _ = self._blob()
-        cd, _ = decode_chunk_filter(blob, 1.5, None)
-        got = np.asarray(cd.values)
+        got = self._candidates(blob, 1.5, None)
         assert np.isnan(got).any()
 
     def test_chunk_minmax_skips_nan_min_propagates_nan_max(self):

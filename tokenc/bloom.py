@@ -8,7 +8,7 @@ result in every process) rather than parquet's xxHash64 — this filter
 lives in tokenc's own manifest metadata, not a parquet page, so only
 build/probe agreement matters.
 
-Why: min/max chunk stats (engine.prune_rowgroups) only prune SORTED or
+Why: min/max chunk stats (engine.prune) only prune SORTED or
 clustered layouts. A high-cardinality key in arrival order (doc_id in an
 unsorted corpus) spans nearly the full value range in every chunk, so
 range stats keep everything; a bloom filter still prunes every chunk the

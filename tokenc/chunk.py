@@ -236,7 +236,7 @@ def _minmax(phys: int, values, ba_data, ba_offsets, n_values: int):
             [None, _pa.py_buffer(off - base if base else off),
              _pa.py_buffer(np.ascontiguousarray(data, np.uint8))])
         # stats travel as utf-8 JSON (_stat_json) and are compared in
-        # STRING space downstream (prune_rowgroups_str, sorted index).
+        # STRING space downstream (min/max prune, sorted index).
         # For valid UTF-8, byte order == code-point order, so byte
         # min/max are exact there too. For anything else (raw binary,
         # big-decimal FLBA, corrupt text) the utf-8-replace decode can
@@ -300,7 +300,7 @@ def _page_minmax_ba(data: np.ndarray, off: np.ndarray) -> tuple[bytes, bytes]:
     Iceberg's truncate(L) bounds are the same idea). Lower bound =
     min[:8] padded 0x00 (≤ every value), upper bound = max[:8] padded
     0xFF (≥ every value under the read-side prefix-compare convention in
-    decode_chunk_filter) — truncation can only WIDEN the range, so
+    _page_keep) — truncation can only WIDEN the range, so
     pruning stays sound."""
     import pyarrow as _pa
     import pyarrow.compute as _pc
@@ -733,8 +733,7 @@ def _page_keep(payload: np.ndarray, entries, phys: int, is_ba: bool,
 
 
 def _keep_runs(keep: np.ndarray) -> list[tuple[int, int]]:
-    """Contiguous [start, end) index runs of True entries in a keep mask
-    (shared by the page-granular and row-granular pruning paths)."""
+    """Contiguous [start, end) index runs of True entries in a keep mask."""
     runs, p = [], 0
     n = len(keep)
     while p < n:
@@ -749,33 +748,14 @@ def _keep_runs(keep: np.ndarray) -> list[tuple[int, int]]:
     return runs
 
 
-def page_filter_row_runs(blob: bytes | np.ndarray, lo, hi):
+def _page_row_runs(blob: bytes | np.ndarray, bounds):
     """ROW ranges [(row_lo, row_hi), ...] of the pages whose min/max
-    overlap [lo, hi] — the multi-column form of decode_chunk_filter: the
-    caller decodes these same row spans from EVERY projected column
-    (decode_chunk_rows keeps row alignment across columns, which a
-    single-column candidate decode cannot). Returns None when the chunk
-    has no usable page directory (unpaged, nulls, lists, non-scalar) —
-    the caller decodes fully; [] when no page can match."""
-    (codec, phys, flags, n_rows, n_values, validity, list_lengths,
-     elem_validity, payload) = _parse_blob(blob)
-    is_ba = phys == codecs.PHYS_BYTE_ARRAY
-    if (not flags & F_PAGED or (phys not in _NUMERIC_DTYPE and not is_ba)
-            or validity is not None or list_lengths is not None):
-        return None
-    page_rows, entries, _ = _parse_page_index(payload)
-    keep = _page_keep(payload, entries, phys, is_ba, lo, hi)
-    return [(p * page_rows, min(q * page_rows, n_rows))
-            for p, q in _keep_runs(keep)]
-
-
-def page_filter_row_runs_multi(blob: bytes | np.ndarray, values):
-    """page_filter_row_runs for k POINT probes with ONE blob parse: the
-    header walk + page-index parse (and payload decompression, the
-    expensive part of a compressed chunk) amortize over all k values
-    instead of repeating per probe. Per-value keep masks OR together, so
-    the returned row runs are already merged and sorted. Same None/[]
-    contract as the single-probe form."""
+    overlap ANY [lo, hi] in `bounds`, with ONE blob parse: the header walk
+    + page-index parse (and payload decompression, the expensive part of
+    a compressed chunk) amortize over every bound. Per-bound keep masks
+    OR together, so the runs come back merged and sorted. None when the
+    chunk has no usable page directory (unpaged, nulls, lists,
+    non-scalar) — the caller decodes fully; [] when no page can match."""
     (codec, phys, flags, n_rows, n_values, validity, list_lengths,
      elem_validity, payload) = _parse_blob(blob)
     is_ba = phys == codecs.PHYS_BYTE_ARRAY
@@ -784,66 +764,26 @@ def page_filter_row_runs_multi(blob: bytes | np.ndarray, values):
         return None
     page_rows, entries, _ = _parse_page_index(payload)
     keep = np.zeros(len(entries), dtype=bool)
-    for v in values:
-        keep |= _page_keep(payload, entries, phys, is_ba, v, v)
+    for lo, hi in bounds:
+        keep |= _page_keep(payload, entries, phys, is_ba, lo, hi)
         if keep.all():
             break
     return [(p * page_rows, min(q * page_rows, n_rows))
             for p, q in _keep_runs(keep)]
 
 
-def decode_chunk_filter(blob: bytes | np.ndarray, lo, hi) -> tuple[ChunkData, int]:
-    """Predicate-driven page pruning: decode ONLY the sub-chunk pages whose
-    exact [min, max] overlaps [lo, hi] → (ChunkData of candidate rows,
-    payload bytes decoded). The page directory's per-page min/max is the
-    reference's ColumnIndex (writer/writer.go:418-481); skipping
-    non-overlapping pages without decoding is reader/columnbuffer.go:158-230
-    at page granularity. Callers reapply the exact predicate on the decoded
-    rows. Paged no-null scalar chunks prune — numeric on exact min/max,
-    byte_array on covering 8-byte prefix bounds (lo/hi given as
-    bytes/str, compared on their first 8 bytes; an all-zero stored max is
-    a legacy no-stats sentinel and keeps the page); anything else decodes
-    fully (bytes = whole payload)."""
-    (codec, phys, flags, n_rows, n_values, validity, list_lengths,
-     elem_validity, payload) = _parse_blob(blob)
-    is_ba = phys == codecs.PHYS_BYTE_ARRAY
-    if (not flags & F_PAGED or (phys not in _NUMERIC_DTYPE and not is_ba)
-            or validity is not None or list_lengths is not None):
-        return decode_chunk(blob), int(payload.size)
-    page_rows, entries, _ = _parse_page_index(payload)
-    keep = _page_keep(payload, entries, phys, is_ba, lo, hi)
-    if not keep.any():
-        if is_ba:
-            return ChunkData(phys=phys, n_rows=0, validity=None,
-                             list_lengths=None,
-                             ba_data=np.empty(0, np.uint8),
-                             ba_offsets=np.zeros(1, np.int64)), 0
-        return ChunkData(phys=phys, n_rows=0, validity=None,
-                         list_lengths=None,
-                         values=np.empty(0, _NUMERIC_DTYPE[phys])), 0
-    # decode each contiguous run of kept pages
-    runs = _keep_runs(keep)
-    vs, datas, offs, decoded, out_rows, elem_base = [], [], [], 0, 0, 0
-    for p0, p1 in runs:
-        v, d_, o_, d = _decode_pages(codec, phys, payload, (p0, p1))
-        decoded += d
-        out_rows += sum(e[0] for e in entries[p0:p1])
-        if is_ba:
-            datas.append(d_)
-            offs.append(np.asarray(o_[:-1], np.int64) + elem_base)
-            elem_base += int(o_[-1])
-        else:
-            vs.append(v)
-    if is_ba:
-        data = np.concatenate(datas) if len(datas) > 1 else datas[0]
-        offsets = np.concatenate(offs + [np.asarray([elem_base], np.int64)])
-        return ChunkData(phys=phys, n_rows=out_rows, validity=None,
-                         list_lengths=None, ba_data=data,
-                         ba_offsets=offsets), decoded
-    values = np.concatenate(vs) if len(vs) > 1 else vs[0]
-    return ChunkData(phys=phys, n_rows=out_rows, validity=None,
-                     list_lengths=None,
-                     values=np.asarray(values, _NUMERIC_DTYPE[phys])), decoded
+def page_filter_row_runs(blob: bytes | np.ndarray, lo, hi):
+    """Row runs of the pages whose min/max overlap the range [lo, hi] —
+    the reference's ColumnIndex-driven page skip
+    (reader/columnbuffer.go:158-230): the caller decodes these same row
+    spans from EVERY projected column (decode_chunk_rows_multi keeps row
+    alignment across columns). Same None/[] contract as _page_row_runs."""
+    return _page_row_runs(blob, [(lo, hi)])
+
+
+def page_filter_row_runs_multi(blob: bytes | np.ndarray, values):
+    """page_filter_row_runs for k POINT probes with one blob parse."""
+    return _page_row_runs(blob, [(v, v) for v in values])
 
 
 def decode_chunk_rows_multi(blob: bytes | np.ndarray,
@@ -917,12 +857,3 @@ def decode_chunk_rows_multi(blob: bytes | np.ndarray,
                              ba_data=ba_data2, ba_offsets=ba_offsets2,
                              elem_validity=sub_ev))
     return out, total_decoded
-
-
-def decode_chunk_rows(blob: bytes | np.ndarray, row_lo: int,
-                      row_hi: int) -> tuple[ChunkData, int]:
-    """Decode EXACTLY rows [row_lo, row_hi) of a chunk → (ChunkData of
-    row_hi-row_lo rows, payload bytes decoded). Single-range form of
-    decode_chunk_rows_multi."""
-    cds, decoded = decode_chunk_rows_multi(blob, [(row_lo, row_hi)])
-    return cds[0], decoded

@@ -23,16 +23,19 @@ from __future__ import annotations
 
 import hashlib
 import json
+import operator
 import os
 import zlib
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
 
 from . import arrow_util, codecs, selector
 from .chunk import (ChunkStats, decode_chunk, decode_chunk_rows_multi,
-                    encode_chunk, page_filter_row_runs)
+                    encode_chunk, page_filter_row_runs,
+                    page_filter_row_runs_multi)
 from .codecs.plain import _ranges_to_indices
 from .schema import ColumnSpec
 
@@ -763,23 +766,25 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     Row order across groups is (rg_part, rg_idx); it equals a global row
     order whenever the encode input was ordered (repartitionByRange +
     sortWithinPartitions) or single-partition. Driver-side state is one tiny
-    (rg_part, rg_idx, n_rows) row per row group — the footer read, not data.
+    (rg_part, rg_idx, n_rows, rg_id) row per row group — the footer read,
+    not data.
 
     `enc_df` must be PINNED to one materialization (persisted+materialized,
     or a deterministic lineage such as a parquet read): this call runs two
     actions — the manifest collect and the decode — and an unpersisted
     lineage containing repartitionByRange RE-SAMPLES its range boundaries
-    per action, so the decode job's row groups can hold different row
-    counts than the manifest the slice bounds were computed from (the same
+    per action, so the decode job's row groups can hold different rows
+    than the manifest the slice bounds were computed from (the same
     two-action hazard documented at _is_persisted / pipeline.packing).
-    Divergence of any overlapping group's row count is detected inside
-    the decode and raised loudly instead of returning a silently shifted
-    slice (expected counts ship for every overlapping group up to a
-    closure-size cap; beyond it, boundary groups still check).
+    Each decoded group's content-hash rg_id is checked against the one
+    the manifest pass saw, and a mismatch raises loudly instead of
+    returning a silently shifted slice (expected ids ship for every
+    overlapping group up to a closure-size cap; beyond it, boundary
+    groups still check).
     """
     from pyspark.sql import functions as F
 
-    man = (enc_df.select("rg_part", "rg_idx", "n_rows")
+    man = (enc_df.select("rg_part", "rg_idx", "n_rows", "rg_id")
            .toPandas().sort_values(["rg_part", "rg_idx"]).reset_index(drop=True))
     lo, hi = offset, offset + count
     # vectorized overlap computation — the manifest may have millions of
@@ -797,22 +802,20 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     # in (rg_part, rg_idx) order, so one BETWEEN on the composite key prunes
     # exactly — O(1) expression size however many row groups the manifest
     # holds (vs an isin() list that would reach megabytes at 100 TB)
-    bounds: dict[int, tuple[int, int, int]] = {
-        int(k): (int(s), int(t), int(n)) for k, s, t, n in
+    bounds: dict[int, tuple[int, int]] = {
+        int(k): (int(s), int(t)) for k, s, t, n in
         zip(keys, skips, takes, n_rows_arr[sel])
         if s != 0 or t != n}
-    # divergence detection needs the expected row count of EVERY
-    # overlapping group, not just the partial boundary ones — a
-    # re-materialized lineage shifts interior counts too, and an interior
-    # group with no bounds entry would decode whole at the wrong size.
+    # divergence detection needs the expected rg_id of EVERY overlapping
+    # group, not just the partial boundary ones — a re-materialized
+    # lineage changes interior groups too, even at equal row counts.
     # Capped so a pathological full-table range doesn't ship a huge
     # closure; beyond the cap boundary groups still check (re-sampled
-    # boundaries move every group's count, so they fire in practice).
+    # boundaries move every group's content, so they fire in practice).
     _EXPECT_CAP = 1 << 17
-    expect_n: dict[int, int] = (
-        {int(k): int(n) for k, n in zip(keys, n_rows_arr[sel])}
-        if keys.size <= _EXPECT_CAP else
-        {k: n for k, (s, t, n) in bounds.items()})
+    expect_id: dict[int, str] = {
+        int(k): r for k, r in zip(keys, man["rg_id"].to_numpy()[sel])
+        if keys.size <= _EXPECT_CAP or int(k) in bounds}
     key_col = (F.shiftleft(F.col("rg_part").cast("long"), 32)
                + F.col("rg_idx").cast("long"))
     pruned = enc_df.where(
@@ -824,6 +827,7 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             tbl = pa.Table.from_batches([b])
             parts = tbl.column("rg_part").to_pylist()
             idxs = tbl.column("rg_idx").to_pylist()
+            ids = tbl.column("rg_id").to_pylist()
             views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
             n_rows_col = tbl.column("n_rows").to_pylist()
             # one row group per input row; interior groups decode fully,
@@ -831,51 +835,25 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             # the requested rows
             for i in range(tbl.num_rows):
                 key = (parts[i] << 32) | idxs[i]
-                exp = expect_n.get(key)
-                if exp is not None and n_rows_col[i] != exp:
+                exp = expect_id.get(key)
+                if exp is not None and ids[i] != exp:
                     # the decode job materialized DIFFERENT row groups
                     # than the manifest collect (re-sampled
                     # repartitionByRange boundaries in an unpersisted
                     # lineage) — slicing would silently shift rows
                     raise RuntimeError(
-                        "read_range: row group (%d,%d) holds %d rows "
-                        "but the manifest pass saw %d — the input "
-                        "lineage re-materialized between the two "
-                        "actions. persist() + materialize enc_df (or "
-                        "encode from a deterministic source) before "
-                        "read_range." % (parts[i], idxs[i],
-                                         n_rows_col[i], exp))
-                ent = bounds.get(key)
-                skip, take = ent[:2] if ent is not None else (0, n_rows_col[i])
+                        "read_range: row group (%d,%d) is %s but the "
+                        "manifest pass saw %s — the input lineage "
+                        "re-materialized between the two actions. "
+                        "persist() + materialize enc_df (or encode from a "
+                        "deterministic source) before read_range."
+                        % (parts[i], idxs[i], ids[i], exp))
+                skip, take = bounds.get(key, (0, n_rows_col[i]))
                 whole = skip == 0 and take == n_rows_col[i]
                 yield _decode_groups(views, specs, out_schema, [i],
                                      [None if whole else [(skip, skip + take)]])
 
     return pruned.mapInArrow(decode_slice, from_arrow_schema(out_schema))
-
-
-def prune_rowgroups(enc_df, column: str, lo=None, hi=None):
-    """Row-group pruning on manifest min/max stats — the distributed analog
-    of the reference's ColumnIndex-driven page skipping
-    (reader/columnbuffer.go:158-230): row groups whose [min,max] range
-    misses the predicate are dropped BEFORE any blob is decoded, and the
-    Parquet container prunes the untouched blob columns at scan time.
-    Numeric columns only (stats ride as JSON scalars). Chunks WITHOUT
-    stats (omit_stats, or all-null chunks) are kept, never dropped — a
-    'null' stat must neither crash the ANSI cast nor silently prune live
-    rows."""
-    from pyspark.sql import functions as F
-
-    mn = F.get_json_object(F.col(f"{column}_meta.min_json"), "$") \
-        .try_cast("double")
-    mx = F.get_json_object(F.col(f"{column}_meta.max_json"), "$") \
-        .try_cast("double")
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (mx.isNull() | (mx >= F.lit(float(lo))))
-    if hi is not None:
-        cond = cond & (mn.isNull() | (mn <= F.lit(float(hi))))
-    return enc_df.where(cond)
 
 
 def _bloom_probe_hashes(value) -> np.ndarray | None:
@@ -927,8 +905,9 @@ def prune_rowgroups_eq(enc_df, column: str, value):
     keys where min/max ranges overlap and prune nothing. The probe runs
     one bloom check per ROW GROUP (metadata scale) inside a vectorized
     pandas UDF over the manifest's meta struct; chunks without a filter
-    (bloom not opted in at encode) are kept. Combine with
-    prune_rowgroups(min/max) for sorted numeric layouts."""
+    (bloom not opted in at encode) are kept. scan()/get() check the same
+    filters per value inside their decode task instead; this form is for
+    callers that want the pruned manifest itself."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -955,89 +934,11 @@ def prune_rowgroups_eq(enc_df, column: str, value):
 
 def prune_rowgroups_str(enc_df, column: str, lo: str | None = None,
                         hi: str | None = None):
-    """Row-group pruning for STRING range predicates on the manifest's
-    min/max stats — lexicographic compare on the JSON-extracted string
-    values (Spark's UTF8 binary collation matches the byte order the
-    chunk stats were computed in, for valid-UTF-8 data; non-UTF-8 bytes
-    were stored with replacement chars, same caveat as min_json itself).
-    Keeps chunks with absent stats — detected on the RAW json (the 4-char
-    'null'), because get_json_object extracts the real string value
-    \"null\" to the same 4 chars; the raw column keeps them distinct
-    ('null' vs '\"null\"')."""
-    from pyspark.sql import functions as F
-
-    raw_mn = F.col(f"{column}_meta.min_json")
-    raw_mx = F.col(f"{column}_meta.max_json")
-    no_stats = (raw_mn.isNull() | raw_mx.isNull()
-                | (raw_mn == F.lit("null")) | (raw_mx == F.lit("null")))
-    mn = F.get_json_object(raw_mn, "$")
-    mx = F.get_json_object(raw_mx, "$")
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (mx >= F.lit(lo))
-    if hi is not None:
-        cond = cond & (mn <= F.lit(hi))
-    return enc_df.where(no_stats | cond)
-
-
-def _distinct_arr(column: str, elem: str):
-    from pyspark.sql import functions as F
-
-    return F.from_json(F.col(f"{column}_meta.distinct_json"),
-                       f"array<{elem}>")
-
-
-def prune_rowgroups_isin(enc_df, column: str, values):
-    """IN-list row-group pruning on the recorded per-chunk DISTINCT set
-    (ColumnSpec.distinct) — the metadata-scale analog of dictionary-page
-    filtering (reference dictionaries, layout/dictpage.go:74-152, consulted
-    before decoding any codes): a row group whose distinct list is disjoint
-    from the probe set provably contains no matching row and is dropped
-    before any blob is touched. Chunks without a recorded set (opt-out, or
-    cardinality > TOKENC_DISTINCT_MAX) are kept. Pure JVM expressions over
-    the manifest — no UDF, no blob scan; safe at millions of row groups."""
-    from pyspark.sql import functions as F
-
-    vals = list(values)
-    if all(isinstance(v, bool) for v in vals):
-        elem, lits = "boolean", vals
-    elif all(isinstance(v, (int, float)) and not isinstance(v, bool)
-             for v in vals):
-        # numeric distinct lists parse as double, like the min/max stats
-        # pruning path (exact for |v| < 2^53)
-        elem, lits = "double", [float(v) for v in vals]
-    elif all(isinstance(v, (str, bytes)) for v in vals):
-        # the distinct set stores byte-array values decoded utf-8 with
-        # replacement chars (_chunk_distinct); bytes probes must take the
-        # SAME decode or a valid value like b'R' would stringify to "b'R'"
-        # and silently prune row groups that do contain it. Replacement
-        # can only merge distinct byte strings → false keeps, never drops.
-        elem = "string"
-        lits = [v.decode("utf-8", "replace") if isinstance(v, bytes) else v
-                for v in vals]
-    else:
-        # unsupported probe types (date/Decimal/...) — stats can't prove
-        # absence, so keep everything rather than str()-coerce and miss
-        return enc_df
-    dj = F.col(f"{column}_meta.distinct_json")
-    probe = F.array(*[F.lit(v) for v in lits])
-    return enc_df.where(
-        dj.isNull() | F.arrays_overlap(_distinct_arr(column, elem), probe))
-
-
-def prune_rowgroups_match(enc_df, column: str, pred, elem: str = "string"):
-    """Arbitrary-predicate row-group pruning on the recorded DISTINCT set:
-    `pred` is a Column→Column lambda (e.g. `lambda x: x.like('R%')`) applied
-    to each distinct value with `F.exists` — LIKE/regex/range predicates
-    prune row groups entirely from metadata, which blooms (equality-only)
-    and min/max (range-only) cannot do for pattern matches. Chunks without
-    a recorded set are kept; callers reapply the exact predicate after
-    decode."""
-    from pyspark.sql import functions as F
-
-    dj = F.col(f"{column}_meta.distinct_json")
-    return enc_df.where(
-        dj.isNull() | F.exists(_distinct_arr(column, elem), pred))
+    """Row-group pruning for a STRING range [lo, hi] on the manifest's
+    lexicographic min/max stats — prune()'s range keep condition for
+    callers that hold no specs."""
+    cond = _minmax_keep(column, True, lo, hi)
+    return enc_df if cond is None else enc_df.where(cond)
 
 
 def verify_table(enc_df, specs):
@@ -1085,39 +986,6 @@ def verify_table(enc_df, specs):
                 yield pa.RecordBatch.from_pydict(out, schema=out_schema)
 
     return sel.mapInArrow(fn, from_arrow_schema(out_schema))
-
-
-def decode_filtered(enc_df, spec: ColumnSpec, out_schema: pa.Schema,
-                    lo=None, hi=None):
-    """Predicate-pruned single-column decode: row groups outside [lo, hi]
-    drop on manifest min/max BEFORE any scan (prune_rowgroups /
-    prune_rowgroups_str), then inside each surviving blob only the
-    sub-chunk PAGES whose min/max overlap are decoded
-    (chunk.page_filter_row_runs — the reference's ColumnIndex-driven page
-    skip, reader/columnbuffer.go:158-230 + writer/writer.go:418-481).
-    String columns prune on lexicographic stats + covering 8-byte page
-    prefix bounds (lo/hi as str/bytes). Returns candidate rows; callers
-    reapply the exact predicate."""
-    if spec.phys == codecs.PHYS_BYTE_ARRAY:
-        pruned = prune_rowgroups_str(enc_df, spec.name, lo, hi) \
-            .select(f"{spec.name}_blob")
-    else:
-        pruned = prune_rowgroups(enc_df, spec.name, lo, hi) \
-            .select(f"{spec.name}_blob")
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            if tbl.num_rows == 0:
-                continue
-            views = _blob_views(tbl, f"{spec.name}_blob")
-            rb = _decode_groups(
-                [views], [spec], out_schema, range(len(views)),
-                [page_filter_row_runs(v, lo, hi) for v in views])
-            if rb is not None:
-                yield rb
-
-    return pruned.mapInArrow(fn, from_arrow_schema(out_schema))
 
 
 _sorted_indexes = None  # weakref.WeakKeyDictionary, created on first use
@@ -1222,137 +1090,277 @@ def sorted_index_for(enc_df, column: str, require_clustered: bool = False):
 # better shape anyway (the index only wins when the probe is selective)
 _INDEX_ISIN_CAP = 4096
 
+# element type a `match` predicate sees the recorded distinct set as.
+# Logical types (date/decimal/timestamp) record their storage integers,
+# which a predicate written for the logical column can't be applied to.
+_MATCH_ELEM = {codecs.PHYS_BYTE_ARRAY: "string", codecs.PHYS_BOOL: "boolean",
+               codecs.PHYS_INT32: "double", codecs.PHYS_INT64: "double",
+               codecs.PHYS_FLOAT: "double", codecs.PHYS_DOUBLE: "double"}
+
+
+def _minmax_keep(column: str, is_str: bool, lo, hi):
+    """Keep condition of the range [lo, hi] on a chunk's manifest min/max,
+    or None when no bound is comparable (date/Decimal literals on numeric
+    stats fall back to the residual alone). Numeric stats compare as
+    double; string stats lexicographically on the JSON-extracted values
+    (Spark's UTF8 binary collation is the byte order the stats were
+    computed in). Chunks without stats (omit_stats, all-null) are kept:
+    the numeric parse is a try_cast, so a 'null' stat never crashes the
+    ANSI cast; string absence is detected on the RAW json (the 4-char
+    'null'), because get_json_object extracts the real string value
+    "null" to the same 4 chars."""
+    from pyspark.sql import functions as F
+
+    if lo is None and hi is None or not (
+            is_str or isinstance(lo if lo is not None else hi, (int, float))):
+        return None
+    raw_mn = F.col(f"{column}_meta.min_json")
+    raw_mx = F.col(f"{column}_meta.max_json")
+    mn, mx = F.get_json_object(raw_mn, "$"), F.get_json_object(raw_mx, "$")
+    if is_str:
+        no_stats = (raw_mn.isNull() | raw_mx.isNull()
+                    | (raw_mn == F.lit("null")) | (raw_mx == F.lit("null")))
+    else:
+        mn, mx = mn.try_cast("double"), mx.try_cast("double")
+        no_stats = mn.isNull() | mx.isNull()
+        lo, hi = (None if v is None else float(v) for v in (lo, hi))
+    cond = F.lit(True)
+    if lo is not None:
+        cond = cond & (mx >= F.lit(lo))
+    if hi is not None:
+        cond = cond & (mn <= F.lit(hi))
+    return no_stats | cond
+
+
+def _keep(spec: ColumnSpec, op: str, val, ids):
+    """The row-group keep condition of ONE normalised conjunct (see
+    _conjuncts), or None when nothing on the manifest can disprove it:
+      * `rg_id IN ids` when a sorted index answered selectively (`ids`
+        not None), else the min/max stats chosen by the spec's physical
+        type;
+      * point conjuncts also need an overlap with the chunk's recorded
+        DISTINCT set (the metadata-scale analog of dictionary-page
+        filtering, reference layout/dictpage.go:74-152);
+      * `match` applies its predicate to the distinct set with F.exists,
+        so LIKE/regex predicates prune, which blooms (equality-only) and
+        min/max (range-only) cannot.
+    Chunks without the relevant metadata are kept, never dropped."""
+    from pyspark.sql import functions as F
+
+    col = spec.name
+    dj = F.col(f"{col}_meta.distinct_json")
+    if op == "match":
+        elem = _MATCH_ELEM.get(spec.phys)
+        if elem is None or spec.arrow_type is not None or spec.is_list:
+            return None
+        return dj.isNull() | F.exists(F.from_json(dj, f"array<{elem}>"), val)
+    if op == "in" and not val:
+        return F.lit(False)  # an empty IN-list matches no row
+    lo, hi = val if op == "range" else (None, None)
+    if op == "in":
+        try:
+            lo, hi = min(val), max(val)
+        except TypeError:
+            pass
+    cond = (F.col("rg_id").isin(ids) if ids is not None else
+            _minmax_keep(col, spec.phys == codecs.PHYS_BYTE_ARRAY, lo, hi))
+    if op != "in":
+        return cond
+    if all(isinstance(v, bool) for v in val):
+        elem, lits = "boolean", val
+    elif all(isinstance(v, (int, float)) and not isinstance(v, bool)
+             for v in val):
+        # numeric distinct lists parse as double, like the min/max stats
+        # (exact for |v| < 2^53)
+        elem, lits = "double", [float(v) for v in val]
+    elif all(isinstance(v, (str, bytes)) for v in val):
+        # the distinct set stores byte-array values decoded utf-8 with
+        # replacement chars (_chunk_distinct); bytes probes must take the
+        # SAME decode or a valid value like b'R' would stringify to "b'R'"
+        # and silently prune row groups that do contain it. Replacement
+        # can only merge distinct byte strings → false keeps, never drops.
+        elem = "string"
+        lits = [v.decode("utf-8", "replace") if isinstance(v, bytes) else v
+                for v in val]
+    else:
+        # date/Decimal/... probes: the set can't prove absence
+        return cond
+    overlap = dj.isNull() | F.arrays_overlap(
+        F.from_json(dj, f"array<{elem}>"), F.array(*[F.lit(v) for v in lits]))
+    return overlap if cond is None else cond & overlap
+
+
+def _conjuncts(spec_by: dict, filters):
+    """Normalise (column, op, value) filters → (conjuncts, residual).
+    Range ops on one column merge into ONE (col, 'range', [lo, hi])
+    entry at the position of the column's first range op; '=' becomes a
+    one-value 'in'. So every conjunct is (col, 'range', [lo, hi]),
+    (col, 'in', [values]) or (col, 'match', pred), and `residual` is the
+    exact Spark predicate of the whole conjunction."""
+    from pyspark.sql import functions as F
+
+    conj, ranges, residual = [], {}, F.lit(True)
+    for col, op, val in filters:
+        if col not in spec_by:
+            raise KeyError(f"filter column {col!r} not in projected specs")
+        c, lo, hi = F.col(col), None, None
+        if op in ("=", "==", "in"):
+            vals = list(val) if op == "in" else [val]
+            conj.append((col, "in", vals))
+            residual &= c.isin(vals) if op == "in" else c == val
+            continue
+        if op == "match":
+            conj.append((col, "match", val))
+            residual &= val(c)
+            continue
+        if op in (">=", ">"):
+            lo = val
+            residual &= c >= val if op == ">=" else c > val
+        elif op in ("<=", "<"):
+            hi = val
+            residual &= c <= val if op == "<=" else c < val
+        elif op == "between":
+            lo, hi = val
+            residual &= c.between(lo, hi)
+        else:
+            raise ValueError(f"unsupported scan op: {op!r}")
+        if col not in ranges:
+            ranges[col] = [None, None]
+            conj.append((col, "range", ranges[col]))
+        b = ranges[col]
+        if lo is not None:
+            b[0] = lo if b[0] is None else max(b[0], lo)
+        if hi is not None:
+            b[1] = hi if b[1] is None else min(b[1], hi)
+    return conj, residual
+
+
+def _prune(enc_df, spec_by: dict, conj: list, indexes, auto_index: bool):
+    """prune() on normalised conjuncts: every _keep condition, ANDed into
+    one where. A column's index is `indexes[col]`, else — with
+    `auto_index`, and only on a persisted frame (_is_persisted) — the
+    memoized sorted_index_for: point conjuncts look each value up on any
+    layout (the prefix-max lookup is correct for any overlap pattern),
+    range conjuncts probe it only when it is clustered."""
+    points = {col for col, op, _ in conj if op == "in"}
+    auto, conds = {}, []
+    for col, op, val in conj:
+        idx = (indexes or {}).get(col)
+        if (idx is None and op != "match" and auto_index
+                and _is_persisted(enc_df)):
+            if col not in auto:
+                auto[col] = sorted_index_for(
+                    enc_df, col, require_clustered=col not in points)
+            idx = auto[col]
+            if idx is not None and op == "range" and not idx.clustered:
+                idx = None
+        ids = None
+        if idx is not None and op != "match":
+            try:
+                ids = (idx.probe(*val) if op == "range"
+                       else sorted({i for v in val for i in idx.lookup(v)}))
+            except TypeError:
+                # probe literal incomparable with the JSON-parsed stats
+                # (date/Decimal bounds vs str/float entries)
+                ids = None
+        if ids is not None and len(ids) > _INDEX_ISIN_CAP:
+            # unselective probe: a huge IN-list literal is worse than
+            # the distributed stats prune
+            ids = None
+        cond = _keep(spec_by[col], op, val, ids)
+        if cond is not None:
+            conds.append(cond)
+    return enc_df.where(reduce(operator.and_, conds)) if conds else enc_df
+
+
+def prune(enc_df, specs: list[ColumnSpec], filters,
+          indexes: dict | None = None, auto_index: bool = True):
+    """Row-group pruning for a conjunction of (column, op, value) filters
+    (the ops scan() takes) — scan()'s tier 1 on its own: `enc_df`
+    restricted, by ONE where over manifest metadata, to the row groups
+    that may hold a matching row, before any blob is read (the
+    distributed analog of the reference's ColumnIndex-driven skipping,
+    reader/columnbuffer.go:158-230). `match` takes a Column → Column
+    predicate (e.g. `lambda x: x.like('R%')`) evaluated on the chunk's
+    recorded distinct set. Blooms are not probed here: scan() checks them
+    per value inside its decode task, and prune_rowgroups_eq is the
+    metadata-side bloom prune."""
+    spec_by = {s.name: s for s in specs}
+    return _prune(enc_df, spec_by, _conjuncts(spec_by, filters)[0],
+                  indexes, auto_index)
+
 
 def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
          filters, page_column: str | None = None,
          indexes: dict | None = None, auto_index: bool = True):
-    """Compound-predicate scan — ONE surface for a conjunction of
-    per-column predicates, the way a Spark user writes `.filter(a AND b)`.
-    Three pruning tiers compose before any full decode (the combined
-    ColumnIndex+OffsetIndex skipping of the reference,
-    writer/writer.go:418-481 + reader/columnbuffer.go:158-230, which is
-    also per-column and composed by the reader):
+    """Compound-predicate scan — the ONE predicate path, for a conjunction
+    of per-column predicates the way a Spark user writes
+    `.filter(a AND b)`. Three pruning tiers compose before any full
+    decode (the combined ColumnIndex+OffsetIndex skipping of the
+    reference, writer/writer.go:418-481 + reader/columnbuffer.go:158-230,
+    which is also per-column and composed by the reader):
 
-      1. ROW GROUPS: every conjunct prunes on manifest metadata — min/max
-         range stats (numeric + lexicographic string), bloom point
-         lookups, and dictionary-distinct IN-lists. Pure JVM expressions
-         / metadata-scale UDFs; chunks without the relevant stats are
-         kept, never dropped.
-      2. PAGES: inside each surviving row group, the page directory of
-         ONE driving column (`page_column`, default the first range/eq
-         conjunct) selects the row spans whose page min/max overlap; ALL
-         projected columns then decode exactly those row-aligned spans
-         (chunk.decode_chunk_rows — skip-without-decode).
+      1. ROW GROUPS: prune() — every conjunct's manifest keep condition
+         (sorted-index rg_id IN-list, min/max, distinct set) in one where.
+      2. ONE DECODE TASK per batch of surviving row groups: point
+         conjuncts check the chunk's bloom per value (a group where some
+         point conjunct has no value left is skipped); then the page
+         directory of the driving conjunct's column (`page_column`,
+         default the first conjunct with comparable bounds) selects row
+         spans — page_filter_row_runs for a range,
+         page_filter_row_runs_multi for the surviving point values — and
+         ALL projected columns decode exactly those row-aligned spans
+         (chunk.decode_chunk_rows_multi — skip-without-decode).
       3. RESIDUAL: the exact predicate re-applies on the decoded rows as
          a Spark filter (pruning is may-match, same as the reference).
 
     `filters` is a list of (column, op, value) conjuncts; op ∈ {'>=', '>',
-    '<=', '<', '=', 'between' (value=(lo,hi)), 'in' (value=iterable)}.
-    Bound-based pruning covers numeric and string columns; other types
-    still decode + residual-filter correctly. `indexes` optionally maps a
-    column name to a built SortedKeyIndex: that column's row-group prune
-    becomes an O(log n)-probed rg_id IN-list from the boundary-order
-    binary search instead of a manifest stats scan — the right shape when
-    the same sorted table serves many scans. With `auto_index` (default)
-    the index is built-and-memoized automatically (sorted_index_for) and
-    used whenever the manifest's per-chunk `sorted` flags say the layout
-    is clustered — every range scan on a sorted key gets the O(log n)
-    path for free; unclustered layouts keep the stats-scan prune."""
+    '<=', '<', '=', 'between' (value=(lo,hi)), 'in' (value=iterable),
+    'match' (value=Column → Column predicate)}. Bound-based pruning
+    covers numeric and string columns; other types still decode +
+    residual-filter correctly. `indexes` optionally maps a column name to
+    a built SortedKeyIndex, which turns that column's prune into an
+    O(log n)-probed rg_id IN-list. With `auto_index` (default) the index
+    is built-and-memoized automatically (sorted_index_for) on persisted
+    frames: point conjuncts use it on any layout, range conjuncts when
+    the manifest's per-chunk `sorted` flags say the layout is clustered;
+    unclustered layouts keep the stats-scan prune."""
     from pyspark.sql import functions as F
+
+    from . import bloom as _bloom
 
     spec_by = {s.name: s for s in specs}
     if page_column is not None and page_column not in spec_by:
         raise KeyError(
             f"page_column {page_column!r} not in projected specs")
-    bounds: dict[str, list] = {}
-    eq_probes, isin_probes = [], []
-    residual = F.lit(True)
-    for col, op, val in filters:
-        if col not in spec_by:
-            raise KeyError(f"filter column {col!r} not in projected specs")
-        c, lo, hi = F.col(col), None, None
-        if op in (">=", ">"):
-            lo = val
-            residual = residual & (c >= val if op == ">=" else c > val)
-        elif op in ("<=", "<"):
-            hi = val
-            residual = residual & (c <= val if op == "<=" else c < val)
-        elif op in ("=", "=="):
-            lo = hi = val
-            eq_probes.append((col, val))
-            residual = residual & (c == val)
-        elif op == "between":
-            lo, hi = val
-            residual = residual & c.between(lo, hi)
-        elif op == "in":
-            vals = list(val)
-            isin_probes.append((col, vals))
-            try:
-                lo, hi = min(vals), max(vals)
-            except (TypeError, ValueError):
-                pass
-            residual = residual & c.isin(vals)
-        else:
-            raise ValueError(f"unsupported scan op: {op!r}")
-        b = bounds.setdefault(col, [None, None])
-        if lo is not None:
-            b[0] = lo if b[0] is None else max(b[0], lo)
-        if hi is not None:
-            b[1] = hi if b[1] is None else min(b[1], hi)
+    conj, residual = _conjuncts(spec_by, filters)
+    pruned = _prune(enc_df, spec_by, conj, indexes, auto_index)
 
-    # tier 1: row-group pruning, every conjunct
-    pruned = enc_df
-    for col, (lo, hi) in bounds.items():
-        idx = (indexes or {}).get(col)
-        if idx is None and auto_index and _is_persisted(enc_df):
-            auto = sorted_index_for(enc_df, col, require_clustered=True)
-            if auto is not None and auto.clustered:
-                idx = auto
-        if idx is not None:
-            try:
-                ids = idx.probe(lo, hi)
-            except TypeError:
-                # probe literal incomparable with the JSON-parsed stats
-                # (date/Decimal bounds vs str/float entries) — the stats
-                # prune below handles or skips these types itself
-                ids = None
-            if ids is not None and len(ids) <= _INDEX_ISIN_CAP:
-                pruned = pruned.where(F.col("rg_id").isin(ids))
-                continue
-            # unselective probe: a huge IN-list literal beats nothing —
-            # fall through to the distributed stats prune instead
-        if spec_by[col].phys == codecs.PHYS_BYTE_ARRAY:
-            pruned = prune_rowgroups_str(pruned, col, lo, hi)
-        elif isinstance(lo if lo is not None else hi, (int, float)):
-            pruned = prune_rowgroups(pruned, col, lo, hi)
-    for col, v in eq_probes:
-        pruned = prune_rowgroups_eq(pruned, col, v)      # no bloom → keep
-        pruned = prune_rowgroups_isin(pruned, col, [v])  # no distinct → keep
-    for col, vals in isin_probes:
-        pruned = prune_rowgroups_isin(pruned, col, vals)
-
-    # tier 2: page-level row spans on the driving column. Only bounds the
-    # page directory can actually compare qualify (numeric or str/bytes —
-    # a date/Decimal literal against raw numeric page stats would
-    # TypeError in the executor); anything else decodes fully and the
-    # residual filter stays exact.
-    def _pageable(c):
-        vs = [v for v in bounds.get(c, (None, None)) if v is not None]
-        return bool(vs) and all(
+    # the driving conjunct: only bounds the page directory can compare
+    # qualify (numeric or str/bytes — a date/Decimal literal against raw
+    # numeric page stats would TypeError in the executor). With none, or
+    # an explicit `page_column` that has none, every chunk decodes whole
+    # and the residual stays exact.
+    def _pageable(op, val):
+        vs = [v for v in val if v is not None] if op == "range" else val
+        return op != "match" and bool(vs) and all(
             isinstance(v, (str, bytes))
             or (isinstance(v, (int, float)) and not isinstance(v, bool))
             for v in vs)
 
-    if page_column is None:
-        page_column = next((c for c in bounds if _pageable(c)), None)
-    elif page_column not in bounds or not _pageable(page_column):
-        # an explicit driving column with no comparable filter bounds
-        # can't prune any page — drop to tier-1 + residual instead of
-        # silently walking the page directory with open bounds
-        page_column = None
-    drv = spec_by[page_column].name if page_column else None
-    dlo, dhi = bounds.get(drv, (None, None)) if drv else (None, None)
-    sel = pruned.select(*[f"{s.name}_blob" for s in specs])
+    drv = next((k for k, (col, op, val) in enumerate(conj)
+                if page_column in (None, col) and _pageable(op, val)), None)
+    # the task closure takes only the driving conjunct's bounds or
+    # values, never `conj`: a 'match' predicate may close over
+    # unpicklable objects
+    dcol, _, dval = (None, None, None) if drv is None else conj[drv]
+    # per-value bloom probe hashes (None = can't disprove), computed once
+    probes = [(k, [(v, _bloom_probe_hashes(v)) for v in val])
+              for k, (_, op, val) in enumerate(conj) if op == "in"]
+    sel = pruned.select(
+        *[f"{s.name}_blob" for s in specs],
+        *[F.col(f"{conj[k][0]}_meta.bloom").alias(f"__bloom{k}")
+          for k, _ in probes])
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -1360,119 +1368,50 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             if tbl.num_rows == 0:
                 continue
             views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            dviews = (_blob_views(tbl, f"{drv}_blob") if drv else None)
-            # None (no driving column / no usable page directory) decodes
-            # the whole chunk; [] (no page can match) skips the group
-            runs = [page_filter_row_runs(v, dlo, dhi) for v in dviews] \
-                if dviews is not None else None
+            dviews = _blob_views(tbl, f"{dcol}_blob") if dcol else None
+            blooms = [tbl.column(f"__bloom{k}").to_pylist() for k, _ in probes]
+            runs = []
+            for i in range(tbl.num_rows):
+                live = {}
+                for (k, pv), bl in zip(probes, blooms):
+                    bb = None if bl[i] is None else bytes(bl[i])
+                    live[k] = [v for v, hs in pv if bb is None or hs is None
+                               or bool(_bloom.might_contain(bb, hs).any())]
+                # None (no driving conjunct / no usable page directory)
+                # decodes the whole chunk; [] (no page can match) skips it
+                if not all(live.values()):
+                    runs.append([])
+                elif drv is None:
+                    runs.append(None)
+                elif drv in live:
+                    # ONE parse (incl. decompression) for all live values
+                    runs.append(page_filter_row_runs_multi(dviews[i],
+                                                           live[drv]))
+                else:
+                    runs.append(page_filter_row_runs(dviews[i], *dval))
             rb = _decode_groups(views, specs, out_schema,
                                 range(tbl.num_rows), runs)
             if rb is not None:
                 yield rb
 
-    dec = sel.mapInArrow(fn, from_arrow_schema(out_schema))
-    # tier 3: exact residual predicate
-    return dec.where(residual)
+    return sel.mapInArrow(fn, from_arrow_schema(out_schema)).where(residual)
 
 
 def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         key_column: str, values, index=None, auto_index: bool = True):
     """Point fetch: the full decoded rows for k scattered key values —
     the reference's SkipRows+ReadByNumber analog at its sharpest
-    (reader/reader.go:179-253), composed from every lookup structure the
-    manifest carries:
-
-      1. SORTED-INDEX PROBE (driver, O(log n) bound comparisons per key,
-         tokenc/sorted_index.py): binary-search the boundary-order
-         row-group bounds per value → a tiny candidate rg_id IN-list.
-      2. DICT-DISTINCT prune (prune_rowgroups_isin) + per-value BLOOM
-         CONFIRM: candidates whose recorded distinct set or split-block
-         bloom filter prove every key absent drop before any blob
-         decode; blooms are probed per VALUE inside the executor over
-         the manifest meta struct (one µs-scale check per chunk×value).
-      3. PAGE-DIRECTORY ROW RUNS: for each surviving (chunk, value) the
-         key column's page directory selects the row spans whose page
-         min/max can hold the value; the merged spans decode ONCE for
-         all projected columns (chunk.decode_chunk_rows_multi —
-         skip-without-decode, reader/columnbuffer.go:158-230).
-      4. EXACT residual `key IN values` on the decoded rows.
-
-    `index` optionally supplies a built SortedKeyIndex; otherwise one is
-    built-and-memoized per DataFrame handle (sorted_index_for). Unlike
-    scan()'s range path the index is used even for non-clustered
-    layouts — the prefix-max probe is correct for any overlap pattern,
-    and a point lookup wants the IN-list shape regardless."""
-    from pyspark.sql import functions as F
-
-    from . import bloom as _bloom
-    from .chunk import page_filter_row_runs_multi
-
-    spec_by = {s.name: s for s in specs}
-    if key_column not in spec_by:
-        raise KeyError(f"key column {key_column!r} not in projected specs")
-    vals = list(values)
-
-    # tier 1: sorted-index probe per value
-    idx = index
-    if idx is None and auto_index and _is_persisted(enc_df):
-        idx = sorted_index_for(enc_df, key_column)
-    pruned = enc_df
-    if idx is not None:
-        try:
-            ids = sorted({i for v in vals for i in idx.lookup(v)})
-        except TypeError:
-            ids = None  # probe type incomparable with stored stats
-        if ids is not None and len(ids) <= _INDEX_ISIN_CAP:
-            pruned = pruned.where(F.col("rg_id").isin(ids))
-
-    # tier 2a: dictionary-distinct prune (metadata expressions, no UDF)
-    pruned = prune_rowgroups_isin(pruned, key_column, vals)
-
-    # tier 2b prep: per-value bloom probe hashes (None = can't disprove)
-    # and per-value page-probe eligibility, computed once driver-side
-    def _page_probeable(v):
-        return isinstance(v, (str, bytes)) or (
-            isinstance(v, (int, float)) and not isinstance(v, bool))
-
-    probes = [(v, _bloom_probe_hashes(v), _page_probeable(v)) for v in vals]
-    key_i = next(i for i, s in enumerate(specs) if s.name == key_column)
-    sel = pruned.select(
-        *[f"{s.name}_blob" for s in specs],
-        F.col(f"{key_column}_meta.bloom").alias("__key_bloom"))
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            if tbl.num_rows == 0:
-                continue
-            views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            blooms = tbl.column("__key_bloom").to_pylist()
-            runs = []
-            for i in range(tbl.num_rows):
-                bb = None if blooms[i] is None else bytes(blooms[i])
-                live = [(v, pageable) for v, hs, pageable in probes
-                        if bb is None or hs is None
-                        or bool(_bloom.might_contain(bb, hs).any())]
-                if not live:
-                    runs.append([])
-                elif any(not pageable for _, pageable in live):
-                    # an un-comparable probe type can't page-prune — the
-                    # whole chunk decodes
-                    runs.append(None)
-                else:
-                    # ONE parse (incl. decompression) for all k probes —
-                    # the per-value form re-parsed the key chunk k times;
-                    # None (no usable page directory) decodes it whole
-                    runs.append(page_filter_row_runs_multi(
-                        views[key_i][i], [v for v, _ in live]))
-            rb = _decode_groups(views, specs, out_schema,
-                                range(tbl.num_rows), runs)
-            if rb is not None:
-                yield rb
-
-    dec = sel.mapInArrow(fn, from_arrow_schema(out_schema))
-    # tier 4: exact residual
-    return dec.where(F.col(key_column).isin(vals))
+    (reader/reader.go:179-253). It is scan() with one
+    `key_column IN values` conjunct, so it composes every lookup
+    structure the manifest carries: a sorted-index lookup per value (an
+    O(log n) binary search → a tiny rg_id IN-list; `index`, or built and
+    memoized per DataFrame handle, used even on non-clustered layouts),
+    the distinct-set overlap, the per-value bloom confirm inside the
+    decode task, page-directory row runs for the surviving values, and
+    the exact residual `key IN values`."""
+    return scan(enc_df, specs, out_schema, [(key_column, "in", values)],
+                indexes=None if index is None else {key_column: index},
+                auto_index=auto_index)
 
 
 def from_arrow_schema(schema: pa.Schema):

@@ -20,7 +20,7 @@ manifest LIST carries per-partition-field summaries — so `plan_files`
 with a `row_filter` first drops whole manifests from the list's
 summaries, then drops data files from their bounds, before a single data
 byte is read. This is the metadata analog of the engine's own row-group
-pruning (tokenc.engine.prune_rowgroups; reference footer stats,
+pruning (tokenc.engine.prune; reference footer stats,
 writer/writer.go:418-481, reader/columnbuffer.go:158-230).
 
 `build_table` materializes a spec-v2 table (metadata JSON with a real
@@ -38,6 +38,7 @@ import os
 import re
 import struct
 from dataclasses import dataclass, field
+from decimal import ROUND_CEILING, ROUND_FLOOR, ROUND_HALF_EVEN
 
 from .avro import read_ocf, write_ocf
 from .files import resolve_fs
@@ -84,7 +85,11 @@ def _decimal_scale(ice_type: str) -> int:
     return int(ice_type[ice_type.rindex(",") + 1:ice_type.rindex(")")])
 
 
-def ser_value(v, ice_type: str) -> bytes:
+def ser_value(v, ice_type: str, rounding: str = ROUND_HALF_EVEN) -> bytes:
+    """Iceberg single-value serialization. `rounding` (a decimal module
+    rounding mode) applies when a decimal carries more fractional digits
+    than its scale: lower bounds pass ROUND_FLOOR and upper bounds
+    ROUND_CEILING, so a rounded bound still covers the value."""
     if ice_type == "int" or ice_type == "date":
         return struct.pack("<i", int(v))
     if ice_type == "long" or ice_type.startswith("timestamp"):
@@ -105,7 +110,7 @@ def ser_value(v, ice_type: str) -> bytes:
         from decimal import Decimal
 
         unscaled = int(Decimal(v).scaleb(_decimal_scale(ice_type))
-                       .to_integral_value())
+                       .to_integral_value(rounding))
         n = max(1, (unscaled.bit_length() + 8) // 8)  # +sign bit headroom
         return unscaled.to_bytes(n, "big", signed=True)
     raise ValueError(f"no single-value serialization for {ice_type!r}")
@@ -1068,8 +1073,9 @@ def _collect_file_stats(md, name2ft: dict):
                 lo = _trunc_lower(lo)
                 hi = _trunc_upper(hi)
             try:
-                lo_b = ser_value(lo, ice)
-                hi_b = ser_value(hi, ice) if hi is not None else None
+                lo_b = ser_value(lo, ice, ROUND_FLOOR)
+                hi_b = (ser_value(hi, ice, ROUND_CEILING)
+                        if hi is not None else None)
             except (ValueError, TypeError):
                 # a type without single-value serialization: publish the
                 # file WITHOUT bounds for this column (unbounded = sound)
@@ -1412,9 +1418,9 @@ def build_table(table_dir: str, data_files: list[str], *,
                 csummaries.append({
                     "contains_null": s["contains_null"],
                     "contains_nan": None,
-                    "lower_bound": (ser_value(s["lo"], ice)
+                    "lower_bound": (ser_value(s["lo"], ice, ROUND_FLOOR)
                                     if s["lo"] is not None else None),
-                    "upper_bound": (ser_value(s["hi"], ice)
+                    "upper_bound": (ser_value(s["hi"], ice, ROUND_CEILING)
                                     if s["hi"] is not None else None)})
         carry_mrec = {
             "manifest_path": "file://" + cpath,
@@ -1445,9 +1451,9 @@ def build_table(table_dir: str, data_files: list[str], *,
             ice = _part_value_type(ps, name2ft)
             summaries.append({
                 "contains_null": s["contains_null"], "contains_nan": None,
-                "lower_bound": (ser_value(s["lo"], ice)
+                "lower_bound": (ser_value(s["lo"], ice, ROUND_FLOOR)
                                 if s["lo"] is not None else None),
-                "upper_bound": (ser_value(s["hi"], ice)
+                "upper_bound": (ser_value(s["hi"], ice, ROUND_CEILING)
                                 if s["hi"] is not None else None)})
     mrecs = [
         {"manifest_path": "file://" + path,
