@@ -337,7 +337,9 @@ def q_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate path (engine.scan; reference ColumnIndex + skip-without-
     decode, writer/writer.go:418-481 + reader/columnbuffer.go:158-230):
     row groups outside [lo, hi] on l_orderkey drop on manifest min/max
-    (asserted here via engine.prune), then inside each surviving blob only
+    (asserted here via engine.prune with the sorted-key index off; the
+    scan itself, on this cached clustered frame, prunes through that
+    index's rg_id IN-list), then inside each surviving blob only
     the sub-chunk pages whose exact min/max overlap are decoded; the
     exact filter is reapplied after — bit-exact vs SQL."""
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -355,7 +357,7 @@ def q_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     page_bytes=8 << 10).cache()
     total = enc.count()
     flt = [("l_orderkey", "between", (2000, 3500))]
-    assert prune(enc, specs, flt).count() < total, \
+    assert prune(enc, specs, flt, auto_index=False).count() < total, \
         "min/max pruning dropped no row group"
     return scan(enc, specs, schema, flt)
 
@@ -712,7 +714,10 @@ def q_pruned_scan_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual predicate after decode — the combined ColumnIndex+OffsetIndex
     skipping of the reference (writer/writer.go:418-481 +
     reader/columnbuffer.go:158-230) behind ONE filter surface. Data is
-    range-clustered on l_orderkey so both metadata tiers actually prune."""
+    range-clustered on l_orderkey so both metadata tiers actually prune.
+    The encode is not persisted, so no sorted-key index is built: this is
+    the driver query whose row-group tier is the distributed min/max
+    prune alone."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from tokenc.engine import encode_df, scan
@@ -774,7 +779,8 @@ def q_sorted_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pruned_scan_str(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRING range-predicate pruning at both granularities through
     engine.scan: row groups drop on lexicographic manifest min/max
-    (asserted here via engine.prune), then inside surviving blobs only
+    (asserted here via engine.prune with the sorted-key index off), then
+    inside surviving blobs only
     the pages whose covering 8-byte prefix bounds overlap are decoded
     (chunk.page_filter_row_runs — the reference ColumnIndex stores
     byte-array min/max too, writer/writer.go:418-481; truncated bounds
@@ -796,7 +802,7 @@ def q_pruned_scan_str(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = encode_df(src, specs, target_raw_bytes=64 << 10).cache()
     total = enc.count()
     flt = [("key", "between", ("doc00000100", "doc00000299"))]
-    assert prune(enc, specs, flt).count() < total, \
+    assert prune(enc, specs, flt, auto_index=False).count() < total, \
         "string stats pruning dropped no row group"
     return scan(enc, specs, arrow_schema, flt).orderBy("key").select("key")
 

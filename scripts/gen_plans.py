@@ -249,7 +249,8 @@ def main():
         "(keyed by uniformly-distributed hashes). Every data-carrying "
         "encode/decode stage is Exchange-free. read_range's manifest "
         "collect is a separate metadata-only job "
-        "(rg_part/rg_idx/n_rows/rg_id).\n",
+        "(rg_part/rg_idx/n_rows + a content key hashed from the meta "
+        "stats).\n",
     ]
     for name, p in plans.items():
         lines.append(f"\n=== {name} ===\n")

@@ -290,11 +290,29 @@ class TestDegenerateShapes:
 
 
 class TestReadRangeDivergence:
+    """read_range runs two actions (manifest collect, decode); each decoded
+    group's content key must match the one the manifest pass saw. The
+    encoded table is served from a file-selected version, so a test can
+    swap what the second action materializes."""
+
+    def _swapped(self, spark, tmp_path, a, b, schema_of):
+        version = tmp_path / "version"
+        version.write_text("a")
+        tables = {"a": a, "b": b}
+
+        def serve(batches):
+            # the encoded table as the file names it: A, or the swapped-in B
+            for _ in batches:
+                pass
+            yield from tables[version.read_text()].to_batches()
+
+        enc = spark.range(1, numPartitions=1).mapInArrow(serve, schema_of)
+        return enc, version
+
     def test_same_count_different_content_raises(self, spark, tmp_path):
-        """read_range checks each decoded group's content-hash rg_id
-        against the manifest pass: a group that re-materializes between
-        the two actions with the SAME row count but different rows must
-        raise, not decode a silently wrong slice."""
+        """A group that re-materializes between the two actions with the
+        SAME row count but different rows must raise, not decode a
+        silently wrong slice."""
         from pyspark.sql import functions as F
         from pyspark.sql.pandas.types import to_arrow_schema
         from tokenc.engine import read_range
@@ -307,19 +325,8 @@ class TestReadRangeDivergence:
         b = encode_df(src.select((F.col("k") + 1).alias("k")), specs,
                       target_raw_bytes=8 << 10).toArrow()
         assert a["n_rows"].to_pylist() == b["n_rows"].to_pylist()
-        assert a["rg_id"].to_pylist() != b["rg_id"].to_pylist()
         assert a.num_rows > 2
-        version = tmp_path / "version"
-        version.write_text("a")
-        tables = {"a": a, "b": b}
-
-        def serve(batches):
-            # the encoded table as the file names it: A, or the swapped-in B
-            for _ in batches:
-                pass
-            yield from tables[version.read_text()].to_batches()
-
-        enc = spark.range(1, numPartitions=1).mapInArrow(serve, enc_a.schema)
+        enc, version = self._swapped(spark, tmp_path, a, b, enc_a.schema)
         out = read_range(enc, specs, schema, 100, 3000)
         assert out.count() == 3000
         out = read_range(enc, specs, schema, 100, 3000)
@@ -327,6 +334,49 @@ class TestReadRangeDivergence:
         with pytest.raises(Exception) as err:
             out.collect()
         assert "re-materialized" in str(err.value)
+
+    def test_same_rows_other_codecs_reads(self, spark, tmp_path):
+        """An unpersisted encode of a deterministic source may pick other
+        codecs on the decode action (the selector memo is per worker), so
+        the same rows come back under a different blob-hash rg_id. That is
+        not a divergence: read_range must return the right slice."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from tokenc.engine import read_range
+
+        src = spark.range(4000, numPartitions=1).select(F.col("id").alias("k"))
+        schema = to_arrow_schema(src.schema)
+
+        def enc_with(codec):
+            specs = specs_from_arrow_schema(schema,
+                                            codec_overrides={"k": codec})
+            return encode_df(src, specs, target_raw_bytes=8 << 10)
+
+        enc_a = enc_with("plain")
+        a, b = enc_a.toArrow(), enc_with("delta_bp").toArrow()
+        assert a["rg_id"].to_pylist() != b["rg_id"].to_pylist()
+        assert a.num_rows > 2
+        specs = specs_from_arrow_schema(schema)
+        enc, version = self._swapped(spark, tmp_path, a, b, enc_a.schema)
+        out = read_range(enc, specs, schema, 100, 3000)
+        version.write_text("b")
+        got = out.orderBy("k").toPandas()["k"].tolist()
+        assert got == list(range(100, 3100))
+
+    def test_unpersisted_deterministic_encode_reads(self, spark):
+        from pyspark.sql import functions as F
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from tokenc.engine import read_range
+
+        src = (spark.range(6000, numPartitions=3)
+               .select(F.col("id").alias("k"),
+                       (F.col("id") % 7).cast("string").alias("s")))
+        schema = to_arrow_schema(src.schema)
+        specs = specs_from_arrow_schema(schema)
+        enc = encode_df(src, specs, target_raw_bytes=8 << 10)
+        got = read_range(enc, specs, schema, 1500, 3000).orderBy("k") \
+            .toPandas()["k"].tolist()
+        assert got == list(range(1500, 4500))
 
 
 class TestReadRangePredicateShape:

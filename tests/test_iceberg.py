@@ -8,6 +8,7 @@ from __future__ import annotations
 import io
 import os
 import shutil
+from decimal import ROUND_FLOOR
 
 import numpy as np
 import pyarrow as pa
@@ -139,19 +140,19 @@ class TestSingleValueSer:
         (0.5, "float"), (-2.25, "double"), (True, "boolean"),
         (False, "boolean"), ("héllo", "string"), (b"\x00\xff", "binary")])
     def test_roundtrip(self, v, t):
-        assert deser_value(ser_value(v, t), t) == v
+        assert deser_value(ser_value(v, t, ROUND_FLOOR), t) == v
 
     def test_fixed_widths(self):
         # spec: little-endian fixed-width — pin the exact wire bytes
-        assert ser_value(1, "int") == b"\x01\x00\x00\x00"
-        assert ser_value(1, "long") == b"\x01" + b"\x00" * 7
-        assert ser_value(True, "boolean") == b"\x01"
+        assert ser_value(1, "int", ROUND_FLOOR) == b"\x01\x00\x00\x00"
+        assert ser_value(1, "long", ROUND_FLOOR) == b"\x01" + b"\x00" * 7
+        assert ser_value(True, "boolean", ROUND_FLOOR) == b"\x01"
 
     def test_decimal_bounds_round_outward(self):
         # a value with more fractional digits than the scale: the lower
         # bound must not exceed it and the upper bound must not fall
         # below it (half-even rounds 1.234 DOWN to 1.23, an unsound max)
-        from decimal import ROUND_CEILING, ROUND_FLOOR, Decimal
+        from decimal import ROUND_CEILING, Decimal
 
         t = "decimal(10, 2)"
         for v in (Decimal("1.234"), Decimal("1.235"), Decimal("-1.234"),
@@ -1325,16 +1326,18 @@ class TestRound5ReviewHardening:
 
         for v in (Decimal("1.23"), Decimal("-0.01"), Decimal("0"),
                   Decimal("99999999.99"), Decimal("-12345678.90")):
-            b = ser_value(v, "decimal(10, 2)")
+            b = ser_value(v, "decimal(10, 2)", ROUND_FLOOR)
             assert deser_value(b, "decimal(10, 2)") == v
         # spec: minimum bytes, big-endian two's complement
-        assert ser_value(Decimal("1.23"), "decimal(10, 2)") == b"\x7b"
-        assert ser_value(Decimal("-1.23"), "decimal(10, 2)") == b"\x85"
+        t = "decimal(10, 2)"
+        assert ser_value(Decimal("1.23"), t, ROUND_FLOOR) == b"\x7b"
+        assert ser_value(Decimal("-1.23"), t, ROUND_FLOOR) == b"\x85"
 
     def test_uuid_fixed_passthrough(self):
         raw = bytes(range(16))
-        assert deser_value(ser_value(raw, "uuid"), "uuid") == raw
-        assert deser_value(ser_value(raw, "fixed[16]"), "fixed[16]") == raw
+        assert deser_value(ser_value(raw, "uuid", ROUND_FLOOR), "uuid") == raw
+        assert deser_value(ser_value(raw, "fixed[16]", ROUND_FLOOR),
+                           "fixed[16]") == raw
 
     def test_type_promotion_bound_widths(self):
         import struct as st

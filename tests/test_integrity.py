@@ -137,14 +137,25 @@ class TestDistinctPruning:
                   .count() == 0
 
     def test_isin_prunes_and_is_exact(self, spark, enc_orders):
+        import json
+
         from pyspark.sql import functions as F
 
         from tokenc.engine import decode_df, prune
 
         enc, specs, schema = enc_orders
-        total = enc.count()
-        kept = prune(enc, specs, [("pri", "in", ["2-HIGH"])])
-        assert kept.count() < total
+        # auto_index off: min/max (every chunk spans "2-HIGH" lexically)
+        # and the distinct overlap are the only keep conditions, so the
+        # kept set is exactly the chunks whose distinct set holds the value
+        holds = {r.rg_id for r in
+                 enc.select("rg_id", "pri_meta.distinct_json").collect()
+                 if "2-HIGH" in json.loads(r.distinct_json)}
+        kept = prune(enc, specs, [("pri", "in", ["2-HIGH"])],
+                     auto_index=False)
+        assert {r.rg_id for r in kept.select("rg_id").collect()} == holds
+        minmax = prune(enc, specs, [("pri", "between", ("2-HIGH", "2-HIGH"))],
+                       auto_index=False)
+        assert len(holds) < minmax.count()
         dec = decode_df(kept, specs, schema).where(F.col("pri") == "2-HIGH")
         assert dec.count() == 800
 
@@ -160,14 +171,29 @@ class TestDistinctPruning:
         dec = decode_df(kept, specs, schema).where(F.col("pri").like("5-%"))
         assert dec.count() == 800
 
-    def test_no_distinct_info_keeps_everything(self, spark, enc_orders):
-        from tokenc.engine import prune
+    def test_no_distinct_info_keeps_everything(self, spark):
+        from pyspark.sql import functions as F
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        enc, specs, _ = enc_orders
-        # ok has no recorded distinct set → nothing may be dropped ('match'
-        # consults only the distinct set; an 'in' would also hit min/max)
-        kept = prune(enc, specs, [("ok", "match", lambda x: x == 123456789)])
-        assert kept.count() == enc.count()
+        from tokenc.engine import encode_df, prune
+        from tokenc.schema import specs_from_arrow_schema
+
+        # one chunk per partition, each spanning nearly all of 0..2999, so
+        # min/max cannot disprove the absent probe 2000.5: only the
+        # distinct-set term decides, and ok has no recorded distinct set
+        src = (spark.range(3000).select(F.col("id").alias("ok"))
+               .repartition(3, F.col("ok") % 3))
+        specs = specs_from_arrow_schema(to_arrow_schema(src.schema))
+        enc = encode_df(src, specs, target_raw_bytes=1 << 20).cache()
+        man = enc.select(
+            F.col("ok_meta.min_json").cast("double").alias("mn"),
+            F.col("ok_meta.max_json").cast("double").alias("mx"),
+            "ok_meta.distinct_json").collect()
+        assert len(man) > 1
+        assert all(r.mn < 2000.5 < r.mx and r.distinct_json is None
+                   for r in man)
+        kept = prune(enc, specs, [("ok", "in", [2000.5])], auto_index=False)
+        assert kept.count() == len(man)
 
     def test_high_cardinality_opts_out(self, spark):
         from pyspark.sql import functions as F

@@ -765,26 +765,34 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
 
     Row order across groups is (rg_part, rg_idx); it equals a global row
     order whenever the encode input was ordered (repartitionByRange +
-    sortWithinPartitions) or single-partition. Driver-side state is one tiny
-    (rg_part, rg_idx, n_rows, rg_id) row per row group — the footer read,
-    not data.
+    sortWithinPartitions) or single-partition. Driver-side state is one
+    tiny (rg_part, rg_idx, n_rows, content key) row per row group — the
+    footer read, not data.
 
     `enc_df` must be PINNED to one materialization (persisted+materialized,
-    or a deterministic lineage such as a parquet read): this call runs two
-    actions — the manifest collect and the decode — and an unpersisted
-    lineage containing repartitionByRange RE-SAMPLES its range boundaries
-    per action, so the decode job's row groups can hold different rows
-    than the manifest the slice bounds were computed from (the same
-    two-action hazard documented at _is_persisted / pipeline.packing).
-    Each decoded group's content-hash rg_id is checked against the one
-    the manifest pass saw, and a mismatch raises loudly instead of
-    returning a silently shifted slice (expected ids ship for every
-    overlapping group up to a closure-size cap; beyond it, boundary
-    groups still check).
+    a read of stored encoded data, or an encode of a deterministic lineage
+    such as a parquet read): this call runs two actions — the manifest
+    collect and the decode — and an unpersisted lineage containing
+    repartitionByRange RE-SAMPLES its range boundaries per action, so the
+    decode job's row groups can hold different rows than the manifest the
+    slice bounds were computed from (the same two-action hazard documented
+    at _is_persisted / pipeline.packing). Each decoded group's content key
+    is checked against the one the manifest pass saw, and a mismatch
+    raises loudly instead of returning a silently shifted slice (expected
+    keys ship for every overlapping group up to a closure-size cap; beyond
+    it, boundary groups still check). A group re-materialized with equal
+    row count, null counts and min/max is not detected.
     """
     from pyspark.sql import functions as F
 
-    man = (enc_df.select("rg_part", "rg_idx", "n_rows", "rg_id")
+    # the content key names a group's ROWS, not its encoding: unlike the
+    # blob-hash rg_id it survives an unpersisted re-encode picking other
+    # codecs for the same rows (the per-worker selector.WORKER_MEMO)
+    ck = F.sha1(F.to_json(F.struct("n_rows", *[F.struct(*[
+        F.col(f"{s.name}_meta.{f}") for f in
+        ("null_count", "n_values", "min_json", "max_json")]).alias(s.name)
+        for s in specs])))
+    man = (enc_df.select("rg_part", "rg_idx", "n_rows", ck.alias("_ck"))
            .toPandas().sort_values(["rg_part", "rg_idx"]).reset_index(drop=True))
     lo, hi = offset, offset + count
     # vectorized overlap computation — the manifest may have millions of
@@ -806,28 +814,28 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         int(k): (int(s), int(t)) for k, s, t, n in
         zip(keys, skips, takes, n_rows_arr[sel])
         if s != 0 or t != n}
-    # divergence detection needs the expected rg_id of EVERY overlapping
+    # divergence detection needs the expected key of EVERY overlapping
     # group, not just the partial boundary ones — a re-materialized
     # lineage changes interior groups too, even at equal row counts.
     # Capped so a pathological full-table range doesn't ship a huge
     # closure; beyond the cap boundary groups still check (re-sampled
     # boundaries move every group's content, so they fire in practice).
     _EXPECT_CAP = 1 << 17
-    expect_id: dict[int, str] = {
-        int(k): r for k, r in zip(keys, man["rg_id"].to_numpy()[sel])
+    expect_ck: dict[int, str] = {
+        int(k): c for k, c in zip(keys, man["_ck"].to_numpy()[sel])
         if keys.size <= _EXPECT_CAP or int(k) in bounds}
     key_col = (F.shiftleft(F.col("rg_part").cast("long"), 32)
                + F.col("rg_idx").cast("long"))
     pruned = enc_df.where(
         key_col.between(int(keys[0]), int(keys[-1])) if keys.size
-        else F.lit(False))
+        else F.lit(False)).withColumn("_ck", ck)
 
     def decode_slice(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             tbl = pa.Table.from_batches([b])
             parts = tbl.column("rg_part").to_pylist()
             idxs = tbl.column("rg_idx").to_pylist()
-            ids = tbl.column("rg_id").to_pylist()
+            cks = tbl.column("_ck").to_pylist()
             views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
             n_rows_col = tbl.column("n_rows").to_pylist()
             # one row group per input row; interior groups decode fully,
@@ -835,19 +843,19 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             # the requested rows
             for i in range(tbl.num_rows):
                 key = (parts[i] << 32) | idxs[i]
-                exp = expect_id.get(key)
-                if exp is not None and ids[i] != exp:
+                exp = expect_ck.get(key)
+                if exp is not None and cks[i] != exp:
                     # the decode job materialized DIFFERENT row groups
                     # than the manifest collect (re-sampled
                     # repartitionByRange boundaries in an unpersisted
                     # lineage) — slicing would silently shift rows
                     raise RuntimeError(
-                        "read_range: row group (%d,%d) is %s but the "
-                        "manifest pass saw %s — the input lineage "
-                        "re-materialized between the two actions. "
-                        "persist() + materialize enc_df (or encode from a "
-                        "deterministic source) before read_range."
-                        % (parts[i], idxs[i], ids[i], exp))
+                        "read_range: row group (%d,%d) has content key %s "
+                        "but the manifest pass saw %s — the input lineage "
+                        "re-materialized with different rows between the "
+                        "two actions. persist() + materialize enc_df (or "
+                        "encode from a deterministic source) before "
+                        "read_range." % (parts[i], idxs[i], cks[i], exp))
                 skip, take = bounds.get(key, (0, n_rows_col[i]))
                 whole = skip == 0 and take == n_rows_col[i]
                 yield _decode_groups(views, specs, out_schema, [i],

@@ -38,7 +38,7 @@ import os
 import re
 import struct
 from dataclasses import dataclass, field
-from decimal import ROUND_CEILING, ROUND_FLOOR, ROUND_HALF_EVEN
+from decimal import ROUND_CEILING, ROUND_FLOOR
 
 from .avro import read_ocf, write_ocf
 from .files import resolve_fs
@@ -85,11 +85,12 @@ def _decimal_scale(ice_type: str) -> int:
     return int(ice_type[ice_type.rindex(",") + 1:ice_type.rindex(")")])
 
 
-def ser_value(v, ice_type: str, rounding: str = ROUND_HALF_EVEN) -> bytes:
+def ser_value(v, ice_type: str, rounding: str) -> bytes:
     """Iceberg single-value serialization. `rounding` (a decimal module
     rounding mode) applies when a decimal carries more fractional digits
     than its scale: lower bounds pass ROUND_FLOOR and upper bounds
-    ROUND_CEILING, so a rounded bound still covers the value."""
+    ROUND_CEILING, so a rounded bound still covers the value. It has no
+    default, so no bound can be written in an unsound direction."""
     if ice_type == "int" or ice_type == "date":
         return struct.pack("<i", int(v))
     if ice_type == "long" or ice_type.startswith("timestamp"):
