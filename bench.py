@@ -99,8 +99,8 @@ def main():
     # need a few tasks each before allocation paths are warm). Headline path
     # is file-granular: tasks read parquet directly with pyarrow, so the hot
     # path never crosses the JVM row pivot (which saturates ~250 MB/s on
-    # this box regardless of cores). Shuffle-free; parallelism = one task
-    # per source file (256), identical at both parallelism levels.
+    # this box regardless of cores). Shuffle-free; one wave of tasks
+    # (one per core), each encoding a contiguous slice of the file list.
     # ENCODE_REPEAT mirrors the decode protocol: pass the file list N times
     # in ONE job so per-job fixed costs (stage setup, worker spin-up) don't
     # dominate few-second walls; reported numbers are per-pass -------------

@@ -205,8 +205,9 @@ def main():
         "(nested-schema pruning); blobs decode only after pruning. "
         "read_range prunes on (rg_part, rg_idx) the same way.",
         "5. **File-granular decode moves no data through the JVM**: its "
-        "plan distributes only the file list; blob bytes are read with "
-        "pyarrow inside tasks and only tiny invariant rows come back.",
+        "plan is a `Range` of one row per task (the file list rides in the "
+        "task closure); blob bytes are read with pyarrow inside tasks and "
+        "only tiny invariant rows come back.",
         "6. **dedup_embed joins bucket-equal only** — LSH signatures are "
         "pure projections; the pair join keys on (tbl, bucket); no cross "
         "join appears anywhere.",
@@ -243,12 +244,12 @@ def main():
         "cached index (O(log n) probed bounds), so the cluster-side plan "
         "never scans per-row-group stats at all.",
         f"14. Exchange count per plan: { {k: n for k, n in n_exchange.items()} }"
-        " — the only Exchanges in engine paths are the work-unit "
-        "distribution of FILE LISTS (path strings, not data) and, for "
-        "dedup_embed, the shuffles of the bucket-equality joins themselves "
-        "(keyed by uniformly-distributed hashes). Every data-carrying "
-        "encode/decode stage is Exchange-free. read_range's manifest "
-        "collect is a separate metadata-only job "
+        " — encode and decode have none on either path: file-granular "
+        "tasks start from a `Range` with one row per task and take their "
+        "slice of the file list from the task closure. The Exchanges that "
+        "remain are dedup_embed's bucket-equality join shuffles (keyed by "
+        "uniformly-distributed hashes) and sequence packing's (item 9). "
+        "read_range's manifest collect is a separate metadata-only job "
         "(rg_part/rg_idx/n_rows + a content key hashed from the meta "
         "stats).\n",
     ]

@@ -165,6 +165,64 @@ class TestDecodeFiles:
         assert abs(three[1] - 3 * one[1]) < 1e-6 * max(abs(three[1]), 1)
 
 
+def _plan(df) -> str:
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+class TestUnitTasks:
+    """Work units reach tasks through _unit_tasks: a spark.range with one
+    row per task and a contiguous unit slice per task — one wave by
+    default, no shuffle."""
+
+    @pytest.fixture(scope="class")
+    def eight_dir(self, spark, tmp_path_factory):
+        d = str(tmp_path_factory.mktemp("eight_src"))
+        synth_tokens_df(spark, 800, seed=11, mean_tokens=16, partitions=8) \
+            .write.mode("overwrite").parquet(d)
+        assert len(list_parquet_files(d)) == 8
+        return d
+
+    @pytest.mark.parametrize("n_tasks", [None, 3, 8, 20])
+    def test_roundtrip_at_any_task_count(self, spark, eight_dir, tmp_path,
+                                         n_tasks):
+        import pyarrow.parquet as pq
+
+        from tokenc.files import decode_files
+
+        want_parts = min(8, n_tasks or spark.sparkContext.defaultParallelism)
+        enc = encode_files(spark, eight_dir, SPECS, n_tasks=n_tasks)
+        assert enc.rdd.getNumPartitions() == want_parts
+        assert sorted(r[0] for r in enc.select("rg_part").distinct()
+                      .collect()) == list(range(8))
+        out = str(tmp_path / "enc")
+        enc.write.mode("overwrite").parquet(out)
+        dec = decode_files(spark, out, SPECS, TOKENS_ARROW_SCHEMA,
+                           n_tasks=n_tasks)
+        assert dec.rdd.getNumPartitions() == min(
+            len(list_parquet_files(out)), want_parts)
+        got = dec.toArrow().sort_by("doc_id")
+        src = pq.read_table(eight_dir).select(
+            TOKENS_ARROW_SCHEMA.names).sort_by("doc_id")
+        assert got.cast(src.schema).equals(src)
+
+    def test_plans_have_no_exchange(self, spark, eight_dir, tmp_path):
+        from tokenc.files import decode_files, decode_invariants_files
+
+        enc = encode_files(spark, eight_dir, SPECS)
+        out = str(tmp_path / "enc")
+        enc.write.mode("overwrite").parquet(out)
+        for df in (enc,
+                   decode_files(spark, out, SPECS, TOKENS_ARROW_SCHEMA),
+                   decode_invariants_files(spark, out, SPECS)):
+            assert "Exchange" not in _plan(df)
+
+
 class TestRemoteScheme:
     """Non-local source scheme end-to-end (reference source matrix,
     source/source.go:9-26 + README local/HDFS/S3/GCS): a real S3 protocol

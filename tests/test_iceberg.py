@@ -1233,6 +1233,33 @@ class TestCompaction:
         meta = table_metadata(root)
         assert meta["partition-specs"][0]["fields"][0]["name"] == "p"
 
+    def test_eight_units_yield_eight_outputs(self, spark, tmp_path):
+        """One task per compaction unit: every one of 8 per-partition
+        groups is rewritten, none doubled up or dropped."""
+        from tokenc.iceberg import compact_table
+
+        root = str(tmp_path / "ptbl8")
+        data = os.path.join(root, "data")
+        os.makedirs(data)
+        paths = []
+        for p in range(8):
+            for j in range(2):
+                path = os.path.join(data, f"p{p}_{j}.parquet")
+                pq.write_table(pa.table(
+                    {"p": pa.array([p] * 2, pa.int32()),
+                     "x": pa.array([4 * p + 2 * j, 4 * p + 2 * j + 1],
+                                   pa.int64())}), path)
+                paths.append(path)
+        build_table(root, paths, partition_by=("p",))
+        _, report = compact_table(spark, root)
+        assert report["outputs"] == 8 and report["rows_written"] == 32
+        plan = plan_files(root)
+        assert len(plan) == 8
+        assert all("compact" in d.path for d in plan)
+        assert sorted(d.partition["p"] for d in plan) == list(range(8))
+        got = pq.read_table([d.path for d in plan])["x"].to_pylist()
+        assert sorted(got) == list(range(32))
+
     def test_noop_returns_current_metadata(self, spark, table_dir):
         from tokenc.iceberg import compact_table
 

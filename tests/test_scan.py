@@ -244,6 +244,28 @@ class TestOnePredicatePath:
             assert "ArrowEvalPython" not in plan
             assert "BatchEvalPython" not in plan
 
+    def test_one_group_index_probe_coalesces(self, spark, scan_enc):
+        """An index-answered prune bounds the surviving groups at k, so the
+        decode runs in k tasks (Python runs even on empty partitions):
+        a one-group probe plans Coalesce 1 and returns the same rows as
+        the stats-only prune."""
+        import io
+        from contextlib import redirect_stdout
+
+        from tokenc.engine import scan
+
+        enc, specs, schema = scan_enc
+        flt = [("k", "between", (20_100, 20_120))]
+        df = scan(enc, specs, schema, flt)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain()
+        assert "Coalesce 1" in buf.getvalue()
+        got = _rows(df)
+        assert got["k"].tolist() == list(range(20_100, 20_121))
+        pd.testing.assert_frame_equal(
+            got, _rows(scan(enc, specs, schema, flt, auto_index=False)))
+
     def test_match_op_prunes_and_is_exact(self, spark, scan_enc):
         from pyspark.sql import functions as F
 

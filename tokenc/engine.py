@@ -1244,14 +1244,17 @@ def _conjuncts(spec_by: dict, filters):
 
 
 def _prune(enc_df, spec_by: dict, conj: list, indexes, auto_index: bool):
-    """prune() on normalised conjuncts: every _keep condition, ANDed into
-    one where. A column's index is `indexes[col]`, else — with
-    `auto_index`, and only on a persisted frame (_is_persisted) — the
-    memoized sorted_index_for: point conjuncts look each value up on any
-    layout (the prefix-max lookup is correct for any overlap pattern),
-    range conjuncts probe it only when it is clustered."""
+    """prune() on normalised conjuncts → (frame, k): every _keep
+    condition, ANDed into one where, and k, the fewest row groups any
+    index-answered conjunct kept (None when no index answered) — an
+    upper bound on the surviving groups. A column's index is
+    `indexes[col]`, else — with `auto_index`, and only on a persisted
+    frame (_is_persisted) — the memoized sorted_index_for: point
+    conjuncts look each value up on any layout (the prefix-max lookup is
+    correct for any overlap pattern), range conjuncts probe it only when
+    it is clustered."""
     points = {col for col, op, _ in conj if op == "in"}
-    auto, conds = {}, []
+    auto, conds, k = {}, [], None
     for col, op, val in conj:
         idx = (indexes or {}).get(col)
         if (idx is None and op != "match" and auto_index
@@ -1275,10 +1278,13 @@ def _prune(enc_df, spec_by: dict, conj: list, indexes, auto_index: bool):
             # unselective probe: a huge IN-list literal is worse than
             # the distributed stats prune
             ids = None
+        if ids is not None:
+            k = len(ids) if k is None else min(k, len(ids))
         cond = _keep(spec_by[col], op, val, ids)
         if cond is not None:
             conds.append(cond)
-    return enc_df.where(reduce(operator.and_, conds)) if conds else enc_df
+    return (enc_df.where(reduce(operator.and_, conds)) if conds
+            else enc_df), k
 
 
 def prune(enc_df, specs: list[ColumnSpec], filters,
@@ -1295,7 +1301,7 @@ def prune(enc_df, specs: list[ColumnSpec], filters,
     metadata-side bloom prune."""
     spec_by = {s.name: s for s in specs}
     return _prune(enc_df, spec_by, _conjuncts(spec_by, filters)[0],
-                  indexes, auto_index)
+                  indexes, auto_index)[0]
 
 
 def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
@@ -1310,7 +1316,9 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
 
       1. ROW GROUPS: prune() — every conjunct's manifest keep condition
          (sorted-index rg_id IN-list, min/max, distinct set) in one where.
-      2. ONE DECODE TASK per batch of surviving row groups: point
+      2. ONE DECODE TASK per batch of surviving row groups (when an
+         index bounds the survivors at k, the frame coalesces to k
+         partitions, so no Python task starts on an empty one): point
          conjuncts check the chunk's bloom per value (a group where some
          point conjunct has no value left is skipped); then the page
          directory of the driving conjunct's column (`page_column`,
@@ -1342,7 +1350,11 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         raise KeyError(
             f"page_column {page_column!r} not in projected specs")
     conj, residual = _conjuncts(spec_by, filters)
-    pruned = _prune(enc_df, spec_by, conj, indexes, auto_index)
+    pruned, k = _prune(enc_df, spec_by, conj, indexes, auto_index)
+    if k is not None:
+        # at most k groups survive: Python runs for every partition of
+        # the decode, empty ones included, so fold them into k tasks
+        pruned = pruned.coalesce(max(1, k))
 
     # the driving conjunct: only bounds the page directory can compare
     # qualify (numeric or str/bytes — a date/Decimal literal against raw

@@ -270,6 +270,31 @@ def _load_delete_positions(path: str, fs, delete_files, key: str = ""):
     return np.unique(np.concatenate(parts))
 
 
+def _unit_tasks(spark, units: list, n_tasks: int | None = None):
+    """Work units → (task DataFrame, task_units). The DataFrame is
+    `spark.range(0, n, 1, n)`: one row per partition, partition k holding
+    id k. `task_units(batches)`, run inside the task, yields task k's
+    contiguous, count-balanced slice units[k*len//n:(k+1)*len//n] from the
+    list captured in the closure — the unit list never crosses into the
+    JVM and no shuffle spreads it.
+
+    The default n is one wave, min(len(units), defaultParallelism): a
+    Python task costs ~40-75 ms of fixed overhead and mapInArrow runs
+    Python even on an empty partition, so a second wave or a round-robin
+    repartition costs more than it balances. Units balance by count, not
+    bytes; an explicit `n_tasks` (clamped to len(units)) overrides."""
+    n = max(1, min(len(units),
+                   n_tasks or spark.sparkContext.defaultParallelism))
+
+    def task_units(batches: Iterator[pa.RecordBatch]):
+        for b in batches:
+            for k in b.column(0).to_pylist():
+                yield from units[k * len(units) // n:
+                                 (k + 1) * len(units) // n]
+
+    return spark.range(0, n, 1, n), task_units
+
+
 def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
                  target_raw_bytes: int = DEFAULT_TARGET_RAW_BYTES,
                  tasks_per_file: int = 1,
@@ -324,139 +349,121 @@ def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
         key = file_keys[i] if file_keys is not None else ""
         for s in range(tasks_per_file):
             units.append((i, p, s, tasks_per_file, seq, key))
-    # several units per task (~3 waves/core): per-task fixed costs — python
-    # worker turnaround and, above all, the selector's measured refinement
-    # (fresh memo per task) — amortize across that task's files. rg_part/
-    # rg_idx derive from the UNIT, so output ordering is task-layout-free.
-    if n_tasks is None:
-        n_tasks = max(1, min(len(units),
-                             spark.sparkContext.defaultParallelism * 3))
-    fdf = spark.createDataFrame(
-        units,
-        "file_idx int, path string, split_idx int, n_splits int, "
-        "seq long, key string"
-    ).repartition(n_tasks)
+    # rg_part/rg_idx derive from the UNIT, so output ordering is
+    # task-layout-free
+    tasks, task_units = _unit_tasks(spark, units, n_tasks)
 
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         from .selector import WORKER_MEMO as sel_cache  # per-WORKER memo
         eq_cache: dict = {}  # delete parquet path → deduped current-name table
-        for b in batches:
-            for unit in b.to_pylist():
-                pf = pq.ParquetFile(unit["path"], filesystem=fs)
-                n_rg = pf.metadata.num_row_groups
-                k, m = unit["split_idx"], unit["n_splits"]
-                # contiguous balanced range of parquet row groups per split
-                lo_rg, hi_rg = (k * n_rg) // m, ((k + 1) * n_rg) // m
-                rgs = list(range(lo_rg, hi_rg))
-                if not rgs:
-                    continue
-                dels = (_load_delete_positions(unit["path"], fs,
-                                               delete_files, unit["key"])
-                        if delete_files else None)
-                eq_tables = (_load_eq_tables(fs, equality_deletes,
-                                             unit["seq"], eq_cache)
-                             if equality_deletes else [])
-                eq_cols = list(dict.fromkeys(
-                    c for t in eq_tables for c in t.column_names))
-                wanted = cols + [c for c in eq_cols if c not in cols]
-                read_map = _resolve_read(pf.schema_arrow, wanted,
-                                         column_resolution)
-                # an equality column this file predates reads all-null
-                # here; spec equality matches null TO null, so the table
-                # still applies through delete rows whose key is null in
-                # every missing column — droppable only when some missing
-                # column has no null keys at all (then nothing can match)
-                eq_tables = [t for t in eq_tables
-                             if all(read_map[c] is not None
-                                    or t[c].null_count > 0
-                                    for c in t.column_names)]
-                eq_type = {c: t.schema.field(c).type
-                           for t in eq_tables for c in t.column_names}
-                wanted = cols + [c for c in eq_cols
-                                 if c not in cols and any(
-                                     c in t.column_names for t in eq_tables)]
-                remap = (bool(eq_tables) or wanted != cols
-                         or any(read_map[w] != w for w in cols))
-                read_cols = (cols if not remap else list(dict.fromkeys(
-                    v for w in wanted if (v := read_map[w]) is not None)))
-                if remap and not read_cols:
-                    # every wanted column postdates this file: read one
-                    # physical column purely to carry the row count
-                    read_cols = [pf.schema_arrow.names[0]]
+        for file_idx, path, k, m, seq, key in task_units(batches):
+            pf = pq.ParquetFile(path, filesystem=fs)
+            n_rg = pf.metadata.num_row_groups
+            # contiguous balanced range of parquet row groups per split
+            lo_rg, hi_rg = (k * n_rg) // m, ((k + 1) * n_rg) // m
+            rgs = list(range(lo_rg, hi_rg))
+            if not rgs:
+                continue
+            dels = (_load_delete_positions(path, fs, delete_files, key)
+                    if delete_files else None)
+            eq_tables = (_load_eq_tables(fs, equality_deletes, seq, eq_cache)
+                         if equality_deletes else [])
+            eq_cols = list(dict.fromkeys(
+                c for t in eq_tables for c in t.column_names))
+            wanted = cols + [c for c in eq_cols if c not in cols]
+            read_map = _resolve_read(pf.schema_arrow, wanted,
+                                     column_resolution)
+            # an equality column this file predates reads all-null
+            # here; spec equality matches null TO null, so the table
+            # still applies through delete rows whose key is null in
+            # every missing column — droppable only when some missing
+            # column has no null keys at all (then nothing can match)
+            eq_tables = [t for t in eq_tables
+                         if all(read_map[c] is not None
+                                or t[c].null_count > 0
+                                for c in t.column_names)]
+            eq_type = {c: t.schema.field(c).type
+                       for t in eq_tables for c in t.column_names}
+            wanted = cols + [c for c in eq_cols
+                             if c not in cols and any(
+                                 c in t.column_names for t in eq_tables)]
+            remap = (bool(eq_tables) or wanted != cols
+                     or any(read_map[w] != w for w in cols))
+            read_cols = (cols if not remap else list(dict.fromkeys(
+                v for w in wanted if (v := read_map[w]) is not None)))
+            if remap and not read_cols:
+                # every wanted column postdates this file: read one
+                # physical column purely to carry the row count
+                read_cols = [pf.schema_arrow.names[0]]
 
-                def remap_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
-                    arrays = []
-                    for w in wanted:
-                        fn = read_map[w]
-                        arrays.append(
-                            pa.nulls(rb.num_rows,
-                                     _pa_of_spec(spec_by[w])
-                                     if w in spec_by else eq_type[w])
-                            if fn is None else
-                            rb.column(rb.schema.names.index(fn)))
-                    return pa.RecordBatch.from_arrays(arrays, names=wanted)
+            def remap_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+                arrays = []
+                for w in wanted:
+                    fn = read_map[w]
+                    arrays.append(
+                        pa.nulls(rb.num_rows,
+                                 _pa_of_spec(spec_by[w])
+                                 if w in spec_by else eq_type[w])
+                        if fn is None else
+                        rb.column(rb.schema.names.index(fn)))
+                return pa.RecordBatch.from_arrays(arrays, names=wanted)
 
-                row_off = sum(pf.metadata.row_group(g).num_rows
-                              for g in range(lo_rg))
+            row_off = sum(pf.metadata.row_group(g).num_rows
+                          for g in range(lo_rg))
 
-                def source():
-                    """(batch, keep-mask) per parquet batch: position and
-                    equality deletes become ONE mask, applied by the
-                    accumulator after any oversized-batch cut."""
-                    import numpy as np
+            def source():
+                """(batch, keep-mask) per parquet batch: position and
+                equality deletes become ONE mask, applied by the
+                accumulator after any oversized-batch cut."""
+                import numpy as np
 
-                    file_pos = row_off  # pre-delete read cursor
-                    for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
-                                              row_groups=rgs,
-                                              columns=read_cols):
-                        n_src = rb.num_rows
-                        keep = np.ones(n_src, dtype=bool)
-                        if dels is not None and len(dels):
-                            lo = np.searchsorted(dels, file_pos)
-                            hi = np.searchsorted(dels, file_pos + n_src)
-                            keep[dels[lo:hi] - file_pos] = False
-                        file_pos += n_src
-                        if remap:
-                            rb = remap_batch(rb)
-                            if eq_tables:
-                                keep &= _eq_keep_mask(rb, eq_tables)
-                            if wanted != cols:
-                                rb = rb.select(cols)
-                        yield rb, (None if keep.all() else keep)
+                file_pos = row_off  # pre-delete read cursor
+                for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
+                                          row_groups=rgs,
+                                          columns=read_cols):
+                    n_src = rb.num_rows
+                    keep = np.ones(n_src, dtype=bool)
+                    if dels is not None and len(dels):
+                        lo = np.searchsorted(dels, file_pos)
+                        hi = np.searchsorted(dels, file_pos + n_src)
+                        keep[dels[lo:hi] - file_pos] = False
+                    file_pos += n_src
+                    if remap:
+                        rb = remap_batch(rb)
+                        if eq_tables:
+                            keep &= _eq_keep_mask(rb, eq_tables)
+                        if wanted != cols:
+                            rb = rb.select(cols)
+                    yield rb, (None if keep.all() else keep)
 
-                # rg_idx = absolute starting row offset of the group in the
-                # file: a total file-position order no matter how parquet
-                # row groups and group boundaries interleave. With deletes
-                # it stays the PRE-delete offset (offsets remain strictly
-                # increasing, which is all the ordering contract needs).
-                for row, start in _encode_batches(
-                        source(), specs, target_raw_bytes, DEFAULT_PAGE_BYTES,
-                        sel_cache):
-                    if row_off + start > 0x7FFFFFFF:
-                        raise ValueError("file exceeds 2^31 rows; rg_idx overflow")
-                    row["rg_part"] = unit["file_idx"]
-                    row["rg_idx"] = row_off + start
-                    yield pa.RecordBatch.from_pylist([row], schema=out_schema)
+            # rg_idx = absolute starting row offset of the group in the
+            # file: a total file-position order no matter how parquet
+            # row groups and group boundaries interleave. With deletes
+            # it stays the PRE-delete offset (offsets remain strictly
+            # increasing, which is all the ordering contract needs).
+            for row, start in _encode_batches(
+                    source(), specs, target_raw_bytes, DEFAULT_PAGE_BYTES,
+                    sel_cache):
+                if row_off + start > 0x7FFFFFFF:
+                    raise ValueError("file exceeds 2^31 rows; rg_idx overflow")
+                row["rg_part"] = file_idx
+                row["rg_idx"] = row_off + start
+                yield pa.RecordBatch.from_pylist([row], schema=out_schema)
 
-    return fdf.mapInArrow(encode_fn, from_arrow_schema(out_schema))
+    return tasks.mapInArrow(encode_fn, from_arrow_schema(out_schema))
 
 
-def _files_df(spark, enc_path: str | list[str], n_tasks: int | None = None,
-              filesystem=None):
-    """File list → one partition per task, several files per partition.
-    Blob files are often small (one tokenc row group each); one task per
-    file would drown useful work in task overhead, so default to ~3 waves
-    per core and let each task stream its file subset."""
+def _files_tasks(spark, enc_path: str | list[str], n_tasks: int | None,
+                 filesystem):
+    """Blob file list → (filesystem, task DataFrame, task_units): the
+    _unit_tasks layout over encoded files, each task streaming its own
+    contiguous file subset."""
     fs, files = _list_fs(enc_path, filesystem)
     if not files:
         raise ValueError(f"no parquet files under {enc_path}")
-    if n_tasks is None:
-        n_tasks = max(1, min(len(files),
-                             spark.sparkContext.defaultParallelism * 3))
-    return fs, spark.createDataFrame([(p,) for p in files], "path string") \
-        .repartition(n_tasks)
+    return (fs, *_unit_tasks(spark, files, n_tasks))
 
 
 def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
@@ -468,7 +475,8 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
     boundary (unavoidable when the result must be a DataFrame of rows).
     """
     blob_cols = [f"{s.name}_blob" for s in specs]
-    fs, fdf = _files_df(spark, enc_path, n_tasks, filesystem)
+    fs, tasks, task_units = _files_tasks(spark, enc_path, n_tasks,
+                                         filesystem)
     # Spark has no FixedSizeBinary type: FLBA columns surface as plain
     # binary at the DataFrame boundary (exactly Spark's own FLBA-parquet
     # behavior); Arrow-native consumers use tokenc.local for the exact type
@@ -481,19 +489,18 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        for b in batches:
-            for unit in b.to_pylist():
-                pf = pq.ParquetFile(unit["path"], filesystem=fs)
-                for rb in pf.iter_batches(batch_size=DECODE_GROUPS,
-                                          columns=blob_cols):
-                    tbl = pa.Table.from_batches([rb])
-                    views = [_blob_views(tbl, c) for c in blob_cols]
-                    out = _decode_groups(views, specs, out_schema,
-                                         range(tbl.num_rows))
-                    if out is not None:
-                        yield out.cast(spark_schema) if has_flba else out
+        for path in task_units(batches):
+            pf = pq.ParquetFile(path, filesystem=fs)
+            for rb in pf.iter_batches(batch_size=DECODE_GROUPS,
+                                      columns=blob_cols):
+                tbl = pa.Table.from_batches([rb])
+                views = [_blob_views(tbl, c) for c in blob_cols]
+                out = _decode_groups(views, specs, out_schema,
+                                     range(tbl.num_rows))
+                if out is not None:
+                    yield out.cast(spark_schema) if has_flba else out
 
-    return fdf.mapInArrow(fn, from_arrow_schema(spark_schema))
+    return tasks.mapInArrow(fn, from_arrow_schema(spark_schema))
 
 
 def decode_invariants_files(spark, enc_path: str | list[str],
@@ -506,21 +513,21 @@ def decode_invariants_files(spark, enc_path: str | list[str],
     Arrow buffer → numpy view → decode kernels) with zero JVM involvement
     beyond task scheduling."""
     blob_cols = [f"{s.name}_blob" for s in specs]
-    fs, fdf = _files_df(spark, enc_path, n_tasks, filesystem)
+    fs, tasks, task_units = _files_tasks(spark, enc_path, n_tasks,
+                                         filesystem)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        for b in batches:
-            for unit in b.to_pylist():
-                pf = pq.ParquetFile(unit["path"], filesystem=fs)
-                rows = []
-                for rb in pf.iter_batches(batch_size=INVARIANT_GROUPS,
-                                          columns=blob_cols):
-                    tbl = pa.Table.from_batches([rb])
-                    views = [_blob_views(tbl, c) for c in blob_cols]
-                    rows.extend(_invariant_rows(views, specs))
-                if rows:
-                    yield pa.RecordBatch.from_pylist(rows, schema=INVARIANT_SCHEMA)
+        for path in task_units(batches):
+            pf = pq.ParquetFile(path, filesystem=fs)
+            rows = []
+            for rb in pf.iter_batches(batch_size=INVARIANT_GROUPS,
+                                      columns=blob_cols):
+                tbl = pa.Table.from_batches([rb])
+                views = [_blob_views(tbl, c) for c in blob_cols]
+                rows.extend(_invariant_rows(views, specs))
+            if rows:
+                yield pa.RecordBatch.from_pylist(rows, schema=INVARIANT_SCHEMA)
 
-    return fdf.mapInArrow(fn, from_arrow_schema(INVARIANT_SCHEMA))
+    return tasks.mapInArrow(fn, from_arrow_schema(INVARIANT_SCHEMA))

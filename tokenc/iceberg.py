@@ -1712,7 +1712,8 @@ def compact_table(spark, table_dir: str, *, target_file_bytes: int = 128 << 20,
     import pyarrow.parquet as pq
 
     from .files import (_eq_keep_mask, _load_delete_positions,
-                        _load_eq_tables, _resolve_read, resolve_fs as _rfs)
+                        _load_eq_tables, _resolve_read, _unit_tasks,
+                        resolve_fs as _rfs)
 
     root = os.path.abspath(_strip_scheme(table_dir))
     meta = table_metadata(table_dir, filesystem)
@@ -1764,74 +1765,63 @@ def compact_table(spark, table_dir: str, *, target_file_bytes: int = 128 << 20,
     part_by_out = {u["out"]: dict(g[0].partition or {})
                    for u, g in zip(units, groups)}
 
-    def rewrite(iter_pdf):
+    tasks, task_units = _unit_tasks(spark, units, len(units))
+
+    def rewrite(batches):
         fs0, _ = _rfs(root, filesystem)
         eq_cache: dict = {}
-        for pdf in iter_pdf:
-            for _, row in pdf.iterrows():
-                out_path = row["out"]
-                paths = json.loads(row["paths"])
-                keys = json.loads(row["keys"])
-                seqs = json.loads(row["seqs"])
-                tables = []
-                for p, key, seq in zip(paths, keys, seqs):
-                    pf = pq.ParquetFile(p, filesystem=fs0)
-                    dl = (_load_delete_positions(p, fs0, pos_paths, key)
-                          if pos_paths else None)
-                    eq_tables = (_load_eq_tables(fs0, eq_payload, seq,
-                                                 eq_cache)
-                                 if eq_payload else [])
-                    rm = _resolve_read(pf.schema_arrow, wanted, resolution)
-                    eq_tables = [t for t in eq_tables
-                                 if all(rm.get(c) is not None
-                                        for c in t.column_names)]
-                    t = pf.read()
-                    if dl is not None and len(dl):
-                        import numpy as np
-                        mask = np.ones(t.num_rows, dtype=bool)
-                        mask[dl[dl < t.num_rows]] = False
-                        t = t.filter(pa.array(mask))
-                    arrays, fields = [], []
-                    for name, fid, ft in cur_fields:
-                        fn = rm.get(name)
-                        if fn is None:
-                            if not isinstance(ft, str):
-                                raise NotImplementedError(
-                                    f"cannot null-fill nested column "
-                                    f"{name!r} missing from {p}")
-                            arr = pa.nulls(t.num_rows, _pa_of_ice(ft))
-                        else:
-                            arr = t[fn]
-                        arrays.append(arr)
-                        fields.append(pa.field(
-                            name,
-                            arr.type,
-                            metadata={b"PARQUET:field_id":
-                                      str(fid).encode()}))
-                    t = pa.Table.from_arrays(
-                        [pa.chunked_array([a]) if not isinstance(
-                            a, pa.ChunkedArray) else a for a in arrays],
-                        schema=pa.schema(fields))
-                    if eq_tables:
-                        keeps = [_eq_keep_mask(rb, eq_tables)
-                                 for rb in t.to_batches()]
-                        import numpy as np
-                        t = t.filter(pa.array(np.concatenate(keeps))
-                                     if keeps else pa.array([], pa.bool_()))
-                    tables.append(t)
-                out = pa.concat_tables(tables)
-                pq.write_table(out, out_path,
-                               compression=parquet_compression)
-                import pandas as pd
-                yield pd.DataFrame([{"out": out_path,
-                                     "n_rows": out.num_rows}])
+        for u in task_units(batches):
+            tables = []
+            for p, key, seq in zip(u["paths"], u["keys"], u["seqs"]):
+                pf = pq.ParquetFile(p, filesystem=fs0)
+                dl = (_load_delete_positions(p, fs0, pos_paths, key)
+                      if pos_paths else None)
+                eq_tables = (_load_eq_tables(fs0, eq_payload, seq, eq_cache)
+                             if eq_payload else [])
+                rm = _resolve_read(pf.schema_arrow, wanted, resolution)
+                eq_tables = [t for t in eq_tables
+                             if all(rm.get(c) is not None
+                                    for c in t.column_names)]
+                t = pf.read()
+                if dl is not None and len(dl):
+                    import numpy as np
+                    mask = np.ones(t.num_rows, dtype=bool)
+                    mask[dl[dl < t.num_rows]] = False
+                    t = t.filter(pa.array(mask))
+                arrays, fields = [], []
+                for name, fid, ft in cur_fields:
+                    fn = rm.get(name)
+                    if fn is None:
+                        if not isinstance(ft, str):
+                            raise NotImplementedError(
+                                f"cannot null-fill nested column "
+                                f"{name!r} missing from {p}")
+                        arr = pa.nulls(t.num_rows, _pa_of_ice(ft))
+                    else:
+                        arr = t[fn]
+                    arrays.append(arr)
+                    fields.append(pa.field(
+                        name,
+                        arr.type,
+                        metadata={b"PARQUET:field_id":
+                                  str(fid).encode()}))
+                t = pa.Table.from_arrays(
+                    [pa.chunked_array([a]) if not isinstance(
+                        a, pa.ChunkedArray) else a for a in arrays],
+                    schema=pa.schema(fields))
+                if eq_tables:
+                    keeps = [_eq_keep_mask(rb, eq_tables)
+                             for rb in t.to_batches()]
+                    import numpy as np
+                    t = t.filter(pa.array(np.concatenate(keeps))
+                                 if keeps else pa.array([], pa.bool_()))
+                tables.append(t)
+            out = pa.concat_tables(tables)
+            pq.write_table(out, u["out"], compression=parquet_compression)
+            yield pa.RecordBatch.from_pylist(
+                [{"out": u["out"], "n_rows": out.num_rows}])
 
-    desc = spark.createDataFrame(
-        [(u["out"], json.dumps(u["paths"]), json.dumps(u["keys"]),
-          json.dumps(u["seqs"])) for u in units],
-        "out string, paths string, keys string, seqs string")
-    done = (desc.repartition(len(units), "out")
-            .mapInPandas(rewrite, "out string, n_rows long").collect())
+    done = tasks.mapInArrow(rewrite, "out string, n_rows long").collect()
     got = {r["out"] for r in done}
     missing = [u["out"] for u in units if u["out"] not in got]
     if missing:

@@ -99,6 +99,7 @@ def read_avro(spark: SparkSession, path, *, filesystem=None) -> DataFrame:
 
     from .avro import read_ocf
     from .engine import from_arrow_schema
+    from .files import _unit_tasks
 
     fs, files = _list_fs_avro(path, filesystem)
     if not files:
@@ -109,22 +110,19 @@ def read_avro(spark: SparkSession, path, *, filesystem=None) -> DataFrame:
                               for f in schema_json["fields"]])
     names = [f.name for f in arrow_schema]
 
-    fdf = spark.createDataFrame([(p,) for p in files], "path string") \
-        .repartition(min(len(files),
-                         spark.sparkContext.defaultParallelism * 2))
+    tasks, task_units = _unit_tasks(spark, files)
 
     def fn(batches):
-        for b in batches:
-            for unit in b.to_pylist():
-                with fs.open_input_file(unit["path"]) as fobj:
-                    _, records = read_ocf(fobj.read())
-                if records:
-                    tbl = pa.Table.from_pylist(
-                        [{k: r.get(k) for k in names} for r in records],
-                        schema=arrow_schema)
-                    yield from tbl.to_batches(max_chunksize=8192)
+        for path in task_units(batches):
+            with fs.open_input_file(path) as fobj:
+                _, records = read_ocf(fobj.read())
+            if records:
+                tbl = pa.Table.from_pylist(
+                    [{k: r.get(k) for k in names} for r in records],
+                    schema=arrow_schema)
+                yield from tbl.to_batches(max_chunksize=8192)
 
-    return fdf.mapInArrow(fn, from_arrow_schema(arrow_schema))
+    return tasks.mapInArrow(fn, from_arrow_schema(arrow_schema))
 
 
 def _list_fs_avro(path, filesystem):

@@ -34,9 +34,9 @@ MEASURE_SAMPLE = 131072  # container-aware refinement sample (see below)
 # Worker-process-level memo for the measured refinement. Spark reuses
 # python workers across tasks (spark.python.worker.reuse), so keying the
 # memo at module scope amortizes the measured pass to ~once per column per
-# WORKER instead of once per task — at 32 cores × 3 task waves that is 3×
-# fewer refinements, and the saving grows with core count (a per-task memo
-# anti-scales: more cores → more tasks → more refinements). Entries are a
+# WORKER instead of once per task — the saving grows with the tasks each
+# worker runs (a per-task memo anti-scales: more cores → more tasks → more
+# refinements). Entries are a
 # few bytes each, keyed by (column, shortlist, model-pick, container) — the
 # distribution signature — so a shifted stream re-measures.
 WORKER_MEMO: dict = {}
