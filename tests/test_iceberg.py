@@ -1260,6 +1260,68 @@ class TestCompaction:
         got = pq.read_table([d.path for d in plan])["x"].to_pylist()
         assert sorted(got) == list(range(32))
 
+    def test_null_key_eq_delete_on_added_column_stays_applied(
+            self, spark, tmp_path):
+        """An equality delete keyed on (x, b), b added after the files
+        were written: the files read b as null, so the delete row
+        (2, NULL) matches x=2. Compaction must drop that row like the scan
+        does, not bring it back."""
+        from tokenc.iceberg import compact_table, evolve_schema
+
+        root = str(tmp_path / "tbl")
+        data = os.path.join(root, "data")
+        os.makedirs(data)
+        paths = []
+        for name, xs in (("a.parquet", [1, 2, 3]), ("b.parquet", [7])):
+            paths.append(os.path.join(data, name))
+            pq.write_table(pa.table({"x": pa.array(xs, pa.int32())}),
+                           paths[-1])
+        build_table(root, paths)
+        m2 = evolve_schema(root, adds=[("b", "int")])
+        build_table(root, [], snapshot_id=2, parent=m2,
+                    equality_deletes=(["x", "b"], [(2, None)]))
+        schema = pa.schema([pa.field("x", pa.int32()),
+                            pa.field("b", pa.int32())])
+
+        def scan():
+            return sorted((r["x"], r["b"])
+                          for r in _decode_tbl(spark, root, schema))
+
+        before = scan()
+        assert before == [(1, None), (3, None), (7, None)]
+        _, report = compact_table(spark, root)
+        assert report["rows_written"] == 3
+        assert plan_deletes(root) == []
+        assert scan() == before
+
+    def test_added_timestamp_column_compacts(self, spark, tmp_path):
+        """Files that predate an added timestamp column read it as null,
+        in the scan and in the compaction rewrite alike."""
+        from tokenc.iceberg import compact_table, evolve_schema
+
+        root = str(tmp_path / "tbl")
+        data = os.path.join(root, "data")
+        os.makedirs(data)
+        paths = []
+        for name, xs in (("a.parquet", [1, 2]), ("b.parquet", [3])):
+            paths.append(os.path.join(data, name))
+            pq.write_table(pa.table({"x": pa.array(xs, pa.int32())}),
+                           paths[-1])
+        build_table(root, paths)
+        evolve_schema(root, adds=[("ts", "timestamp")])
+        schema = pa.schema([pa.field("x", pa.int32()),
+                            pa.field("ts", pa.timestamp("us"))])
+
+        def scan():
+            return sorted((r["x"], r["ts"])
+                          for r in _decode_tbl(spark, root, schema))
+
+        before = scan()
+        assert before == [(1, None), (2, None), (3, None)]
+        _, report = compact_table(spark, root)
+        assert report["outputs"] == 1 and report["rows_written"] == 3
+        assert scan() == before
+
     def test_noop_returns_current_metadata(self, spark, table_dir):
         from tokenc.iceberg import compact_table
 

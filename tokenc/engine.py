@@ -24,7 +24,6 @@ from __future__ import annotations
 import hashlib
 import json
 import operator
-import os
 import zlib
 from collections.abc import Iterator
 from functools import reduce
@@ -375,7 +374,7 @@ META_FIELDS = [
     ("min_json", pa.string()), ("max_json", pa.string()),
     ("bloom", pa.binary()),  # split-block bloom filter (tokenc/bloom.py)
     # JSON array of the chunk's distinct values when the spec opts in and
-    # cardinality <= TOKENC_DISTINCT_MAX (dictionary-page pruning at
+    # cardinality <= DISTINCT_MAX (dictionary-page pruning at
     # metadata scale); null otherwise
     ("distinct_json", pa.string()),
     # CRC32 (zlib) of the raw blob bytes — bit-rot detection for archives
@@ -389,7 +388,7 @@ META_FIELDS = [
     ("sorted", pa.bool_()),
 ]
 
-DISTINCT_MAX = int(os.environ.get("TOKENC_DISTINCT_MAX", "64"))
+DISTINCT_MAX = 64
 
 
 def _chunk_distinct(parts: dict, spec: ColumnSpec) -> str | None:

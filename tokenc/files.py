@@ -270,6 +270,86 @@ def _load_delete_positions(path: str, fs, delete_files, key: str = ""):
     return np.unique(np.concatenate(parts))
 
 
+def _read_data_file(pf, rgs: range, fill: dict,
+                    column_resolution: dict | None, fs, path: str, key: str,
+                    seq: int, delete_files, equality_deletes, eq_cache: dict):
+    """The merge-on-read read of one data file: row groups `rgs` of the
+    open ParquetFile `pf` → (batch, keep) per parquet batch, the batch
+    holding the CURRENT-schema columns `fill` in its order and keep None or
+    the boolean mask of rows the file's deletes leave. `fill` maps each
+    column to the Arrow type it null-fills with when the file predates it
+    (None: not fillable). Columns resolve through `_resolve_read`;
+    position deletes (`delete_files`, matched on `path` and the manifest
+    `key`) and the equality deletes that apply to sequence number `seq`
+    load here, equality tables cached per task in `eq_cache`. With no
+    deletes and no column remap the batches stream straight from parquet.
+    The scan encode and compaction both read data files through this."""
+    import numpy as np
+
+    cols = list(fill)
+    dels = (_load_delete_positions(path, fs, delete_files, key)
+            if delete_files else None)
+    eq_tables = (_load_eq_tables(fs, equality_deletes, seq, eq_cache)
+                 if equality_deletes else [])
+    eq_cols = list(dict.fromkeys(c for t in eq_tables for c in t.column_names))
+    read_map = _resolve_read(pf.schema_arrow,
+                             cols + [c for c in eq_cols if c not in fill],
+                             column_resolution)
+    # an equality column this file predates reads all-null here; spec
+    # equality matches null TO null, so the table still applies through
+    # delete rows whose key is null in every missing column — droppable
+    # only when some missing column has no null keys at all (then nothing
+    # can match)
+    eq_tables = [t for t in eq_tables
+                 if all(read_map[c] is not None or t[c].null_count > 0
+                        for c in t.column_names)]
+    types = {c: t.schema.field(c).type
+             for t in eq_tables for c in t.column_names}
+    types.update(fill)
+    wanted = cols + [c for c in types if c not in fill]
+    remap = (bool(eq_tables) or wanted != cols
+             or any(read_map[w] != w for w in cols))
+    read_cols = (cols if not remap else list(dict.fromkeys(
+        v for w in wanted if (v := read_map[w]) is not None)))
+    if remap and not read_cols:
+        # every wanted column postdates this file: read one physical
+        # column purely to carry the row count
+        read_cols = [pf.schema_arrow.names[0]]
+
+    def remap_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+        arrays = []
+        for w in wanted:
+            fn = read_map[w]
+            if fn is None and types[w] is None:
+                raise NotImplementedError(f"cannot null-fill column {w!r} "
+                                          f"missing from {path}")
+            arrays.append(pa.nulls(rb.num_rows, types[w]) if fn is None
+                          else rb.column(rb.schema.names.index(fn)))
+        return pa.RecordBatch.from_arrays(arrays, names=wanted)
+
+    file_pos = sum(pf.metadata.row_group(g).num_rows  # pre-delete cursor
+                   for g in range(rgs.start))
+    for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
+                              row_groups=rgs, columns=read_cols):
+        n = rb.num_rows
+        keep = None
+        if dels is not None:
+            hit = dels[np.searchsorted(dels, file_pos):
+                       np.searchsorted(dels, file_pos + n)]
+            if len(hit):
+                keep = np.ones(n, dtype=bool)
+                keep[hit - file_pos] = False
+        file_pos += n
+        if remap:
+            rb = remap_batch(rb)
+            if eq_tables:
+                eq_keep = _eq_keep_mask(rb, eq_tables)
+                keep = eq_keep if keep is None else keep & eq_keep
+            if wanted != cols:
+                rb = rb.select(cols)
+        yield rb, (None if keep is None or keep.all() else keep)
+
+
 def _unit_tasks(spark, units: list, n_tasks: int | None = None):
     """Work units → (task DataFrame, task_units). The DataFrame is
     `spark.range(0, n, 1, n)`: one row per partition, partition k holding
@@ -339,8 +419,7 @@ def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
         raise ValueError("file_seqs must align 1:1 with the resolved files")
     if file_keys is not None and len(file_keys) != len(files):
         raise ValueError("file_keys must align 1:1 with the resolved files")
-    cols = [s.name for s in specs]
-    spec_by = {s.name: s for s in specs}
+    fill = {s.name: _pa_of_spec(s) for s in specs}
     out_schema = encoded_schema(specs)
 
     units = []  # (file_idx, path, split_idx, n_splits, seq, key)
@@ -362,89 +441,21 @@ def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
             pf = pq.ParquetFile(path, filesystem=fs)
             n_rg = pf.metadata.num_row_groups
             # contiguous balanced range of parquet row groups per split
-            lo_rg, hi_rg = (k * n_rg) // m, ((k + 1) * n_rg) // m
-            rgs = list(range(lo_rg, hi_rg))
+            rgs = range((k * n_rg) // m, ((k + 1) * n_rg) // m)
             if not rgs:
                 continue
-            dels = (_load_delete_positions(path, fs, delete_files, key)
-                    if delete_files else None)
-            eq_tables = (_load_eq_tables(fs, equality_deletes, seq, eq_cache)
-                         if equality_deletes else [])
-            eq_cols = list(dict.fromkeys(
-                c for t in eq_tables for c in t.column_names))
-            wanted = cols + [c for c in eq_cols if c not in cols]
-            read_map = _resolve_read(pf.schema_arrow, wanted,
-                                     column_resolution)
-            # an equality column this file predates reads all-null
-            # here; spec equality matches null TO null, so the table
-            # still applies through delete rows whose key is null in
-            # every missing column — droppable only when some missing
-            # column has no null keys at all (then nothing can match)
-            eq_tables = [t for t in eq_tables
-                         if all(read_map[c] is not None
-                                or t[c].null_count > 0
-                                for c in t.column_names)]
-            eq_type = {c: t.schema.field(c).type
-                       for t in eq_tables for c in t.column_names}
-            wanted = cols + [c for c in eq_cols
-                             if c not in cols and any(
-                                 c in t.column_names for t in eq_tables)]
-            remap = (bool(eq_tables) or wanted != cols
-                     or any(read_map[w] != w for w in cols))
-            read_cols = (cols if not remap else list(dict.fromkeys(
-                v for w in wanted if (v := read_map[w]) is not None)))
-            if remap and not read_cols:
-                # every wanted column postdates this file: read one
-                # physical column purely to carry the row count
-                read_cols = [pf.schema_arrow.names[0]]
-
-            def remap_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
-                arrays = []
-                for w in wanted:
-                    fn = read_map[w]
-                    arrays.append(
-                        pa.nulls(rb.num_rows,
-                                 _pa_of_spec(spec_by[w])
-                                 if w in spec_by else eq_type[w])
-                        if fn is None else
-                        rb.column(rb.schema.names.index(fn)))
-                return pa.RecordBatch.from_arrays(arrays, names=wanted)
-
             row_off = sum(pf.metadata.row_group(g).num_rows
-                          for g in range(lo_rg))
-
-            def source():
-                """(batch, keep-mask) per parquet batch: position and
-                equality deletes become ONE mask, applied by the
-                accumulator after any oversized-batch cut."""
-                import numpy as np
-
-                file_pos = row_off  # pre-delete read cursor
-                for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
-                                          row_groups=rgs,
-                                          columns=read_cols):
-                    n_src = rb.num_rows
-                    keep = np.ones(n_src, dtype=bool)
-                    if dels is not None and len(dels):
-                        lo = np.searchsorted(dels, file_pos)
-                        hi = np.searchsorted(dels, file_pos + n_src)
-                        keep[dels[lo:hi] - file_pos] = False
-                    file_pos += n_src
-                    if remap:
-                        rb = remap_batch(rb)
-                        if eq_tables:
-                            keep &= _eq_keep_mask(rb, eq_tables)
-                        if wanted != cols:
-                            rb = rb.select(cols)
-                    yield rb, (None if keep.all() else keep)
-
+                          for g in range(rgs.start))
+            source = _read_data_file(
+                pf, rgs, fill, column_resolution, fs, path, key, seq,
+                delete_files, equality_deletes, eq_cache)
             # rg_idx = absolute starting row offset of the group in the
             # file: a total file-position order no matter how parquet
             # row groups and group boundaries interleave. With deletes
             # it stays the PRE-delete offset (offsets remain strictly
             # increasing, which is all the ordering contract needs).
             for row, start in _encode_batches(
-                    source(), specs, target_raw_bytes, DEFAULT_PAGE_BYTES,
+                    source, specs, target_raw_bytes, DEFAULT_PAGE_BYTES,
                     sel_cache):
                 if row_off + start > 0x7FFFFFFF:
                     raise ValueError("file exceeds 2^31 rows; rg_idx overflow")

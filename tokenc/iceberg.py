@@ -1092,20 +1092,46 @@ def _collect_file_stats(md, name2ft: dict):
     return lower, upper, nvc
 
 
-_PA_OF_ICE = None  # lazy {ice type → pyarrow type} (import cost)
-
-
 def _pa_of_ice(ice: str):
-    global _PA_OF_ICE
-    if _PA_OF_ICE is None:
-        import pyarrow as _pa
-        _PA_OF_ICE = {"int": _pa.int32(), "long": _pa.int64(),
-                      "float": _pa.float32(), "double": _pa.float64(),
-                      "boolean": _pa.bool_(), "string": _pa.string(),
-                      "binary": _pa.binary(), "date": _pa.date32()}
-    if ice not in _PA_OF_ICE:
-        raise ValueError(f"unsupported equality-delete column type {ice!r}")
-    return _PA_OF_ICE[ice]
+    """Arrow type of an Iceberg primitive type: the type of an
+    equality-delete parquet column, and of the nulls a column reads as in
+    data files that predate it."""
+    import pyarrow as pa
+
+    prims = {"int": pa.int32(), "long": pa.int64(), "float": pa.float32(),
+             "double": pa.float64(), "boolean": pa.bool_(),
+             "string": pa.string(), "binary": pa.binary(),
+             "uuid": pa.binary(16), "date": pa.date32(),
+             "time": pa.time64("us"), "timestamp": pa.timestamp("us"),
+             "timestamptz": pa.timestamp("us", tz="UTC")}
+    if ice in prims:
+        return prims[ice]
+    if m := re.fullmatch(r"decimal\((\d+),\s*(\d+)\)", ice):
+        return pa.decimal128(int(m[1]), int(m[2]))
+    if m := re.fullmatch(r"fixed\[(\d+)\]", ice):
+        return pa.binary(int(m[1]))
+    raise ValueError(f"unsupported Iceberg column type {ice!r}")
+
+
+def _partition_summaries(pspecs: list, name2ft: dict,
+                         partitions: list) -> list | None:
+    """Manifest-list partition field summaries over the entries'
+    partition dicts: per spec field, whether any value is null and the
+    serialized min / max of the rest."""
+    if not pspecs:
+        return None
+    out = []
+    for ps in pspecs:
+        vals = [p.get(ps["name"]) for p in partitions]
+        known = [v for v in vals if v is not None]
+        ice = _part_value_type(ps, name2ft)
+        out.append({
+            "contains_null": len(known) < len(vals), "contains_nan": None,
+            "lower_bound": (ser_value(min(known), ice, ROUND_FLOOR)
+                            if known else None),
+            "upper_bound": (ser_value(max(known), ice, ROUND_CEILING)
+                            if known else None)})
+    return out
 
 
 def _commit_metadata(meta_dir: str, meta: dict) -> dict:
@@ -1182,6 +1208,7 @@ def build_table(table_dir: str, data_files: list[str], *,
     files from earlier snapshots verbatim in a status=EXISTING manifest:
     original stats/partition/sequence numbers preserved, nothing re-read
     — the partial-compaction path (rewrite some files, carry the rest)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     root = os.path.abspath(table_dir)
@@ -1225,14 +1252,74 @@ def build_table(table_dir: str, data_files: list[str], *,
                          f"fields: {missing}")
     part_record = _partition_record(pspecs, name2ft)
 
+    def entry(content: int, path: str, n_rows: int, size: int, *,
+              partition: dict | None = None, seq_no: int | None = None,
+              nvc=(), lower=(), upper=(), equality_ids=None) -> dict:
+        """One manifest entry: ADDED, or EXISTING with its original data
+        sequence number `seq_no` (a carried file keeps its v2 ordering
+        against delete files)."""
+        return {"status": 1 if seq_no is None else 0,
+                "snapshot_id": snapshot_id, "sequence_number": seq_no,
+                "file_sequence_number": None,
+                "data_file": {
+                    "content": content, "file_path": path,
+                    "file_format": "PARQUET",
+                    "partition": dict(partition or {}),
+                    "record_count": n_rows, "file_size_in_bytes": size,
+                    "null_value_counts": list(nvc) or None,
+                    "lower_bounds": list(lower) or None,
+                    "upper_bounds": list(upper) or None,
+                    "equality_ids": equality_ids}}
+
+    def write_manifest(tag: str, entries: list) -> dict:
+        """Write manifest snap<id>-<tag>0.avro → its manifest-list record
+        (data manifests carry the partition summaries)."""
+        deletes = entries[0]["data_file"]["content"] != 0
+        path = os.path.join(meta_dir, f"snap{snapshot_id}-{tag}0.avro")
+        blob = write_ocf(
+            _manifest_entry_schema(_PARTITION if deletes else part_record),
+            entries, codec=codec,
+            metadata={"format-version": b"2",
+                      "content": b"deletes" if deletes else b"data"})
+        with open(path, "wb") as f:
+            f.write(blob)
+        # record counts by entry status: 0 EXISTING, 1 ADDED
+        by_status = {s: [e["data_file"]["record_count"] for e in entries
+                         if e["status"] == s] for s in (0, 1)}
+        return {
+            "manifest_path": "file://" + path, "manifest_length": len(blob),
+            "partition_spec_id": 0, "content": int(deletes),
+            "sequence_number": seq,
+            "min_sequence_number": min(
+                seq if e["sequence_number"] is None
+                else e["sequence_number"] for e in entries),
+            "added_snapshot_id": snapshot_id,
+            "added_files_count": len(by_status[1]),
+            "existing_files_count": len(by_status[0]),
+            "deleted_files_count": 0,
+            "added_rows_count": sum(by_status[1]),
+            "existing_rows_count": sum(by_status[0]),
+            "deleted_rows_count": 0,
+            "partitions": None if deletes else _partition_summaries(
+                pspecs, name2ft,
+                [e["data_file"]["partition"] for e in entries])}
+
+    def write_deletes(content: int, table, equality_ids=None) -> dict:
+        """Write a delete parquet + its one-entry delete manifest."""
+        file_tag, tag = {1: ("del", "d"), 2: ("eq", "e")}[content]
+        del_dir = os.path.join(root, "deletes")
+        os.makedirs(del_dir, exist_ok=True)
+        path = os.path.join(del_dir,
+                            f"snap{snapshot_id}-{file_tag}0.parquet")
+        pq.write_table(table, path)
+        return write_manifest(tag, [entry(
+            content, "file://" + path, table.num_rows,
+            os.path.getsize(path), equality_ids=equality_ids)])
+
     entries = []
-    part_summ = {p["name"]: {"contains_null": False, "lo": None, "hi": None}
-                 for p in pspecs}
-    n_rows = 0
     for p in data_files:
         ap = os.path.abspath(p)
         md = pq.read_metadata(ap)
-        n_rows += md.num_rows
         lower, upper, nvc = (_collect_file_stats(md, name2ft)
                              if collect_stats else ([], [], []))
         lo_by_id = {kv["key"]: kv["value"] for kv in lower}
@@ -1244,197 +1331,69 @@ def build_table(table_dir: str, data_files: list[str], *,
             c, fname = ps["source"], ps["name"]
             fid, ice = name2ft[c]
             if fname in explicit:
-                v = explicit[fname]
-            else:
-                if fid not in lo_by_id or fid not in hi_by_id:
-                    raise ValueError(f"cannot derive partition value for "
-                                     f"{c!r} in {ap}: no footer stats")
-                lo = deser_value(lo_by_id[fid], ice)
-                hi = deser_value(hi_by_id[fid], ice)
-                if ps["kind"] == "identity":
-                    tlo, thi, v = lo, hi, lo
-                elif ps["kind"] == "truncate":
-                    tlo = _truncate_value(lo, ps["param"], ice)
-                    thi = _truncate_value(hi, ps["param"], ice)
-                    v = tlo
-                else:  # bucket: derivable only from a constant column
-                    tlo = bucket_value(lo, ice, ps["param"]) if lo == hi \
-                        else None
-                    thi = bucket_value(hi, ice, ps["param"]) if lo == hi \
-                        else object()
-                    v = tlo
-                if tlo != thi:
-                    raise ValueError(
-                        f"file {ap} is not constant in partition field "
-                        f"{fname!r} ([{lo!r}, {hi!r}] under "
-                        f"{ps['kind']}): pass partition_values")
-            part_vals[fname] = v
-            s = part_summ[fname]
-            if v is None:
-                s["contains_null"] = True
+                part_vals[fname] = explicit[fname]
                 continue
-            s["lo"] = v if s["lo"] is None else min(s["lo"], v)
-            s["hi"] = v if s["hi"] is None else max(s["hi"], v)
-        entries.append({
-            "status": 1, "snapshot_id": snapshot_id,
-            "sequence_number": None, "file_sequence_number": None,
-            "data_file": {
-                "content": 0, "file_path": "file://" + ap,
-                "file_format": "PARQUET", "partition": part_vals,
-                "record_count": md.num_rows,
-                "file_size_in_bytes": os.path.getsize(ap),
-                "null_value_counts": nvc or None,
-                "lower_bounds": lower or None,
-                "upper_bounds": upper or None}})
-    new_mrecs = []
-    if entries:
-        mpath = os.path.join(meta_dir, f"snap{snapshot_id}-m0.avro")
-        blob = write_ocf(_manifest_entry_schema(part_record), entries,
-                         codec=codec,
-                         metadata={"format-version": b"2", "content": b"data"})
-        with open(mpath, "wb") as f:
-            f.write(blob)
-        new_mrecs.append((mpath, blob, 0, len(entries), n_rows))
+            if fid not in lo_by_id or fid not in hi_by_id:
+                raise ValueError(f"cannot derive partition value for "
+                                 f"{c!r} in {ap}: no footer stats")
+            lo = deser_value(lo_by_id[fid], ice)
+            hi = deser_value(hi_by_id[fid], ice)
+            if ps["kind"] == "identity":
+                tlo, thi = lo, hi
+            elif ps["kind"] == "truncate":
+                tlo = _truncate_value(lo, ps["param"], ice)
+                thi = _truncate_value(hi, ps["param"], ice)
+            else:  # bucket: derivable only from a constant column
+                tlo = bucket_value(lo, ice, ps["param"]) if lo == hi \
+                    else None
+                thi = bucket_value(hi, ice, ps["param"]) if lo == hi \
+                    else object()
+            if tlo != thi:
+                raise ValueError(
+                    f"file {ap} is not constant in partition field "
+                    f"{fname!r} ([{lo!r}, {hi!r}] under "
+                    f"{ps['kind']}): pass partition_values")
+            part_vals[fname] = tlo
+        entries.append(entry(0, "file://" + ap, md.num_rows,
+                             os.path.getsize(ap), partition=part_vals,
+                             nvc=nvc, lower=lower, upper=upper))
+    mrecs = [write_manifest("m", entries)] if entries else []
 
     if position_deletes:
-        import pyarrow as _pa
-
         rows = sorted((("file://" + os.path.abspath(p), int(q))
                        for p, ps in position_deletes.items() for q in ps))
-        del_dir = os.path.join(root, "deletes")
-        os.makedirs(del_dir, exist_ok=True)
-        dpath = os.path.join(del_dir, f"snap{snapshot_id}-del0.parquet")
-        pq.write_table(_pa.table({
-            "file_path": _pa.array([r[0] for r in rows], _pa.string()),
-            "pos": _pa.array([r[1] for r in rows], _pa.int64())}), dpath)
-        dmpath = os.path.join(meta_dir, f"snap{snapshot_id}-d0.avro")
-        dblob = write_ocf(
-            _manifest_entry_schema(_PARTITION),
-            [{"status": 1, "snapshot_id": snapshot_id,
-              "sequence_number": None, "file_sequence_number": None,
-              "data_file": {
-                  "content": 1, "file_path": "file://" + dpath,
-                  "file_format": "PARQUET", "partition": {},
-                  "record_count": len(rows),
-                  "file_size_in_bytes": os.path.getsize(dpath),
-                  "null_value_counts": None, "lower_bounds": None,
-                  "upper_bounds": None}}],
-            codec=codec,
-            metadata={"format-version": b"2", "content": b"deletes"})
-        with open(dmpath, "wb") as f:
-            f.write(dblob)
-        new_mrecs.append((dmpath, dblob, 1, 1, len(rows)))
+        mrecs.append(write_deletes(1, pa.table({
+            "file_path": pa.array([r[0] for r in rows], pa.string()),
+            "pos": pa.array([r[1] for r in rows], pa.int64())})))
 
     if equality_deletes:
-        import pyarrow as _pa
-
         eq_cols, eq_rows = equality_deletes
         bad = [c for c in eq_cols if c not in name2ft]
         if bad:
             raise ValueError(f"equality-delete columns not primitive "
                              f"top-level fields: {bad}")
-        fids = [name2ft[c][0] for c in eq_cols]
-        pa_schema = _pa.schema([
-            _pa.field(c, _pa_of_ice(name2ft[c][1])) for c in eq_cols])
+        pa_schema = pa.schema([
+            pa.field(c, _pa_of_ice(name2ft[c][1])) for c in eq_cols])
         # deterministic order; None-safe key (null delete keys are legal —
         # spec equality matches null to null)
         rows = sorted((tuple(r) for r in eq_rows),
                       key=lambda r: tuple((v is None, v) for v in r))
-        del_dir = os.path.join(root, "deletes")
-        os.makedirs(del_dir, exist_ok=True)
-        epath = os.path.join(del_dir, f"snap{snapshot_id}-eq0.parquet")
-        pq.write_table(_pa.Table.from_arrays(
-            [_pa.array([r[j] for r in rows], f.type)
-             for j, f in enumerate(pa_schema)], schema=pa_schema), epath)
-        empath = os.path.join(meta_dir, f"snap{snapshot_id}-e0.avro")
-        eblob = write_ocf(
-            _manifest_entry_schema(_PARTITION),
-            [{"status": 1, "snapshot_id": snapshot_id,
-              "sequence_number": None, "file_sequence_number": None,
-              "data_file": {
-                  "content": 2, "file_path": "file://" + epath,
-                  "file_format": "PARQUET", "partition": {},
-                  "record_count": len(rows),
-                  "file_size_in_bytes": os.path.getsize(epath),
-                  "null_value_counts": None, "lower_bounds": None,
-                  "upper_bounds": None, "equality_ids": fids}}],
-            codec=codec,
-            metadata={"format-version": b"2", "content": b"deletes"})
-        with open(empath, "wb") as f:
-            f.write(eblob)
-        new_mrecs.append((empath, eblob, 1, 1, len(rows)))
+        mrecs.append(write_deletes(2, pa.Table.from_arrays(
+            [pa.array([r[j] for r in rows], f.type)
+             for j, f in enumerate(pa_schema)], schema=pa_schema),
+            equality_ids=[name2ft[c][0] for c in eq_cols]))
 
-    carry_mrec = None
     if carry_files:
-        centries = []
-        cseqs = []
-        csumm = {p["name"]: {"contains_null": False, "lo": None, "hi": None}
-                 for p in pspecs}
-        for cf in carry_files:
-            cseqs.append(int(cf.sequence_number))
-            for ps in pspecs:
-                v = (cf.partition or {}).get(ps["name"])
-                s = csumm[ps["name"]]
-                if v is None:
-                    s["contains_null"] = True
-                else:
-                    s["lo"] = v if s["lo"] is None else min(s["lo"], v)
-                    s["hi"] = v if s["hi"] is None else max(s["hi"], v)
-            centries.append({
-                # status 0 = EXISTING with an explicit sequence number:
-                # the file keeps its original v2 ordering vs delete files
-                "status": 0, "snapshot_id": snapshot_id,
-                "sequence_number": int(cf.sequence_number),
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": 0, "file_path": cf.raw_path or
-                    ("file://" + cf.path),
-                    "file_format": "PARQUET",
-                    "partition": dict(cf.partition or {}),
-                    "record_count": int(cf.record_count),
-                    "file_size_in_bytes": int(cf.file_size_in_bytes),
-                    "null_value_counts": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(cf.null_counts.items())] or None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(cf.lower_bounds.items())] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(cf.upper_bounds.items())] or None,
-                }})
-        cpath = os.path.join(meta_dir, f"snap{snapshot_id}-c0.avro")
-        cblob = write_ocf(_manifest_entry_schema(part_record), centries,
-                          codec=codec,
-                          metadata={"format-version": b"2",
-                                    "content": b"data"})
-        with open(cpath, "wb") as f:
-            f.write(cblob)
-        csummaries = None
-        if pspecs:
-            csummaries = []
-            for ps in pspecs:
-                s = csumm[ps["name"]]
-                ice = _part_value_type(ps, name2ft)
-                csummaries.append({
-                    "contains_null": s["contains_null"],
-                    "contains_nan": None,
-                    "lower_bound": (ser_value(s["lo"], ice, ROUND_FLOOR)
-                                    if s["lo"] is not None else None),
-                    "upper_bound": (ser_value(s["hi"], ice, ROUND_CEILING)
-                                    if s["hi"] is not None else None)})
-        carry_mrec = {
-            "manifest_path": "file://" + cpath,
-            "manifest_length": len(cblob), "partition_spec_id": 0,
-            "content": 0, "sequence_number": seq,
-            "min_sequence_number": min(cseqs),
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": 0,
-            "existing_files_count": len(centries),
-            "deleted_files_count": 0, "added_rows_count": 0,
-            "existing_rows_count": sum(int(cf.record_count)
-                                       for cf in carry_files),
-            "deleted_rows_count": 0, "partitions": csummaries}
+        def kv(d: dict) -> list:
+            return [{"key": k, "value": v} for k, v in sorted(d.items())]
+
+        mrecs.append(write_manifest("c", [
+            entry(0, cf.raw_path or ("file://" + cf.path),
+                  int(cf.record_count), int(cf.file_size_in_bytes),
+                  partition=cf.partition, seq_no=int(cf.sequence_number),
+                  nvc=kv(cf.null_counts), lower=kv(cf.lower_bounds),
+                  upper=kv(cf.upper_bounds))
+            for cf in carry_files]))
 
     prior = []
     if parent is not None and not replace:
@@ -1444,30 +1403,6 @@ def build_table(table_dir: str, data_files: list[str], *,
                 resolve_fs(root)[0],
                 _resolve(parent.get("location", ""),
                          prev_snap["manifest-list"], root)))
-    summaries = None
-    if pspecs:
-        summaries = []
-        for ps in pspecs:
-            s = part_summ[ps["name"]]
-            ice = _part_value_type(ps, name2ft)
-            summaries.append({
-                "contains_null": s["contains_null"], "contains_nan": None,
-                "lower_bound": (ser_value(s["lo"], ice, ROUND_FLOOR)
-                                if s["lo"] is not None else None),
-                "upper_bound": (ser_value(s["hi"], ice, ROUND_CEILING)
-                                if s["hi"] is not None else None)})
-    mrecs = [
-        {"manifest_path": "file://" + path,
-         "manifest_length": len(b), "partition_spec_id": 0,
-         "content": content, "sequence_number": seq,
-         "min_sequence_number": seq, "added_snapshot_id": snapshot_id,
-         "added_files_count": nfiles, "existing_files_count": 0,
-         "deleted_files_count": 0, "added_rows_count": nr,
-         "existing_rows_count": 0, "deleted_rows_count": 0,
-         "partitions": summaries if content == 0 else None}
-        for path, b, content, nfiles, nr in new_mrecs]
-    if carry_mrec is not None:
-        mrecs.append(carry_mrec)
     mlist_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1.avro")
     with open(mlist_path, "wb") as f:
         f.write(write_ocf(MANIFEST_FILE_SCHEMA, mrecs + prior, codec=codec))
@@ -1711,9 +1646,7 @@ def compact_table(spark, table_dir: str, *, target_file_bytes: int = 128 << 20,
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .files import (_eq_keep_mask, _load_delete_positions,
-                        _load_eq_tables, _resolve_read, _unit_tasks,
-                        resolve_fs as _rfs)
+    from .files import _read_data_file, _unit_tasks, resolve_fs as _rfs
 
     root = os.path.abspath(_strip_scheme(table_dir))
     meta = table_metadata(table_dir, filesystem)
@@ -1743,9 +1676,13 @@ def compact_table(spark, table_dir: str, *, target_file_bytes: int = 128 << 20,
                 newp = {ren.get(k, k): v for k, v in f.partition.items()}
                 f.partition.clear()
                 f.partition.update(newp)
-    cur_fields = [(f["name"], f["id"], f["type"]) for f in schema["fields"]]
-    wanted = [n for n, _, _ in cur_fields]
-    resolution = read_resolution(meta, wanted)
+    # every current column, null-filled (nested: not fillable) where a
+    # file predates it, written with its field id
+    fill = {f["name"]: (_pa_of_ice(f["type"]) if isinstance(f["type"], str)
+                        else None) for f in schema["fields"]}
+    ids = [{b"PARQUET:field_id": str(f["id"]).encode()}
+           for f in schema["fields"]]
+    resolution = read_resolution(meta, list(fill))
     eq_payload = _eq_payload(meta, dels) or []
     pos_paths = [d.path for d in dels if d.content == 1]
 
@@ -1767,56 +1704,27 @@ def compact_table(spark, table_dir: str, *, target_file_bytes: int = 128 << 20,
 
     tasks, task_units = _unit_tasks(spark, units, len(units))
 
+    def with_ids(types) -> pa.Schema:
+        return pa.schema([pa.field(n, t, metadata=m)
+                          for n, t, m in zip(fill, types, ids)])
+
     def rewrite(batches):
         fs0, _ = _rfs(root, filesystem)
         eq_cache: dict = {}
         for u in task_units(batches):
-            tables = []
+            kept = []
             for p, key, seq in zip(u["paths"], u["keys"], u["seqs"]):
                 pf = pq.ParquetFile(p, filesystem=fs0)
-                dl = (_load_delete_positions(p, fs0, pos_paths, key)
-                      if pos_paths else None)
-                eq_tables = (_load_eq_tables(fs0, eq_payload, seq, eq_cache)
-                             if eq_payload else [])
-                rm = _resolve_read(pf.schema_arrow, wanted, resolution)
-                eq_tables = [t for t in eq_tables
-                             if all(rm.get(c) is not None
-                                    for c in t.column_names)]
-                t = pf.read()
-                if dl is not None and len(dl):
-                    import numpy as np
-                    mask = np.ones(t.num_rows, dtype=bool)
-                    mask[dl[dl < t.num_rows]] = False
-                    t = t.filter(pa.array(mask))
-                arrays, fields = [], []
-                for name, fid, ft in cur_fields:
-                    fn = rm.get(name)
-                    if fn is None:
-                        if not isinstance(ft, str):
-                            raise NotImplementedError(
-                                f"cannot null-fill nested column "
-                                f"{name!r} missing from {p}")
-                        arr = pa.nulls(t.num_rows, _pa_of_ice(ft))
-                    else:
-                        arr = t[fn]
-                    arrays.append(arr)
-                    fields.append(pa.field(
-                        name,
-                        arr.type,
-                        metadata={b"PARQUET:field_id":
-                                  str(fid).encode()}))
-                t = pa.Table.from_arrays(
-                    [pa.chunked_array([a]) if not isinstance(
-                        a, pa.ChunkedArray) else a for a in arrays],
-                    schema=pa.schema(fields))
-                if eq_tables:
-                    keeps = [_eq_keep_mask(rb, eq_tables)
-                             for rb in t.to_batches()]
-                    import numpy as np
-                    t = t.filter(pa.array(np.concatenate(keeps))
-                                 if keeps else pa.array([], pa.bool_()))
-                tables.append(t)
-            out = pa.concat_tables(tables)
+                for rb, keep in _read_data_file(
+                        pf, range(pf.metadata.num_row_groups), fill,
+                        resolution, fs0, p, key, seq, pos_paths, eq_payload,
+                        eq_cache):
+                    if keep is not None:
+                        rb = rb.filter(pa.array(keep))
+                    kept.append(pa.RecordBatch.from_arrays(
+                        rb.columns, schema=with_ids(rb.schema.types)))
+            out = (pa.Table.from_batches(kept) if kept else with_ids(
+                t or pa.null() for t in fill.values()).empty_table())
             pq.write_table(out, u["out"], compression=parquet_compression)
             yield pa.RecordBatch.from_pylist(
                 [{"out": u["out"], "n_rows": out.num_rows}])

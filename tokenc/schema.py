@@ -40,7 +40,7 @@ class ColumnSpec:
     # because it costs a hash pass per value at encode time
     bloom: bool = False
     # record the chunk's DISTINCT value set in the manifest (as JSON, only
-    # when cardinality <= TOKENC_DISTINCT_MAX) — the dictionary-page
+    # when cardinality <= tokenc.engine.DISTINCT_MAX) — the dictionary-page
     # pruning analog (reference layout/dictpage.go dictionaries, evaluated
     # at metadata scale instead of read time): IN/LIKE/arbitrary predicates
     # prune row groups without touching any blob. Opt-in because it costs

@@ -14,19 +14,9 @@ regardless of chunk size, all numpy.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 from . import codecs
-
-# ops/debug knob: comma-separated codec names the selector must not pick
-# (e.g. TOKENC_DISABLE_CODECS="for,dict" for A/B size/speed attribution);
-# pinned per-column overrides are unaffected
-_DISABLED = frozenset(
-    codecs.CODEC_IDS[n.strip()]
-    for n in os.environ.get("TOKENC_DISABLE_CODECS", "").split(",")
-    if n.strip() in codecs.CODEC_IDS)
 
 SAMPLE = 8192
 MEASURE_SAMPLE = 131072  # container-aware refinement sample (see below)
@@ -131,9 +121,6 @@ def choose_numeric(vals: np.ndarray, phys: int,
         # BSS costs the same bytes as PLAIN but compresses far better under
         # the container's block codec; prefer it unless dict is a clear win
         est[codecs.BSS] = itemsize * 0.95
-    for c in _DISABLED:
-        if c != codecs.PLAIN:
-            est.pop(c, None)
     # Container-aware refinement: the model ranks PRE-container bytes, but
     # the artifact is zstd-compressed by the blob container, and raw bytes
     # can out-compress a bit-packed stream (packing destroys the byte-level
@@ -237,17 +224,10 @@ def choose_binary(data: np.ndarray, offsets: np.ndarray,
         est[codecs.DBA] = (1.0 - prefix_ratio) * avg_len + 1.0
     if avg_len >= 6.0:
         est[codecs.FSST] = avg_len * 0.55 + 0.3
-    # pop disabled codecs BEFORE anchoring the shortlist threshold (same
-    # order as choose_numeric): anchoring to a disabled codec's estimate
-    # can exclude the best eligible candidate from the measured pass
-    for c in _DISABLED:
-        if c != codecs.PLAIN:
-            est.pop(c, None)
     best_model = min(est.values())
     short = {c for c, v in est.items() if v <= best_model * 2.5}
     short.add(codecs.PLAIN)  # raw bytes under the container can win (LZ
     short.add(codecs.DLBA)   # matches survive), and DLBA is its cheap kin
-    short -= _DISABLED - {codecs.PLAIN}
     memo_key = ("bin", key, frozenset(short), min(est, key=est.get), container)
     if cache is not None and key is not None and memo_key in cache:
         return cache[memo_key]
