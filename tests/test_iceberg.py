@@ -1322,6 +1322,44 @@ class TestCompaction:
         assert report["outputs"] == 1 and report["rows_written"] == 3
         assert scan() == before
 
+    @staticmethod
+    def _mixed_width_table(tmp_path, b_values):
+        """Data files a.parquet x:int32 [1,2,3] and b.parquet x:int64
+        `b_values`."""
+        root = str(tmp_path / "tbl")
+        data = os.path.join(root, "data")
+        os.makedirs(data)
+        paths = []
+        for name, xs, t in (("a.parquet", [1, 2, 3], pa.int32()),
+                            ("b.parquet", b_values, pa.int64())):
+            paths.append(os.path.join(data, name))
+            pq.write_table(pa.table({"x": pa.array(xs, t)}), paths[-1])
+        return root, paths
+
+    def test_mixed_column_widths_compact(self, spark, tmp_path):
+        """Files storing one column at different Arrow widths merge into
+        one output at the current schema's type."""
+        from tokenc.iceberg import compact_table
+
+        root, paths = self._mixed_width_table(tmp_path, [7])
+        build_table(root, paths)
+        before = _decode_x(spark, tmp_path, root)
+        assert before == [1, 2, 3, 7]
+        _, report = compact_table(spark, root)
+        assert report["rows_written"] == 4
+        assert _decode_x(spark, tmp_path, root) == before
+
+    def test_mixed_width_value_out_of_range_raises(self, tmp_path):
+        """The cast to the current type is safe: an int64 value that does
+        not fit the int32 column raises instead of wrapping."""
+        from tokenc.files import _read_data_file
+
+        _, (_, b) = self._mixed_width_table(tmp_path, [7, 1 << 40])
+        pf = pq.ParquetFile(b)
+        with pytest.raises(pa.ArrowInvalid):
+            list(_read_data_file(pf, range(1), {"x": pa.int32()}, None,
+                                 None, b, b, 0, None, None, {}))
+
     def test_noop_returns_current_metadata(self, spark, table_dir):
         from tokenc.iceberg import compact_table
 

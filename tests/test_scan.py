@@ -80,8 +80,7 @@ class TestCompoundScan:
 
     def test_string_range_driving_column(self, spark, scan_enc):
         got = _run(spark, scan_enc,
-                   [("tag", "between", ("t2", "t4")), ("k", "<=", 100)],
-                   page_column="k")
+                   [("tag", "between", ("t2", "t4")), ("k", "<=", 100)])
         want = _expected(lambda k, p, t: (t >= "t2") & (t <= "t4") & (k <= 100))
         pd.testing.assert_frame_equal(got.reset_index(drop=True), want.reset_index(drop=True))
 

@@ -111,18 +111,6 @@ def decode_byte_array(buf, count: int, pos: int = 0) -> tuple[np.ndarray, np.nda
     return out, offsets, pos + p
 
 
-def encode_flba(data: np.ndarray, length: int) -> bytes:
-    return np.ascontiguousarray(data, dtype=np.uint8).tobytes()
-
-
-def decode_flba(buf, length: int, count: int, pos: int = 0) -> tuple[np.ndarray, np.ndarray, int]:
-    raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
-    total = length * count
-    data = raw[pos:pos + total].copy()
-    offsets = np.arange(count + 1, dtype=np.int64) * length
-    return data, offsets, pos + total
-
-
 def _ranges_to_indices(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """Concatenate ranges [starts[i], starts[i]+lens[i]) → flat index array."""
     total = int(lens.sum())

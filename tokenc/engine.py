@@ -30,12 +30,12 @@ from functools import reduce
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import arrow_util, codecs, selector
 from .chunk import (ChunkStats, decode_chunk, decode_chunk_rows_multi,
                     encode_chunk, page_filter_row_runs,
                     page_filter_row_runs_multi)
-from .codecs.plain import _ranges_to_indices
 from .schema import ColumnSpec
 
 DEFAULT_TARGET_RAW_BYTES = 32 << 20  # row-group sizing, reference default 128MiB scaled
@@ -46,6 +46,20 @@ DEFAULT_PAGE_BYTES = 1 << 20  # sub-chunk page sizing (reference PageSize analog
 # Arrow column <-> numpy (values, validity, lengths)
 # --------------------------------------------------------------------------
 
+# physical type → the Arrow type its leaf decodes to when the spec carries
+# no logical `arrow_type`
+_PHYS_PA = {codecs.PHYS_INT32: pa.int32(), codecs.PHYS_INT64: pa.int64(),
+            codecs.PHYS_FLOAT: pa.float32(), codecs.PHYS_DOUBLE: pa.float64(),
+            codecs.PHYS_BOOL: pa.bool_(), codecs.PHYS_BYTE_ARRAY: pa.string()}
+
+
+def _pa_of_spec(spec: ColumnSpec) -> pa.DataType:
+    """Arrow type `_rebuild` gives `spec`'s column (on a LIST spec
+    `arrow_type` is the element type)."""
+    leaf = spec.arrow_type or _PHYS_PA[spec.phys]
+    return pa.list_(leaf) if spec.is_list else leaf
+
+
 def _decimal_unscaled(arr: pa.Array) -> np.ndarray:
     """Decimal128Array (p ≤ 18) → int64 unscaled values. The 128-bit
     little-endian pairs reduce to their low word when the value fits int64
@@ -55,313 +69,155 @@ def _decimal_unscaled(arr: pa.Array) -> np.ndarray:
     return np.ascontiguousarray(lo).view(np.int64)
 
 
-def _unscaled_to_decimal(vals: np.ndarray, dectype, validity=None,
-                         null_count: int = 0) -> pa.Array:
-    lo = np.ascontiguousarray(vals, np.int64)
-    pair = np.empty(2 * lo.size, dtype=np.int64)
-    pair[0::2] = lo
-    pair[1::2] = lo >> 63  # sign extension high word
-    vbuf = None
-    if validity is not None:
-        vbuf = pa.py_buffer(np.packbits(validity.astype(np.uint8),
-                                        bitorder="little").tobytes())
-    return pa.Array.from_buffers(dectype, lo.size,
-                                 [vbuf, pa.py_buffer(pair.tobytes())],
-                                 null_count=null_count)
-
-
 def _is_decimal_spec(spec: ColumnSpec) -> bool:
     """Scalar decimal spec (on LIST specs arrow_type is the element type)."""
     return (not spec.is_list and spec.arrow_type is not None
             and pa.types.is_decimal(spec.arrow_type))
 
 
-def _is_fsb_spec(spec: ColumnSpec) -> bool:
-    """Scalar fixed-size-binary (FLBA) spec — UUID/INTERVAL storage
-    (reference common/common.go:330-525, PLAIN FLBA encodingwrite.go:123-130)."""
-    return (not spec.is_list and spec.arrow_type is not None
-            and pa.types.is_fixed_size_binary(spec.arrow_type))
+def _fixed_width(spec: ColumnSpec) -> int:
+    """Bytes per value of a fixed-width byte-array leaf, else 0: FLBA
+    (UUID/INTERVAL storage, reference PLAIN FLBA encodingwrite.go:123-130)
+    and decimal p > 18 as 16-byte big-endian two's complement (the
+    reference's DECIMAL-over-FLBA layout, types/types.go:268-330)."""
+    at = spec.arrow_type
+    if spec.phys != codecs.PHYS_BYTE_ARRAY or at is None:
+        return 0
+    if pa.types.is_fixed_size_binary(at):
+        return at.byte_width
+    return 16 if pa.types.is_decimal(at) else 0
 
 
-def _list_storage_view(arr: pa.Array, spec: ColumnSpec) -> pa.Array:
-    """list<logical elem> → list<storage int>: zero-copy view for
-    date/time/timestamp elements; decimal(p≤18) elements reduce to their
-    unscaled int64 low word (element validity preserved)."""
-    if pa.types.is_large_list(arr.type):
-        arr = arr.cast(pa.list_(arr.type.value_type))
-    if not pa.types.is_decimal(spec.arrow_type):
-        return arr.view(pa.list_(_elem_type(spec.phys)))
-    child = arr.values
-    lo = _decimal_unscaled(child)  # all slots; null slots carry garbage
-    mask = ~np.asarray(child.is_valid()) if child.null_count else None
-    ichild = pa.array(lo, pa.int64(), mask=mask)
-    rmask = ~np.asarray(arr.is_valid()) if arr.null_count else None
-    return pa.ListArray.from_arrays(
-        arr.offsets, ichild,
-        mask=pa.array(rmask) if rmask is not None else None)
+def _leaf(arr: pa.Array, spec: ColumnSpec) -> dict:
+    """Null-free leaf array (a scalar column's valid rows, or a list
+    column's non-null elements) → codec input: dict(values=…) or
+    dict(ba_data=…, ba_offsets=…). Each leaf type converts here once."""
+    at = spec.arrow_type
+    if w := _fixed_width(spec):
+        raw = np.frombuffer(arr.buffers()[1], dtype=np.uint8)
+        raw = raw[w * arr.offset: w * (arr.offset + len(arr))]
+        if pa.types.is_decimal(at):  # little-endian → big-endian
+            raw = raw.reshape(-1, 16)[:, ::-1]
+        return dict(ba_data=np.ascontiguousarray(raw).reshape(-1),
+                    ba_offsets=np.arange(len(arr) + 1, dtype=np.int64) * w)
+    if spec.phys == codecs.PHYS_BYTE_ARRAY:
+        # byte-array specs carry arrow_type only to mark opaque binary for
+        # the rebuild side (BSON-style bytes) — no storage view involved
+        b = arr.cast(pa.large_binary())
+        bufs = b.buffers()
+        off = np.frombuffer(bufs[1], np.int64)[b.offset:b.offset + len(b) + 1]
+        data = (np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None
+                else np.empty(0, np.uint8))
+        return dict(ba_data=data, ba_offsets=off.astype(np.int64))
+    if at is not None and pa.types.is_decimal(at):
+        return dict(values=_decimal_unscaled(arr))
+    if at is not None:
+        # logical date/time/timestamp → zero-copy view of the storage int
+        arr = arr.view(_PHYS_PA[spec.phys])
+    return dict(values=np.asarray(arr))
 
 
-def _list_child_restore(child: pa.Array, spec: ColumnSpec) -> pa.Array:
-    """Inverse of `_list_storage_view` for the rebuilt int child."""
-    if not pa.types.is_decimal(spec.arrow_type):
-        return child.view(spec.arrow_type)
-    vals = np.asarray(child.fill_null(0), np.int64)
-    validity = (np.asarray(child.is_valid()) if child.null_count else None)
-    return _unscaled_to_decimal(
-        vals, spec.arrow_type, validity=validity,
-        null_count=int(child.null_count))
-
-
-def _decimal_flba(arr: pa.Array) -> np.ndarray:
-    """Decimal128Array → 16-byte big-endian two's-complement per value (the
-    reference's DECIMAL-over-FLBA byte layout, types/types.go:268-330)."""
-    raw = np.frombuffer(arr.buffers()[1], dtype=np.uint8)
-    le = raw[16 * arr.offset: 16 * (arr.offset + len(arr))]
-    return np.ascontiguousarray(le.reshape(-1, 16)[:, ::-1]).reshape(-1)
-
-
-def _extract(arr: pa.Array, spec: ColumnSpec):
-    """→ dict(values=…, ba_data=…, ba_offsets=…, validity=…, list_lengths=…)."""
+def _extract(arr: pa.Array, spec: ColumnSpec) -> dict:
+    """Arrow column → encode_chunk input: the `_leaf` conversion of its
+    valid rows plus `validity` (None = all valid). A list column's leaf is
+    its non-null elements: `list_lengths` per valid row count every element
+    slot, `elem_validity` marks the non-null ones (Dremel DL between empty
+    list and value — null list elements / null map values)."""
     if isinstance(arr, pa.DictionaryArray):
         # dict-encoded input (Arrow dictionary / reference ENUM): densify to
         # the value type; the engine's own selector re-dictionary-encodes
         arr = arr.dictionary_decode()
-    if _is_fsb_spec(spec):
-        validity = np.asarray(arr.is_valid()) if arr.null_count else None
+    validity = np.asarray(arr.is_valid()) if arr.null_count else None
+    if not spec.is_list:
         dense = arr.drop_null() if validity is not None else arr
-        w = spec.arrow_type.byte_width
-        raw = np.frombuffer(dense.buffers()[1], dtype=np.uint8)
-        data = raw[w * dense.offset: w * (dense.offset + len(dense))]
-        return dict(ba_data=np.ascontiguousarray(data),
-                    ba_offsets=np.arange(len(dense) + 1, dtype=np.int64) * w,
-                    validity=validity)
-    if _is_decimal_spec(spec):
-        validity = np.asarray(arr.is_valid()) if arr.null_count else None
-        dense = arr.drop_null() if validity is not None else arr
-        if spec.phys == codecs.PHYS_BYTE_ARRAY:  # precision > 18 → FLBA(16)
-            return dict(ba_data=_decimal_flba(dense),
-                        ba_offsets=np.arange(len(dense) + 1, dtype=np.int64) * 16,
-                        validity=validity)
-        return dict(values=_decimal_unscaled(dense), validity=validity)
-    if spec.arrow_type is not None and spec.phys != codecs.PHYS_BYTE_ARRAY:
-        # logical date/time/timestamp → zero-copy view of the storage int
-        # (byte-array specs carry arrow_type only to mark BSON-style opaque
-        # binary for the rebuild side — no storage view involved)
-        arr = (_list_storage_view(arr, spec) if spec.is_list
-               else arr.view(_elem_type(spec.phys)))
-    n = len(arr)
-    validity = None
-    if arr.null_count:
-        validity = np.asarray(arr.is_valid())
-    if spec.is_list:
-        if pa.types.is_large_list(arr.type):
-            arr = arr.cast(pa.list_(arr.type.value_type))
-        offsets = np.asarray(arr.offsets)
-        lens = np.diff(offsets.astype(np.int64))
-        child = arr.values
-        # element-level nulls (Dremel DL between empty and value — null map
-        # values / null list elements): per-slot validity travels beside
-        # the lengths; values hold only the non-null elements
-        has_elem_nulls = bool(child.null_count)
-        if spec.phys == codecs.PHYS_BYTE_ARRAY:
-            # list<string>: flatten valid rows' elements into one byte_array
-            # stream beside the per-row lengths
-            if validity is not None:
-                lens = np.where(validity, lens, 0)
-                starts = offsets[:-1].astype(np.int64)
-                idx = _ranges_to_indices(starts[validity], lens[validity])
-                sel = child.take(pa.array(idx, pa.int64()))
-                list_lengths = lens[validity]
-            else:
-                sel = child.slice(offsets[0], int(lens.sum()))
-                list_lengths = lens
-            sel = sel.combine_chunks() if isinstance(sel, pa.ChunkedArray) else sel
-            ev = None
-            if sel.null_count:
-                ev = np.asarray(sel.is_valid())
-                sel = sel.drop_null()
-            b = sel.cast(pa.large_binary())
-            bufs = b.buffers()
-            off = np.frombuffer(bufs[1], np.int64)[b.offset:b.offset + len(b) + 1]
-            data = (np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None
-                    else np.empty(0, np.uint8))
-            return dict(ba_data=data, ba_offsets=off.astype(np.int64),
-                        validity=validity, list_lengths=list_lengths,
-                        elem_validity=ev)
-        if has_elem_nulls:
-            cv = np.asarray(child.is_valid())
-            if spec.phys == codecs.PHYS_BOOL:
-                # arrow bools are bit-packed; frombuffer would misread
-                child_np = np.asarray(child.fill_null(False))
-            else:
-                cb = child.buffers()
-                dt = np.dtype(_elem_type(spec.phys).to_pandas_dtype())
-                child_np = np.frombuffer(cb[1], dt)[child.offset:
-                                                    child.offset + len(child)]
-        else:
-            cv = None
-            child_np = np.asarray(child)
-        if validity is not None:
-            lens = np.where(validity, lens, 0)
-            starts = offsets[:-1].astype(np.int64)
-            vsel = validity
-            idx = _ranges_to_indices(starts[vsel], lens[vsel])
-            values = child_np[idx]
-            ev = cv[idx] if cv is not None else None
-            list_lengths = lens[vsel]
-        else:
-            sl = slice(int(offsets[0]), int(offsets[0] + lens.sum()))
-            values = child_np[sl]
-            ev = cv[sl] if cv is not None else None
-            list_lengths = lens
-        if ev is not None:
-            values = values[ev]
-        return dict(values=values, validity=validity,
-                    list_lengths=list_lengths, elem_validity=ev)
+        return dict(_leaf(dense, spec), validity=validity)
+    lens = pc.list_value_length(arr)
+    if validity is not None:
+        lens = lens.drop_null()
+    # flatten() skips null rows (whatever their offsets span) and honours
+    # the slice offset; zero-copy for a null-free list
+    elems = arr.flatten()
+    ev = np.asarray(elems.is_valid()) if elems.null_count else None
+    dense = elems.drop_null() if ev is not None else elems
+    return dict(_leaf(dense, spec), validity=validity,
+                list_lengths=np.asarray(lens).astype(np.int64, copy=False),
+                elem_validity=ev)
+
+
+def _leaf_array(cd, spec: ColumnSpec, n: int,
+                valid: np.ndarray | None) -> pa.Array:
+    """Mirror of `_leaf`: the chunk's stored values → an Arrow array of `n`
+    slots, the values in the slots `valid` marks (all when None) and nulls
+    in the rest."""
+    at = spec.arrow_type
+    vbuf = (None if valid is None
+            else pa.py_buffer(np.packbits(valid, bitorder="little")))
+    nulls = 0 if valid is None else n - int(np.count_nonzero(valid))
     if spec.phys == codecs.PHYS_BYTE_ARRAY:
-        b = arr.cast(pa.large_binary())
-        if validity is not None:
-            b = b.drop_null()
-        buffers = b.buffers()
-        off = np.frombuffer(buffers[1], dtype=np.int64)[b.offset:b.offset + len(b) + 1]
-        data = np.frombuffer(buffers[2], dtype=np.uint8) if buffers[2] is not None else np.empty(0, np.uint8)
-        return dict(ba_data=data, ba_offsets=off.astype(np.int64), validity=validity)
-    v = arr.drop_null() if validity is not None else arr
-    return dict(values=np.asarray(v), validity=validity)
+        base = int(cd.ba_offsets[0])
+        if w := _fixed_width(spec):
+            n_vals = cd.ba_offsets.size - 1
+            data = np.asarray(cd.ba_data)[base:base + w * n_vals].reshape(-1, w)
+            if pa.types.is_decimal(at):  # big-endian → little-endian
+                data = data[:, ::-1]
+            if valid is not None:
+                full = np.zeros((n, w), dtype=np.uint8)
+                full[valid] = data
+                data = full
+            return pa.Array.from_buffers(
+                at, n, [vbuf, pa.py_buffer(np.ascontiguousarray(data))],
+                null_count=nulls)
+        lens = np.diff(cd.ba_offsets)
+        if valid is not None:  # scatter stored lengths into the slots
+            full = np.zeros(n, dtype=np.int64)
+            full[valid] = lens
+            lens = full
+        off = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(lens, out=off[1:])
+        data = np.ascontiguousarray(cd.ba_data[base:base + int(off[-1])])
+        out = pa.Array.from_buffers(
+            pa.large_binary(), n,
+            [vbuf, pa.py_buffer(off), pa.py_buffer(data)], null_count=nulls)
+        if at is None:
+            return out.cast(pa.string())
+        # BSON-style opaque bytes: no UTF-8 assumption
+        return out if pa.types.is_large_binary(at) else out.cast(at)
+    vals = cd.values
+    if valid is not None:
+        full = np.zeros(n, dtype=vals.dtype)
+        full[valid] = vals
+        vals = full
+    if at is not None and pa.types.is_decimal(at):
+        # unscaled int64 → 128-bit little-endian pairs, high word the sign
+        pair = np.empty((n, 2), dtype=np.int64)
+        pair[:, 0] = vals
+        pair[:, 1] = vals >> 63
+        return pa.Array.from_buffers(at, n, [vbuf, pa.py_buffer(pair)],
+                                     null_count=nulls)
+    out = pa.array(vals, type=_PHYS_PA[spec.phys],
+                   mask=None if valid is None else ~valid)
+    return out if at is None else out.view(at)
 
 
 def _rebuild(cd, spec: ColumnSpec) -> pa.Array:
-    """ChunkData → Arrow array of the original logical type."""
-    n = cd.n_rows
-    validity = cd.validity
-    if spec.is_list:
-        lens_valid = cd.list_lengths if cd.list_lengths is not None else np.zeros(0, np.int64)
-        lens = np.zeros(n, dtype=np.int64)
-        if validity is not None:
-            lens[validity] = lens_valid
-        else:
-            lens = lens_valid
-        offsets = np.zeros(n + 1, dtype=np.int32)
-        offsets[1:] = np.cumsum(lens)
-        ev = cd.elem_validity
-        if spec.phys == codecs.PHYS_BYTE_ARRAY:
-            e_lens = np.diff(cd.ba_offsets)
-            if ev is not None:  # scatter stored lengths into element slots
-                full_lens = np.zeros(ev.size, dtype=np.int64)
-                full_lens[ev] = e_lens
-                e_lens = full_lens
-            e_off = np.zeros(e_lens.size + 1, dtype=np.int64)
-            np.cumsum(e_lens, out=e_off[1:])
-            base = int(cd.ba_offsets[0])
-            data = np.ascontiguousarray(
-                cd.ba_data[base:base + int(e_off[-1])])
-            vbuf = None
-            if ev is not None:
-                vbuf = pa.py_buffer(np.packbits(ev.astype(np.uint8),
-                                                bitorder="little").tobytes())
-            child = pa.Array.from_buffers(
-                pa.large_binary(), e_lens.size,
-                [vbuf, pa.py_buffer(e_off.tobytes()),
-                 pa.py_buffer(data.tobytes())],
-                null_count=int(0 if ev is None else (~ev).sum()))
-            at = spec.arrow_type
-            if at is not None and (pa.types.is_binary(at)
-                                   or pa.types.is_large_binary(at)):
-                # list<binary>: opaque bytes, no UTF-8 assumption (same
-                # rule as the scalar BSON path below)
-                if not pa.types.is_large_binary(at):
-                    child = child.cast(at)
-            else:
-                child = child.cast(pa.string())
-        elif ev is not None:
-            full = np.zeros(ev.size, dtype=cd.values.dtype)
-            full[ev] = cd.values
-            child = pa.array(full, mask=~ev).cast(_elem_type(spec.phys))
-        else:
-            child = pa.array(cd.values, type=_elem_type(spec.phys))
-        if spec.arrow_type is not None and spec.phys != codecs.PHYS_BYTE_ARRAY:
-            child = _list_child_restore(child, spec)
-        mask = None if validity is None else ~validity
-        return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), child,
-                                        mask=pa.array(mask) if mask is not None else None)
-    if _is_fsb_spec(spec):
-        w = spec.arrow_type.byte_width
-        base = int(cd.ba_offsets[0])
-        n_vals = cd.ba_offsets.size - 1
-        data = np.ascontiguousarray(
-            np.asarray(cd.ba_data)[base:base + w * n_vals])
-        vbuf = None
-        if validity is not None:
-            full = np.zeros((n, w), dtype=np.uint8)
-            full[validity] = data.reshape(-1, w)
-            data = full.reshape(-1)
-            vbuf = pa.py_buffer(np.packbits(validity.astype(np.uint8),
-                                            bitorder="little").tobytes())
-        return pa.Array.from_buffers(
-            spec.arrow_type, n, [vbuf, pa.py_buffer(data.tobytes())],
-            null_count=int(0 if validity is None else (~validity).sum()))
-    if _is_decimal_spec(spec) and spec.phys == codecs.PHYS_BYTE_ARRAY:
-        base = int(cd.ba_offsets[0])
-        n_vals = cd.ba_offsets.size - 1
-        be = np.ascontiguousarray(
-            cd.ba_data[base:base + 16 * n_vals]).reshape(-1, 16)
-        le = np.ascontiguousarray(be[:, ::-1]).reshape(-1)
-        vbuf = None
-        if validity is not None:
-            full = np.zeros((n, 16), dtype=np.uint8)
-            full[validity] = le.reshape(-1, 16)
-            le = full.reshape(-1)
-            vbuf = pa.py_buffer(np.packbits(validity.astype(np.uint8),
-                                            bitorder="little").tobytes())
-        return pa.Array.from_buffers(
-            spec.arrow_type, n, [vbuf, pa.py_buffer(le.tobytes())],
-            null_count=int(0 if validity is None else (~validity).sum()))
-    if spec.phys == codecs.PHYS_BYTE_ARRAY:
-        lens_valid = np.diff(cd.ba_offsets)
-        if validity is not None:
-            lens = np.zeros(n, dtype=np.int64)
-            lens[validity] = lens_valid
-        else:
-            lens = lens_valid
-        offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        vbuf = None
-        if validity is not None:
-            vbuf = pa.py_buffer(np.packbits(validity.astype(np.uint8), bitorder="little").tobytes())
-        out = pa.Array.from_buffers(
-            pa.large_binary(), n,
-            [vbuf, pa.py_buffer(offsets.tobytes()),
-             pa.py_buffer(np.ascontiguousarray(cd.ba_data).tobytes())],
-            null_count=int(0 if validity is None else (~validity).sum()),
-        )
-        at = spec.arrow_type
-        if at is not None and (pa.types.is_binary(at)
-                               or pa.types.is_large_binary(at)):
-            # BSON-style opaque bytes: no UTF-8 assumption
-            return out if pa.types.is_large_binary(at) else out.cast(at)
-        return out.cast(pa.string())
-    if _is_decimal_spec(spec):
-        if validity is None:
-            return _unscaled_to_decimal(cd.values, spec.arrow_type)
+    """ChunkData → Arrow array of the original logical type: the
+    `_leaf_array` over the rows, or for a list column over the element
+    slots wrapped in the rows' list offsets."""
+    n, validity = cd.n_rows, cd.validity
+    if not spec.is_list:
+        return _leaf_array(cd, spec, n, validity)
+    lens = (cd.list_lengths if cd.list_lengths is not None
+            else np.zeros(0, np.int64))
+    if validity is not None:
         full = np.zeros(n, dtype=np.int64)
-        full[validity] = cd.values
-        return _unscaled_to_decimal(full, spec.arrow_type, validity=validity,
-                                    null_count=int((~validity).sum()))
-    if validity is None:
-        out = pa.array(cd.values)
-    else:
-        full = np.zeros(n, dtype=cd.values.dtype)
-        full[validity] = cd.values
-        out = pa.array(full, mask=~validity)
-    if spec.arrow_type is not None:
-        out = out.view(spec.arrow_type)
-    return out
-
-
-def _elem_type(phys: int):
-    return {codecs.PHYS_INT32: pa.int32(), codecs.PHYS_INT64: pa.int64(),
-            codecs.PHYS_FLOAT: pa.float32(), codecs.PHYS_DOUBLE: pa.float64(),
-            codecs.PHYS_BOOL: pa.bool_()}[phys]
+        full[validity] = lens
+        lens = full
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    offsets[1:] = np.cumsum(lens)
+    child = _leaf_array(cd, spec, int(offsets[-1]), cd.elem_validity)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()), child,
+        mask=None if validity is None else pa.array(~validity))
 
 
 # --------------------------------------------------------------------------
@@ -443,8 +299,6 @@ def _chunk_sorted(parts: dict) -> bool:
     n = 0 if offs is None else offs.size - 1
     if n < 2:
         return True
-    import pyarrow.compute as pc
-
     arr = arrow_util.binary_array(data, offs)  # int64-offset safe >2 GiB
     if n > 1024:  # fast reject on a stride sample before the full pass
         s = arr.take(np.arange(0, n, n // 512, dtype=np.int64))
@@ -1304,8 +1158,7 @@ def prune(enc_df, specs: list[ColumnSpec], filters,
 
 
 def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
-         filters, page_column: str | None = None,
-         indexes: dict | None = None, auto_index: bool = True):
+         filters, indexes: dict | None = None, auto_index: bool = True):
     """Compound-predicate scan — the ONE predicate path, for a conjunction
     of per-column predicates the way a Spark user writes
     `.filter(a AND b)`. Three pruning tiers compose before any full
@@ -1320,8 +1173,8 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
          partitions, so no Python task starts on an empty one): point
          conjuncts check the chunk's bloom per value (a group where some
          point conjunct has no value left is skipped); then the page
-         directory of the driving conjunct's column (`page_column`,
-         default the first conjunct with comparable bounds) selects row
+         directory of the driving conjunct's column (the first conjunct
+         with comparable bounds) selects row
          spans — page_filter_row_runs for a range,
          page_filter_row_runs_multi for the surviving point values — and
          ALL projected columns decode exactly those row-aligned spans
@@ -1345,9 +1198,6 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     from . import bloom as _bloom
 
     spec_by = {s.name: s for s in specs}
-    if page_column is not None and page_column not in spec_by:
-        raise KeyError(
-            f"page_column {page_column!r} not in projected specs")
     conj, residual = _conjuncts(spec_by, filters)
     pruned, k = _prune(enc_df, spec_by, conj, indexes, auto_index)
     if k is not None:
@@ -1357,9 +1207,8 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
 
     # the driving conjunct: only bounds the page directory can compare
     # qualify (numeric or str/bytes — a date/Decimal literal against raw
-    # numeric page stats would TypeError in the executor). With none, or
-    # an explicit `page_column` that has none, every chunk decodes whole
-    # and the residual stays exact.
+    # numeric page stats would TypeError in the executor). With none,
+    # every chunk decodes whole and the residual stays exact.
     def _pageable(op, val):
         vs = [v for v in val if v is not None] if op == "range" else val
         return op != "match" and bool(vs) and all(
@@ -1367,8 +1216,8 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             or (isinstance(v, (int, float)) and not isinstance(v, bool))
             for v in vs)
 
-    drv = next((k for k, (col, op, val) in enumerate(conj)
-                if page_column in (None, col) and _pageable(op, val)), None)
+    drv = next((k for k, (_, op, val) in enumerate(conj)
+                if _pageable(op, val)), None)
     # the task closure takes only the driving conjunct's bounds or
     # values, never `conj`: a 'match' predicate may close over
     # unpicklable objects

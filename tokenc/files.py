@@ -28,8 +28,8 @@ import pyarrow as pa
 
 from .engine import (DEFAULT_PAGE_BYTES, DEFAULT_TARGET_RAW_BYTES,
                      INVARIANT_SCHEMA, _blob_views, _decode_groups,
-                     _encode_batches, _invariant_rows, encoded_schema,
-                     from_arrow_schema)
+                     _encode_batches, _invariant_rows, _pa_of_spec,
+                     encoded_schema, from_arrow_schema)
 from .schema import ColumnSpec
 
 DEFAULT_BATCH_ROWS = 8192
@@ -102,21 +102,6 @@ def list_parquet_files(path: str, filesystem=None) -> list[str]:
     scheme (fs-relative paths are returned for those; pair with the
     filesystem from `resolve_fs`)."""
     return _list_fs(path, filesystem)[1]
-
-
-def _pa_of_spec(spec: ColumnSpec):
-    """Arrow type an all-null fill column must carry for `spec` (columns
-    ADDED by schema evolution, absent from older data files)."""
-    from . import codecs
-
-    phys_pa = {codecs.PHYS_INT32: pa.int32(), codecs.PHYS_INT64: pa.int64(),
-               codecs.PHYS_FLOAT: pa.float32(),
-               codecs.PHYS_DOUBLE: pa.float64(),
-               codecs.PHYS_BOOL: pa.bool_(),
-               codecs.PHYS_BYTE_ARRAY: pa.string()}
-    if spec.is_list:
-        return pa.list_(spec.arrow_type or phys_pa[spec.phys])
-    return spec.arrow_type or phys_pa[spec.phys]
 
 
 def _file_field_ids(aschema: pa.Schema) -> dict:
@@ -277,13 +262,16 @@ def _read_data_file(pf, rgs: range, fill: dict,
     open ParquetFile `pf` → (batch, keep) per parquet batch, the batch
     holding the CURRENT-schema columns `fill` in its order and keep None or
     the boolean mask of rows the file's deletes leave. `fill` maps each
-    column to the Arrow type it null-fills with when the file predates it
-    (None: not fillable). Columns resolve through `_resolve_read`;
-    position deletes (`delete_files`, matched on `path` and the manifest
-    `key`) and the equality deletes that apply to sequence number `seq`
-    load here, equality tables cached per task in `eq_cache`. With no
-    deletes and no column remap the batches stream straight from parquet.
-    The scan encode and compaction both read data files through this."""
+    column to its current Arrow type: the nulls it reads as when the file
+    predates it, and the type a file storing it otherwise is cast to
+    (None: not fillable, read as stored). Columns resolve through
+    `_resolve_read`; position deletes (`delete_files`, matched on `path`
+    and the manifest `key`) and the equality deletes that apply to
+    sequence number `seq` load here, equality tables cached per task in
+    `eq_cache`. With no
+    deletes, no column remap and no type cast the batches stream straight
+    from parquet. The scan encode and compaction both read data files
+    through this."""
     import numpy as np
 
     cols = list(fill)
@@ -307,7 +295,14 @@ def _read_data_file(pf, rgs: range, fill: dict,
              for t in eq_tables for c in t.column_names}
     types.update(fill)
     wanted = cols + [c for c in types if c not in fill]
-    remap = (bool(eq_tables) or wanted != cols
+    # a file may store a column at another Arrow type than the current
+    # schema's (an int32 file and an int64 file under one `int` column):
+    # those columns cast, safely — a value that does not fit raises
+    file_type = {f.name: f.type for f in pf.schema_arrow}
+    recast = {w for w in cols if read_map[w] is not None
+              and fill[w] is not None
+              and not file_type[read_map[w]].equals(fill[w])}
+    remap = (bool(eq_tables) or wanted != cols or bool(recast)
              or any(read_map[w] != w for w in cols))
     read_cols = (cols if not remap else list(dict.fromkeys(
         v for w in wanted if (v := read_map[w]) is not None)))
@@ -323,8 +318,11 @@ def _read_data_file(pf, rgs: range, fill: dict,
             if fn is None and types[w] is None:
                 raise NotImplementedError(f"cannot null-fill column {w!r} "
                                           f"missing from {path}")
-            arrays.append(pa.nulls(rb.num_rows, types[w]) if fn is None
-                          else rb.column(rb.schema.names.index(fn)))
+            if fn is None:
+                arrays.append(pa.nulls(rb.num_rows, types[w]))
+                continue
+            col = rb.column(rb.schema.names.index(fn))
+            arrays.append(col.cast(types[w]) if w in recast else col)
         return pa.RecordBatch.from_arrays(arrays, names=wanted)
 
     file_pos = sum(pf.metadata.row_group(g).num_rows  # pre-delete cursor

@@ -24,8 +24,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from .engine import (DEFAULT_PAGE_BYTES, DEFAULT_TARGET_RAW_BYTES,
-                     _encode_batches, _rebuild, encoded_schema,
-                     from_arrow_schema)
+                     _encode_batches, _pa_of_spec, _rebuild,
+                     encoded_schema, from_arrow_schema)
 from .chunk import decode_chunk
 from .schema import ColumnSpec, specs_from_arrow_schema
 
@@ -198,11 +198,6 @@ def _read_flat(path: str, specs: list[ColumnSpec],
         take = min(int(starts[pos + 1]), hi) - max(int(starts[pos]), lo)
         batches.append(rb.slice(skip, take))
     if not batches:
-        return pa.table({s.name: pa.array([], _rebuild_type(s)) for s in sel})
+        return pa.table({s.name: pa.array([], _pa_of_spec(s)) for s in sel})
     return pa.concat_tables(batches)
 
-
-def _rebuild_type(spec: ColumnSpec):
-    from .files import _pa_of_spec  # one shared phys→Arrow type table
-
-    return _pa_of_spec(spec)

@@ -49,16 +49,6 @@ def dedup_exact_sql() -> str:
         FROM documents GROUP BY sha256(text)"""
 
 
-def minhash_signature_sql() -> str:
-    bands = _band_exprs()
-    selects = " UNION ALL ".join(
-        f"SELECT cast(doc_id AS bigint) AS doc_id, cast({b} AS bigint) AS band, "
-        f"cast(band_{b} AS bigint) AS band_hash FROM sig"
-        for b in range(BANDS))
-    band_cols = ", ".join(f"{e} AS band_{b}" for b, e in enumerate(bands))
-    return f"WITH {_shingle_cte()}, sig AS (SELECT doc_id, {band_cols} FROM sh) {selects}"
-
-
 def minhash_neardup_sql(threshold: float = 0.6, bucket_cap: int = 64) -> str:
     """Mirrors dedup.minhash_neardup: signatures over exact-content
     representatives, buckets wider than bucket_cap dropped."""
@@ -167,36 +157,6 @@ def fingerprint_sql() -> str:
                list_reduce(list_transform(ws, w -> cast({wid} AS bigint) * cast({wid} AS bigint)),
                            (a, x) -> (a + x) % {m}) END AS fp_bag
         FROM w"""
-
-
-def lsh_topk_sql(k: int = 5, n_queries: int = 20) -> str:
-    """Replicates simsearch.lsh_topk (single-probe): deterministic integer
-    hyperplanes -> sign-bit bucket -> bucket-local exact cosine top-k."""
-    from .simsearch import N_PLANES
-
-    bit_terms = []
-    for p in range(N_PLANES):
-        plane = PLANE_EXPR.format(p=p, d="i - 1")
-        dot = (f"list_sum(list_transform(embedding, (x, i) -> "
-               f"cast(x AS double) * ({plane})))")
-        bit_terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << p} ELSE 0 END)")
-    sig = " + ".join(bit_terms)
-    cos = ("list_sum(list_transform(q.qe, (x, i) -> cast(x AS double) * cast(c.embedding[i] AS double)))"
-           " / nullif(sqrt(list_sum(list_transform(q.qe, x -> cast(x AS double) * cast(x AS double))))"
-           " * sqrt(list_sum(list_transform(c.embedding, x -> cast(x AS double) * cast(x AS double)))), 0)")
-    return f"""
-        WITH s AS (SELECT cast(vec_id AS bigint) AS vid, embedding,
-                          cast({sig} AS bigint) AS bucket FROM embeddings),
-        q AS (SELECT vid AS query_id, embedding AS qe, bucket AS qb
-              FROM s WHERE vid < {n_queries}),
-        cand AS (SELECT q.query_id, c.vid AS neighbor_id, {cos} AS cos
-                 FROM s c JOIN q ON c.bucket = q.qb AND c.vid != q.query_id),
-        ranked AS (SELECT query_id, neighbor_id, cos,
-                          row_number() OVER (PARTITION BY query_id
-                                             ORDER BY round(cos, 6) DESC, neighbor_id) AS rank
-                   FROM cand)
-        SELECT query_id, neighbor_id, round(cos, 4) AS cosine, cast(rank AS int) AS rank
-        FROM ranked WHERE rank <= {k}"""
 
 
 def embed_neardup_sql(threshold: float = 0.4, n_planes: int = 32,
