@@ -183,6 +183,17 @@ def main():
         sidx.filter(spark.read.parquet(f"{tmp}/multi"), 100, 120)
         .select("rg_id", "n_rows"))
 
+    # 15. index-bounded lookup: the index bounds the kept groups' blob
+    # bytes, so scan() fetches them and decodes in the driver — the plan
+    # is a LocalTableScan with the residual folded in, no Python stage
+    mt = spark.read.parquet(f"{tmp}/multi")
+    plans["INDEX-BOUNDED LOOKUP (driver decode, no Python worker)"] = \
+        plan_of(scan(mt, mspecs, to_arrow_schema(
+            spark.read.parquet(f"{SF_DIR}/documents.parquet")
+            .select("doc_id", "n_chars", "source").schema),
+            [("doc_id", "between", (100, 120))],
+            indexes={"doc_id": SortedKeyIndex.build(mt, "doc_id")}))
+
     n_exchange = {k: v.count("Exchange") for k, v in plans.items()}
 
     lines = [
@@ -243,7 +254,12 @@ def main():
         "binary search over row-group bounds happens on the driver's "
         "cached index (O(log n) probed bounds), so the cluster-side plan "
         "never scans per-row-group stats at all.",
-        f"14. Exchange count per plan: { {k: n for k, n in n_exchange.items()} }"
+        "14. **An index-bounded lookup starts no Python worker**: when "
+        "the sorted index bounds the kept row groups and their blobs total "
+        "at most `DECODE_BATCH_BYTES`, `scan()` fetches those blobs and "
+        "runs its decode body in the driver; the plan is a "
+        "`LocalTableScan` with the residual applied, with no `MapInArrow`.",
+        f"15. Exchange count per plan: { {k: n for k, n in n_exchange.items()} }"
         " — encode and decode have none on either path: file-granular "
         "tasks start from a `Range` with one row per task and take their "
         "slice of the file list from the task closure. The Exchanges that "

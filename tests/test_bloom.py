@@ -54,6 +54,21 @@ class TestBloomCore:
         b = hash_values(np.array(strs, dtype=object))
         assert (a == b).all()
 
+    def test_bytes_concat_hashes_pinned(self):
+        """Stored filters stay valid only while the hash of a value never
+        changes: these values (empty, embedded NUL, multi-byte UTF-8,
+        invalid UTF-8, long) hash to fixed numbers."""
+        strs = [b"", b"a\x00b", b"doc-000000000001", "ünïcode".encode(),
+                b"\xff\xfe\x00", b"x" * 40]
+        data = np.frombuffer(b"".join(strs), dtype=np.uint8)
+        offs = np.cumsum([0] + [len(s) for s in strs]).astype(np.int64)
+        got = [int(h) for h in hash_bytes_concat(data, offs)]
+        assert got == [0x186da64456263a46, 0x85208b62dfe18cce,
+                       0x8a2279a7139dce5b, 0x56b07723ff865247,
+                       0xdd77487facaf2c7b, 0xf0da514a3f49488b]
+        # a slice of the same buffers (offsets not starting at 0)
+        assert [int(h) for h in hash_bytes_concat(data, offs[2:])] == got[2:]
+
     def test_empty(self):
         blob = build_bloom(hash_values(np.array([], dtype=np.int64)))
         assert not might_contain(blob, hash_values(np.array([1]))).any()

@@ -1360,6 +1360,13 @@ class TestCompaction:
             list(_read_data_file(pf, range(1), {"x": pa.int32()}, None,
                                  None, b, b, 0, None, None, {}))
 
+    def test_out_of_range_file_rejected_by_name(self, tmp_path):
+        """build_table rejects a data file whose column holds a value the
+        table's type cannot hold, naming the file and the column."""
+        root, (_, b) = self._mixed_width_table(tmp_path, [7, 1 << 40])
+        with pytest.raises(ValueError, match="b.parquet.*'x'"):
+            build_table(root, [os.path.join(root, "data", "a.parquet"), b])
+
     def test_noop_returns_current_metadata(self, spark, table_dir):
         from tokenc.iceberg import compact_table
 

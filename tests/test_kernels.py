@@ -33,25 +33,13 @@ class TestVarint:
         val, pos = varint.decode_uvarint(np.frombuffer(expect, np.uint8))
         assert val == num and pos == len(expect)
 
-    def test_array_roundtrip(self):
-        rng = np.random.default_rng(42)
-        vals = rng.integers(0, 2**63, 10_000, dtype=np.uint64)
-        vals[:100] = np.arange(100)  # small values too
-        blob = varint.encode_uvarint_array(vals)
-        scalar = b"".join(varint.encode_uvarint(int(v)) for v in vals[:200])
-        assert blob.startswith(scalar)
-        out, pos = varint.decode_uvarint_array(blob, vals.size)
-        assert pos == len(blob)
-        np.testing.assert_array_equal(out, vals)
-
     def test_zigzag(self):
         vals = np.array([0, -1, 1, -2, 2, 2**31 - 1, -2**31, 2**62, -2**62], dtype=np.int64)
         zz = varint.zigzag_encode(vals)
         assert list(zz[:5]) == [0, 1, 2, 3, 4]  # spec mapping
-        back = varint.zigzag_decode(zz)
-        np.testing.assert_array_equal(back, vals)
-        for v in vals:
-            assert varint.zigzag_decode_scalar(varint.zigzag_encode_scalar(int(v), 64)) == v
+        for v, z in zip(vals, zz):
+            assert varint.zigzag_encode_scalar(int(v), 64) == int(z)
+            assert varint.zigzag_decode_scalar(int(z)) == v
 
 
 # --------------------------------------------------------------- bitpack ----
@@ -108,13 +96,6 @@ class TestRLE:
         blob = rle.encode(vals, width)
         out, pos = rle.decode(blob, width, vals.size)
         assert pos <= len(blob)
-        np.testing.assert_array_equal(out, vals)
-
-    def test_len_prefixed(self):
-        vals = np.array([1, 1, 1, 2, 2, 3] * 10, dtype=np.uint64)
-        blob = rle.encode_len_prefixed(vals, 2)
-        out, pos = rle.decode_len_prefixed(blob, 2, vals.size)
-        assert pos == len(blob)
         np.testing.assert_array_equal(out, vals)
 
     def test_empty(self):

@@ -302,17 +302,10 @@ _LEAF_CASES = (
 
 
 def _decoded_type(t: pa.DataType) -> pa.DataType:
-    """The type read_table gives back: dictionary input densifies to its
-    value type, large_string reads as string, large_list as list."""
-    if pa.types.is_dictionary(t):
-        return t.value_type
-    if pa.types.is_large_string(t):
-        return pa.string()
-    if pa.types.is_large_list(t):
-        return pa.list_(_decoded_type(t.value_type))
-    if pa.types.is_list(t):
-        return pa.list_(_decoded_type(t.value_type))
-    return t
+    """Dictionary types as their value type: read_table rebuilds a
+    dictionary column from its values, so its dictionary holds only the
+    values left after a slice and equality is checked on the values."""
+    return t.value_type if pa.types.is_dictionary(t) else t
 
 
 class TestLeafRoundTrip:
@@ -357,8 +350,9 @@ class TestLeafRoundTrip:
         d = str(tmp_path / "t")
         write_table(src, d)
         got = read_table(d)
-        want = src.cast(pa.schema([pa.field(f.name, _decoded_type(f.type))
-                                   for f in src.schema]))
-        assert got.equals(want)
-        if want.schema == src.schema:
+        assert got.schema == src.schema
+        dense = pa.schema([pa.field(f.name, _decoded_type(f.type))
+                           for f in src.schema])
+        assert got.cast(dense).equals(src.cast(dense))
+        if dense == src.schema:
             assert got.equals(src)

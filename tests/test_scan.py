@@ -243,18 +243,22 @@ class TestOnePredicatePath:
             assert "ArrowEvalPython" not in plan
             assert "BatchEvalPython" not in plan
 
-    def test_one_group_index_probe_coalesces(self, spark, scan_enc):
-        """An index-answered prune bounds the surviving groups at k, so the
-        decode runs in k tasks (Python runs even on empty partitions):
+    def test_one_group_index_probe_coalesces(self, spark, scan_enc,
+                                             monkeypatch):
+        """An index-answered prune bounds the surviving groups at k, so on
+        the task path (forced here: no blob budget for the driver path)
+        the decode runs in k tasks (Python runs even on empty partitions):
         a one-group probe plans Coalesce 1 and returns the same rows as
         the stats-only prune."""
         import io
         from contextlib import redirect_stdout
 
+        import tokenc.engine as eng
         from tokenc.engine import scan
 
         enc, specs, schema = scan_enc
         flt = [("k", "between", (20_100, 20_120))]
+        monkeypatch.setattr(eng, "DECODE_BATCH_BYTES", -1)
         df = scan(enc, specs, schema, flt)
         buf = io.StringIO()
         with redirect_stdout(buf):
@@ -329,3 +333,168 @@ class TestOnePredicatePath:
                 assert not m.any() or rid in kept, (flt, rid)
             pruned_some |= len(kept) < len(groups)
         assert pruned_some
+
+
+def _plan(df) -> str:
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+@pytest.fixture(scope="module")
+def paths_enc(spark):
+    """Cached 8-group table with small pages: int64 key k, string key s
+    (bloom), int32 nk with null keys, double f with NaNs, list column."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from tokenc.engine import encode_df
+    from tokenc.schema import specs_from_arrow_schema
+
+    df = (spark.range(20_000).select(
+        F.col("id").alias("k"),
+        F.format_string("s%06d", "id").alias("s"),
+        F.when(F.col("id") % 5 == 0, None)
+         .otherwise(F.col("id")).cast("int").alias("nk"),
+        F.when(F.col("id") % 97 == 0, F.lit(float("nan")))
+         .otherwise(F.col("id") / 10).alias("f"),
+        F.array((F.col("id") % 3).cast("int"),
+                (F.col("id") % 5).cast("int")).alias("toks"))
+        .repartitionByRange(8, "k").sortWithinPartitions("k"))
+    schema = to_arrow_schema(df.schema)
+    specs = specs_from_arrow_schema(schema, bloom_columns=["s"])
+    enc = encode_df(df, specs, target_raw_bytes=1 << 20,
+                    page_bytes=2 << 10).cache()
+    assert enc.count() == 8
+    return enc, specs, schema
+
+
+class TestLookupPaths:
+    """An index-bounded scan decodes in the driver when the kept blobs fit
+    DECODE_BATCH_BYTES, else in a mapInArrow task; both run _lookup_batch
+    and return the same rows as a scan without the index."""
+
+    CASES = {
+        "int_range": [("k", "between", (1234, 1500))],
+        "int_eq": [("k", "=", 777)],
+        "str_range": [("s", "between", ("s000100", "s000150"))],
+        "str_in_absent": [("s", "in", ["s000010", "s019999", "nope",
+                                       "s000010x", "s0"])],
+        "match": [("s", "match", lambda x: x.like("s0001%")),
+                  ("k", "<", 5000)],
+        "empty": [("k", ">", 10 ** 9)],
+        "null_keys_range": [("nk", "between", (100, 300))],
+        "null_keys_in": [("nk", "in", [5, 10, 11, 12])],
+        "strict_bounds": [("k", ">", 3000), ("k", "<", 3010)],
+        "float_nan": [("f", ">=", 1990.0), ("k", ">=", 19_000)],
+    }
+
+    @pytest.mark.parametrize("case", sorted(CASES))
+    def test_driver_and_task_paths_agree(self, spark, paths_enc, case,
+                                         monkeypatch):
+        import tokenc.engine as eng
+
+        enc, specs, schema = paths_enc
+        flt = self.CASES[case]
+
+        def rows(df):
+            return (df.orderBy("k").toPandas()
+                    .assign(toks=lambda d: d["toks"].map(list)))
+
+        drv = eng.scan(enc, specs, schema, flt)
+        plan = _plan(drv)
+        assert "LocalTableScan" in plan and "MapInArrow" not in plan, plan
+        with monkeypatch.context() as m:
+            m.setattr(eng, "DECODE_BATCH_BYTES", -1)
+            task = eng.scan(enc, specs, schema, flt)
+        assert "MapInArrow" in _plan(task)
+        got, want = rows(drv), rows(eng.scan(enc, specs, schema, flt,
+                                             auto_index=False))
+        pd.testing.assert_frame_equal(got, rows(task))
+        pd.testing.assert_frame_equal(got, want)
+        if case == "float_nan":
+            # NaN sorts above every double in Spark, so it passes f >= x
+            assert got["f"].isna().sum() == sum(
+                1 for i in range(19_000, 20_000) if i % 97 == 0)
+        if case == "null_keys_in":
+            assert got["k"].tolist() == [11, 12]
+
+    def test_key_prefilter_types(self, paths_enc):
+        """The Arrow pre-filter runs only where its answer equals Spark's:
+        int32/int64 with int literals, strings with str/bytes literals."""
+        from tokenc.engine import _key_prefilter
+
+        _, specs, _ = paths_enc
+        by = {s.name: s for s in specs}
+        assert _key_prefilter(by["k"], "range", [1, 5]) is not None
+        assert _key_prefilter(by["nk"], "in", [5]) is not None
+        assert _key_prefilter(by["s"], "in", ["a", b"b"]) is not None
+        assert _key_prefilter(by["f"], "range", [1990.0, None]) is None
+        assert _key_prefilter(by["k"], "range", [1.5, None]) is None
+        assert _key_prefilter(by["k"], "in", [2 ** 70]) is None
+        assert _key_prefilter(by["s"], "in", ["a", 1]) is None
+        assert _key_prefilter(by["toks"], "in", [1]) is None
+
+    def test_key_first_hit_runs(self, paths_enc):
+        """Late materialization: the key column decodes over its page runs,
+        then the other columns over the hit rows alone."""
+        import tokenc.engine as eng
+
+        enc, specs, schema = paths_enc
+        tbl = enc.toArrow()
+        views = eng._blob_views(tbl, "k_blob")
+        i = next(i for i, v in enumerate(views)
+                 if 5000 in eng.decode_chunk(v).values)
+        pred = eng._key_prefilter(specs[0], "in", [5000, 5002, 5003])
+        key, runs = eng._key_first(views[i], specs[0], None,
+                                   lambda a: pred(a, [5000, 5002, 5003]))
+        assert key.to_pylist() == [5000, 5002, 5003]
+        lo = int(eng.decode_chunk(views[i]).values[0])
+        assert runs == [(5000 - lo, 5001 - lo), (5002 - lo, 5004 - lo)]
+        key, runs = eng._key_first(views[i], specs[0], None,
+                                   lambda a: pred(a, [-1]))
+        assert key is None and runs == []
+
+    def test_perfbench_shape_plans_local(self, spark):
+        """An 8-group table shaped like the benchmark's (sorted string
+        doc ids, token lists): an 8-key get with 3 absent keys and a 0.1%
+        range scan plan as a LocalTableScan, with no MapInArrow."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from tokenc.engine import encode_df, get, scan, sorted_index_for
+        from tokenc.schema import specs_from_arrow_schema
+
+        n = 16_000
+        df = (spark.range(n).select(
+            F.format_string("doc%09d", F.col("id") * 2).alias("doc_id"),
+            F.sequence(F.lit(0), (F.col("id") % 40).cast("int"))
+             .alias("tokens"),
+            ((F.col("id") % 40) + 1).cast("int").alias("n_tok"),
+            F.concat(F.lit("src"), (F.col("id") % 5).cast("string"))
+             .alias("source"))
+            .repartitionByRange(8, "doc_id").sortWithinPartitions("doc_id"))
+        schema = to_arrow_schema(df.schema)
+        specs = specs_from_arrow_schema(schema, bloom_columns=["doc_id"])
+        enc = encode_df(df, specs, target_raw_bytes=64 << 20).cache()
+        assert enc.count() == 8
+        index = sorted_index_for(enc, "doc_id")
+        present = [2 * i for i in (3, 2500, 7001, 9999, 15_998)]
+        absent = [2 * i + 1 for i in (10, 4000, 12_345)]
+        keys = [f"doc{k:09d}" for k in present + absent]
+        g = get(enc, specs, schema, "doc_id", keys, index=index)
+        lo, w = 8000, n // 1000
+        s = scan(enc, specs, schema,
+                 [("doc_id", "between", (f"doc{2 * lo:09d}",
+                                         f"doc{2 * (lo + w - 1):09d}"))],
+                 indexes={"doc_id": index})
+        for df_, want in ((g, len(present)), (s, w)):
+            plan = _plan(df_)
+            assert "LocalTableScan" in plan and "MapInArrow" not in plan
+            assert df_.count() == want
+        assert sorted(g.toPandas()["doc_id"]) == sorted(
+            f"doc{k:09d}" for k in present)

@@ -61,14 +61,19 @@ def hash_values(values) -> np.ndarray:
 
 
 def hash_bytes_concat(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Hashes for a flattened byte_array column (ba_data + ba_offsets)."""
+    """Hashes for a flattened byte_array column (ba_data + ba_offsets).
+    Arrow builds the per-value bytes objects in C from the two buffers;
+    hash_array sees the same objects as hash_values' bytes branch, so the
+    hashes (and every stored filter) are unchanged."""
     import pandas as pd
+    import pyarrow as pa
 
-    mv = memoryview(np.ascontiguousarray(data))
-    obj = np.empty(len(offsets) - 1, dtype=object)
-    obj[:] = [bytes(mv[offsets[i]:offsets[i + 1]])
-              for i in range(len(offsets) - 1)]
-    return pd.util.hash_array(obj, categorize=False)
+    offs = np.ascontiguousarray(offsets, dtype=np.int64)
+    arr = pa.Array.from_buffers(
+        pa.large_binary(), len(offs) - 1,
+        [None, pa.py_buffer(offs), pa.py_buffer(np.ascontiguousarray(data))])
+    return pd.util.hash_array(arr.to_numpy(zero_copy_only=False),
+                              categorize=False)
 
 
 def _block_and_mask(h: np.ndarray, nblocks: int):

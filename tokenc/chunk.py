@@ -814,15 +814,20 @@ def decode_chunk_rows_multi(blob: bytes | np.ndarray,
     else:
         full = _decode_payload(codec, phys, payload, n_values)
 
-    out, total_decoded = [], 0
+    out, total_decoded, spans = [], 0, {}
     for row_lo, row_hi in ranges:
         row_lo = max(0, int(row_lo))
         row_hi = min(n_rows, int(row_hi))
         if paged:
             p0 = row_lo // page_rows
             p1 = min((row_hi + page_rows - 1) // page_rows, len(entries))
-            values, ba_data, ba_offsets, decoded = _decode_pages(
-                codec, phys, payload, (p0, p1))
+            # runs inside the same pages (point hits) decode them once
+            if (p0, p1) in spans:
+                values, ba_data, ba_offsets, _ = spans[p0, p1]
+                decoded = 0
+            else:
+                values, ba_data, ba_offsets, decoded = spans[p0, p1] = \
+                    _decode_pages(codec, phys, payload, (p0, p1))
             span_r0 = p0 * page_rows
         else:
             values, ba_data, ba_offsets = full

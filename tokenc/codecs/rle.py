@@ -198,17 +198,3 @@ def _expand_ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     from .plain import _ranges_to_indices
 
     return _ranges_to_indices(starts, lens)
-
-
-def encode_len_prefixed(vals: np.ndarray, width: int) -> bytes:
-    """Framing used for data-page v1 levels: u32 LE byte length + payload
-    (reference: encoding/encodingwrite.go:174-181)."""
-    payload = encode(vals, width)
-    return len(payload).to_bytes(4, "little") + payload
-
-
-def decode_len_prefixed(buf: bytes | np.ndarray, width: int, count: int, pos: int = 0) -> tuple[np.ndarray, int]:
-    raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
-    ln = int.from_bytes(raw[pos:pos + 4].tobytes(), "little")
-    vals, _ = decode(raw, width, count, pos + 4)
-    return vals, pos + 4 + ln

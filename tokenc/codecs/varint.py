@@ -66,59 +66,11 @@ def uvarint_matrix(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return groups, nbytes
 
 
-def encode_uvarint_array(vals: np.ndarray) -> bytes:
-    """Vectorized ULEB128 of a uint64 array → concatenated bytes."""
-    vals = np.ascontiguousarray(vals, dtype=np.uint64)
-    if vals.size == 0:
-        return b""
-    groups, nbytes = uvarint_matrix(vals)
-    keep = np.arange(_MAX_VARINT_BYTES)[None, :] < nbytes[:, None]
-    return groups[keep].tobytes()
-
-
-def decode_uvarint_array(buf: bytes | np.ndarray, count: int, pos: int = 0) -> tuple[np.ndarray, int]:
-    """Vectorized decode of `count` varints starting at `pos`.
-
-    Returns (uint64 array, next_pos).
-    """
-    if count == 0:
-        return np.empty(0, dtype=np.uint64), pos
-    raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
-    raw = raw[pos:]
-    is_last = (raw & 0x80) == 0
-    # index of the byte ending the `count`-th varint
-    ends = np.flatnonzero(is_last)
-    if ends.size < count:
-        raise ValueError("buffer exhausted while decoding varints")
-    last = ends[count - 1]
-    seg = raw[: last + 1]
-    seg_last = is_last[: last + 1]
-    # value id per byte: cumsum of "previous byte was last"
-    vid = np.zeros(seg.size, dtype=np.int64)
-    vid[1:] = np.cumsum(seg_last[:-1])
-    starts = np.zeros(count, dtype=np.int64)
-    starts[1:] = ends[: count - 1] + 1
-    within = np.arange(seg.size, dtype=np.int64) - starts[vid]
-    contrib = (seg.astype(np.uint64) & np.uint64(0x7F)) << (within.astype(np.uint64) * np.uint64(7))
-    out = np.zeros(count, dtype=np.uint64)
-    np.bitwise_or.at(out, vid, contrib)
-    return out, pos + int(last) + 1
-
-
 def zigzag_encode(vals: np.ndarray) -> np.ndarray:
     """Signed → unsigned zigzag ((n << 1) ^ (n >> (w-1))), result uint64."""
     vals = np.ascontiguousarray(vals, dtype=np.int64)
     u = vals.view(np.uint64)
     return (u << np.uint64(1)) ^ (vals >> 63).view(np.uint64)
-
-
-def zigzag_decode(u: np.ndarray, bits: int = 64) -> np.ndarray:
-    u = np.asarray(u, dtype=np.uint64)
-    out = (u >> np.uint64(1)) ^ (np.uint64(0) - (u & np.uint64(1)))
-    signed = out.view(np.int64)
-    if bits == 32:
-        return signed.astype(np.int32)
-    return signed
 
 
 def zigzag_encode_scalar(num: int, bits: int = 64) -> int:

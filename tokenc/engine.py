@@ -468,36 +468,51 @@ def encode_df(df, specs: list[ColumnSpec], *,
 # decode
 # --------------------------------------------------------------------------
 
-DECODE_BATCH_BYTES = 64 << 20  # blob bytes per yielded output batch
+# blob bytes per yielded output batch, and the most an index-bounded
+# scan() fetches to decode in the driver
+DECODE_BATCH_BYTES = 64 << 20
 
 
 def _blob_views(tbl: pa.Table, name: str) -> list[np.ndarray]:
     """Per-row zero-copy numpy views of a binary column's payloads — no
-    .as_py() copies: one view straight into the Arrow data buffer per blob."""
-    col = tbl.column(name).combine_chunks()
-    bufs = col.buffers()
-    off_dtype = np.int64 if pa.types.is_large_binary(col.type) else np.int32
-    offs = np.frombuffer(bufs[1], off_dtype)[col.offset: col.offset + len(col) + 1]
-    data = (np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None
-            else np.empty(0, np.uint8))
-    return [data[offs[i]:offs[i + 1]] for i in range(len(col))]
+    .as_py() copies: one view straight into the Arrow data buffer per blob,
+    chunk by chunk (combining the chunks would copy every blob)."""
+    out = []
+    for col in tbl.column(name).chunks:
+        if not len(col):
+            continue
+        bufs = col.buffers()
+        off_dtype = (np.int64 if pa.types.is_large_binary(col.type)
+                     else np.int32)
+        offs = np.frombuffer(bufs[1], off_dtype)[
+            col.offset: col.offset + len(col) + 1]
+        data = (np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None
+                else np.empty(0, np.uint8))
+        out.extend(data[offs[i]:offs[i + 1]] for i in range(len(col)))
+    return out
 
 
 def _decode_groups(views: list[list[np.ndarray]], specs: list[ColumnSpec],
-                   out_schema: pa.Schema, groups, runs=None):
+                   out_schema: pa.Schema, groups, runs=None, known=None):
     """The one chunk → Arrow assembly behind every Spark decode frontend:
     decode row groups `groups` (indexes into each column's blob views,
     `views[j]` for `specs[j]`) into ONE RecordBatch of `out_schema`.
     `runs[k]` says what group `groups[k]` contributes: None → the whole
     chunk (decode_chunk); a list of (row_lo, row_hi) runs → exactly those
     rows, each chunk parsed once for all runs (decode_chunk_rows_multi);
-    [] → nothing. Returns None when no group contributes."""
+    [] → nothing. `known[k]`, when given, maps a column index to that
+    group's column already decoded over its runs, which is used as is.
+    Returns None when no group contributes."""
     cols: list[list[pa.Array]] = [[] for _ in specs]
     for k, i in enumerate(groups):
         r = None if runs is None else runs[k]
         if r is not None and not r:
             continue
+        have = (known[k] if known is not None else None) or {}
         for j, spec in enumerate(specs):
+            if j in have:
+                cols[j].append(have[j])
+                continue
             cds = ([decode_chunk(views[j][i])] if r is None
                    else decode_chunk_rows_multi(views[j][i], r)[0])
             cols[j].extend(_rebuild(cd, spec) for cd in cds)
@@ -767,7 +782,7 @@ def prune_rowgroups_eq(enc_df, column: str, value):
     one bloom check per ROW GROUP (metadata scale) inside a vectorized
     pandas UDF over the manifest's meta struct; chunks without a filter
     (bloom not opted in at encode) are kept. scan()/get() check the same
-    filters per value inside their decode task instead; this form is for
+    filters per value inside their decode body instead; this form is for
     callers that want the pruned manifest itself."""
     import pandas as pd
     from pyspark.sql import functions as F
@@ -1097,17 +1112,19 @@ def _conjuncts(spec_by: dict, filters):
 
 
 def _prune(enc_df, spec_by: dict, conj: list, indexes, auto_index: bool):
-    """prune() on normalised conjuncts → (frame, k): every _keep
-    condition, ANDed into one where, and k, the fewest row groups any
+    """prune() on normalised conjuncts → (frame, k, nbytes): every _keep
+    condition, ANDed into one where; k, the fewest row groups any
     index-answered conjunct kept (None when no index answered) — an
-    upper bound on the surviving groups. A column's index is
+    upper bound on the surviving groups; and nbytes, the fewest blob
+    bytes any index-answered conjunct kept (None when no answering index
+    knows its groups' sizes). A column's index is
     `indexes[col]`, else — with `auto_index`, and only on a persisted
     frame (_is_persisted) — the memoized sorted_index_for: point
     conjuncts look each value up on any layout (the prefix-max lookup is
     correct for any overlap pattern), range conjuncts probe it only when
     it is clustered."""
     points = {col for col, op, _ in conj if op == "in"}
-    auto, conds, k = {}, [], None
+    auto, conds, k, nbytes = {}, [], None, None
     for col, op, val in conj:
         idx = (indexes or {}).get(col)
         if (idx is None and op != "match" and auto_index
@@ -1133,11 +1150,14 @@ def _prune(enc_df, spec_by: dict, conj: list, indexes, auto_index: bool):
             ids = None
         if ids is not None:
             k = len(ids) if k is None else min(k, len(ids))
+            b = idx._blob_bytes(ids)
+            if b is not None:
+                nbytes = b if nbytes is None else min(nbytes, b)
         cond = _keep(spec_by[col], op, val, ids)
         if cond is not None:
             conds.append(cond)
     return (enc_df.where(reduce(operator.and_, conds)) if conds
-            else enc_df), k
+            else enc_df), k, nbytes
 
 
 def prune(enc_df, specs: list[ColumnSpec], filters,
@@ -1150,11 +1170,123 @@ def prune(enc_df, specs: list[ColumnSpec], filters,
     reader/columnbuffer.go:158-230). `match` takes a Column → Column
     predicate (e.g. `lambda x: x.like('R%')`) evaluated on the chunk's
     recorded distinct set. Blooms are not probed here: scan() checks them
-    per value inside its decode task, and prune_rowgroups_eq is the
+    per value inside its decode body, and prune_rowgroups_eq is the
     metadata-side bloom prune."""
     spec_by = {s.name: s for s in specs}
     return _prune(enc_df, spec_by, _conjuncts(spec_by, filters)[0],
                   indexes, auto_index)[0]
+
+
+def _key_prefilter(spec: ColumnSpec, op: str, val):
+    """The driving conjunct as a pyarrow.compute test over its decoded
+    column, `pred(key, vals) → bool mask` (`vals`: the live values of an
+    'in' conjunct), or None where Arrow's answer may differ from Spark's.
+    Only int32/int64 columns with int literals and byte-array columns with
+    str/bytes literals qualify (compared as int64 and as raw bytes, which
+    is Spark's order), with no logical type and no list. The mask may keep
+    more rows than the conjunct (merged strict bounds compare inclusive),
+    never fewer: the Spark residual stays the exact filter."""
+    if spec.arrow_type is not None or spec.is_list:
+        return None
+    lits = [v for v in val if v is not None] if op == "range" else list(val)
+    if spec.phys == codecs.PHYS_BYTE_ARRAY and all(
+            isinstance(v, (str, bytes)) for v in lits):
+        typ = pa.binary()
+
+        def conv(v):
+            return v.encode() if isinstance(v, str) else v
+    elif spec.phys in (codecs.PHYS_INT32, codecs.PHYS_INT64) and all(
+            isinstance(v, int) and not isinstance(v, bool)
+            and -2 ** 63 <= v < 2 ** 63 for v in lits):
+        typ, conv = pa.int64(), int
+    else:
+        return None
+
+    def pred(key: pa.Array, vals) -> np.ndarray:
+        a = key.cast(typ)
+        if op == "in":
+            m = pc.is_in(a, value_set=pa.array([conv(v) for v in vals], typ))
+        else:
+            conds = []
+            if val[0] is not None:
+                conds.append(pc.greater_equal(a, pa.scalar(conv(val[0]), typ)))
+            if val[1] is not None:
+                conds.append(pc.less_equal(a, pa.scalar(conv(val[1]), typ)))
+            m = reduce(pc.and_, conds)
+        return np.asarray(m.fill_null(False))
+
+    return pred
+
+
+def _key_first(blob: np.ndarray, spec: ColumnSpec, runs, hits):
+    """Late materialization of one group: decode the driving column over
+    `runs` (None = the whole chunk), keep the rows the `hits` mask marks →
+    (their key values, their row runs). The other columns then decode
+    only over those runs; a group without a hit decodes nothing more."""
+    if runs is None:
+        cds = [decode_chunk(blob)]
+        runs = [(0, cds[0].n_rows)]
+    else:
+        cds = decode_chunk_rows_multi(blob, runs)[0]
+    parts = [_rebuild(cd, spec) for cd in cds]
+    key = parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
+    m = hits(key)
+    rows = np.concatenate([np.arange(lo, lo + cd.n_rows)
+                           for (lo, _), cd in zip(runs, cds)])[m]
+    if not rows.size:
+        return None, []
+    brk = np.flatnonzero(np.diff(rows) != 1) + 1
+    starts = rows[np.r_[0, brk]]
+    ends = rows[np.r_[brk - 1, rows.size - 1]] + 1
+    return key.filter(pa.array(m)), list(zip(starts.tolist(), ends.tolist()))
+
+
+def _lookup_batch(tbl: pa.Table, specs: list[ColumnSpec],
+                  out_schema: pa.Schema, probes, drive):
+    """The one decode body of scan(), run by its mapInArrow task and by its
+    driver path alike: `tbl` holds surviving row groups, one per row, with
+    every spec's `*_blob` and a `__bloom{k}` column per entry of `probes`
+    ((conjunct index, [(value, bloom hashes)]) per 'in' conjunct). Per
+    group: point conjuncts check the chunk's bloom per value (a group where
+    some point conjunct has no value left is skipped); the page directory
+    of the driving conjunct's column selects row runs; where
+    `drive`'s pre-filter exists the key column decodes first and the rest
+    only over its hits (_key_first). `drive` is (column index in specs,
+    conjunct index, range bounds, pre-filter or None), or None to decode
+    every surviving group whole. → one RecordBatch of `out_schema`, or
+    None when no row survives."""
+    from . import bloom as _bloom
+
+    n = tbl.num_rows
+    if n == 0:
+        return None
+    views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
+    blooms = [tbl.column(f"__bloom{k}").to_pylist() for k, _ in probes]
+    dj, dk, dval, pred = (None,) * 4 if drive is None else drive
+    runs, known = [], []
+    for i in range(n):
+        live = {}
+        for (k, pv), bl in zip(probes, blooms):
+            bb = None if bl[i] is None else bytes(bl[i])
+            live[k] = [v for v, hs in pv if bb is None or hs is None
+                       or bool(_bloom.might_contain(bb, hs).any())]
+        # None (no driving conjunct / no usable page directory) decodes
+        # the whole chunk; [] (no page can match) skips it
+        r, have = None, None
+        if not all(live.values()):
+            r = []
+        elif drive is not None:
+            vals = live.get(dk)
+            # ONE parse (incl. decompression) for all live values
+            r = (page_filter_row_runs(views[dj][i], *dval) if vals is None
+                 else page_filter_row_runs_multi(views[dj][i], vals))
+            if pred is not None and r != []:
+                key, r = _key_first(views[dj][i], specs[dj], r,
+                                    lambda a: pred(a, vals))
+                have = {dj: key}
+        runs.append(r)
+        known.append(have)
+    return _decode_groups(views, specs, out_schema, range(n), runs, known)
 
 
 def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
@@ -1168,19 +1300,29 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
 
       1. ROW GROUPS: prune() — every conjunct's manifest keep condition
          (sorted-index rg_id IN-list, min/max, distinct set) in one where.
-      2. ONE DECODE TASK per batch of surviving row groups (when an
-         index bounds the survivors at k, the frame coalesces to k
-         partitions, so no Python task starts on an empty one): point
-         conjuncts check the chunk's bloom per value (a group where some
-         point conjunct has no value left is skipped); then the page
+      2. ONE DECODE BODY (_lookup_batch) over the surviving row groups:
+         point conjuncts check the chunk's bloom per value (a group where
+         some point conjunct has no value left is skipped); then the page
          directory of the driving conjunct's column (the first conjunct
-         with comparable bounds) selects row
-         spans — page_filter_row_runs for a range,
-         page_filter_row_runs_multi for the surviving point values — and
-         ALL projected columns decode exactly those row-aligned spans
-         (chunk.decode_chunk_rows_multi — skip-without-decode).
+         with comparable bounds) selects row spans —
+         page_filter_row_runs for a range, page_filter_row_runs_multi for
+         the surviving point values. On an int or string driving column
+         the key column decodes first over those spans, pyarrow.compute
+         evaluates the conjunct, and the other projected columns decode
+         only the hit rows (chunk.decode_chunk_rows_multi —
+         skip-without-decode, late materialization); elsewhere every
+         projected column decodes the page spans.
       3. RESIDUAL: the exact predicate re-applies on the decoded rows as
          a Spark filter (pruning is may-match, same as the reference).
+
+    Where an index bounds the survivors and their blobs total at most
+    DECODE_BATCH_BYTES (the index records each group's blob bytes), the
+    decode body runs in the driver: the kept blobs are fetched when
+    scan() is called, not lazily, and the result is a local relation
+    (LocalTableScan) with the residual on top, so no Python worker
+    starts. Otherwise the body runs in one mapInArrow task per batch of
+    surviving groups; when an index bounds the survivors at k, the frame
+    coalesces to k partitions, so no Python task starts on an empty one.
 
     `filters` is a list of (column, op, value) conjuncts; op ∈ {'>=', '>',
     '<=', '<', '=', 'between' (value=(lo,hi)), 'in' (value=iterable),
@@ -1195,15 +1337,9 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     unclustered layouts keep the stats-scan prune."""
     from pyspark.sql import functions as F
 
-    from . import bloom as _bloom
-
     spec_by = {s.name: s for s in specs}
     conj, residual = _conjuncts(spec_by, filters)
-    pruned, k = _prune(enc_df, spec_by, conj, indexes, auto_index)
-    if k is not None:
-        # at most k groups survive: Python runs for every partition of
-        # the decode, empty ones included, so fold them into k tasks
-        pruned = pruned.coalesce(max(1, k))
+    pruned, k, nbytes = _prune(enc_df, spec_by, conj, indexes, auto_index)
 
     # the driving conjunct: only bounds the page directory can compare
     # qualify (numeric or str/bytes — a date/Decimal literal against raw
@@ -1216,53 +1352,43 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             or (isinstance(v, (int, float)) and not isinstance(v, bool))
             for v in vs)
 
-    drv = next((k for k, (_, op, val) in enumerate(conj)
+    drv = next((i for i, (_, op, val) in enumerate(conj)
                 if _pageable(op, val)), None)
-    # the task closure takes only the driving conjunct's bounds or
-    # values, never `conj`: a 'match' predicate may close over
-    # unpicklable objects
-    dcol, _, dval = (None, None, None) if drv is None else conj[drv]
+    # the decode body takes only the driving conjunct's bounds or values,
+    # never `conj`: a 'match' predicate may close over unpicklable objects
+    drive = None
+    if drv is not None:
+        dcol, op, dval = conj[drv]
+        dj = [s.name for s in specs].index(dcol)
+        drive = (dj, drv, dval, _key_prefilter(specs[dj], op, dval))
     # per-value bloom probe hashes (None = can't disprove), computed once
-    probes = [(k, [(v, _bloom_probe_hashes(v)) for v in val])
-              for k, (_, op, val) in enumerate(conj) if op == "in"]
-    sel = pruned.select(
-        *[f"{s.name}_blob" for s in specs],
-        *[F.col(f"{conj[k][0]}_meta.bloom").alias(f"__bloom{k}")
-          for k, _ in probes])
+    probes = [(i, [(v, _bloom_probe_hashes(v)) for v in val])
+              for i, (_, op, val) in enumerate(conj) if op == "in"]
+    cols = [*[f"{s.name}_blob" for s in specs],
+            *[F.col(f"{conj[i][0]}_meta.bloom").alias(f"__bloom{i}")
+              for i, _ in probes]]
+    schema = from_arrow_schema(out_schema)
+
+    if nbytes is not None and nbytes <= DECODE_BATCH_BYTES:
+        rb = _lookup_batch(pruned.select(*cols).toArrow(), specs, out_schema,
+                           probes, drive)
+        tbl = (out_schema.empty_table() if rb is None
+               else pa.Table.from_batches([rb]))
+        return enc_df.sparkSession.createDataFrame(tbl, schema=schema) \
+            .where(residual)
+    if k is not None:
+        # at most k groups survive: Python runs for every partition of
+        # the decode, empty ones included, so fold them into k tasks
+        pruned = pruned.coalesce(max(1, k))
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            tbl = pa.Table.from_batches([b])
-            if tbl.num_rows == 0:
-                continue
-            views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            dviews = _blob_views(tbl, f"{dcol}_blob") if dcol else None
-            blooms = [tbl.column(f"__bloom{k}").to_pylist() for k, _ in probes]
-            runs = []
-            for i in range(tbl.num_rows):
-                live = {}
-                for (k, pv), bl in zip(probes, blooms):
-                    bb = None if bl[i] is None else bytes(bl[i])
-                    live[k] = [v for v, hs in pv if bb is None or hs is None
-                               or bool(_bloom.might_contain(bb, hs).any())]
-                # None (no driving conjunct / no usable page directory)
-                # decodes the whole chunk; [] (no page can match) skips it
-                if not all(live.values()):
-                    runs.append([])
-                elif drv is None:
-                    runs.append(None)
-                elif drv in live:
-                    # ONE parse (incl. decompression) for all live values
-                    runs.append(page_filter_row_runs_multi(dviews[i],
-                                                           live[drv]))
-                else:
-                    runs.append(page_filter_row_runs(dviews[i], *dval))
-            rb = _decode_groups(views, specs, out_schema,
-                                range(tbl.num_rows), runs)
+            rb = _lookup_batch(pa.Table.from_batches([b]), specs, out_schema,
+                               probes, drive)
             if rb is not None:
                 yield rb
 
-    return sel.mapInArrow(fn, from_arrow_schema(out_schema)).where(residual)
+    return pruned.select(*cols).mapInArrow(fn, schema).where(residual)
 
 
 def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
@@ -1275,8 +1401,10 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     O(log n) binary search → a tiny rg_id IN-list; `index`, or built and
     memoized per DataFrame handle, used even on non-clustered layouts),
     the distinct-set overlap, the per-value bloom confirm inside the
-    decode task, page-directory row runs for the surviving values, and
-    the exact residual `key IN values`."""
+    decode body, page-directory row runs for the surviving values, the
+    key column decoded first, and the exact residual `key IN values`.
+    Like scan(), an index-bounded get fetches and decodes in the driver
+    when it is called."""
     return scan(enc_df, specs, out_schema, [(key_column, "in", values)],
                 indexes=None if index is None else {key_column: index},
                 auto_index=auto_index)

@@ -1038,12 +1038,14 @@ def _stat_to_ice(v, ice_type: str):
     return v
 
 
-def _collect_file_stats(md, name2ft: dict):
+def _collect_file_stats(md, name2ft: dict, path: str):
     """One parquet footer → (lower, upper, nulls) keyed by field-id, with
     string/binary bounds truncated per spec (lower: prefix; upper:
     incremented prefix). Columns resolve by the file's PARQUET:field_id
     metadata when present (a renamed/reordered file still gets SOUND
-    bounds), by name otherwise."""
+    bounds), by name otherwise. A bound outside the column's type (an
+    int64 file's 2^40 under an `int` column) rejects the file `path`
+    with a ValueError naming it and the column."""
     if md.num_row_groups == 0:
         return [], [], []
     from .files import _file_field_ids
@@ -1077,6 +1079,10 @@ def _collect_file_stats(md, name2ft: dict):
                 lo_b = ser_value(lo, ice, ROUND_FLOOR)
                 hi_b = (ser_value(hi, ice, ROUND_CEILING)
                         if hi is not None else None)
+            except (struct.error, OverflowError) as e:
+                raise ValueError(
+                    f"data file {path}: column {name!r} holds values "
+                    f"[{lo}, {hi}] outside the table's type {ice!r}") from e
             except (ValueError, TypeError):
                 # a type without single-value serialization: publish the
                 # file WITHOUT bounds for this column (unbounded = sound)
@@ -1320,7 +1326,7 @@ def build_table(table_dir: str, data_files: list[str], *,
     for p in data_files:
         ap = os.path.abspath(p)
         md = pq.read_metadata(ap)
-        lower, upper, nvc = (_collect_file_stats(md, name2ft)
+        lower, upper, nvc = (_collect_file_stats(md, name2ft, ap)
                              if collect_stats else ([], [], []))
         lo_by_id = {kv["key"]: kv["value"] for kv in lower}
         hi_by_id = {kv["key"]: kv["value"] for kv in upper}

@@ -21,6 +21,7 @@ import os
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from .engine import (DEFAULT_PAGE_BYTES, DEFAULT_TARGET_RAW_BYTES,
@@ -107,13 +108,22 @@ def read_table(path: str, specs: list[ColumnSpec] | None = None, *,
     any decode (SkipRows analog, reader/reader.go:179-253).
     """
     nested_schema = _load_schema(path, NESTED_SCHEMA_FILE)
+    flat_schema = _load_schema(path, FLAT_SCHEMA_FILE)
     if specs is None:
-        flat_schema = _load_schema(path, FLAT_SCHEMA_FILE)
         if flat_schema is None:
             raise ValueError(f"no stored schema under {path}; pass specs=")
         specs = specs_from_arrow_schema(flat_schema)
     if nested_schema is None:
-        return _read_flat(path, specs, columns, offset, count)
+        out = _read_flat(path, specs, columns, offset, count)
+        if flat_schema is None:
+            return out
+        # back to the stored types (dictionary, large_string, large_list
+        # decode as their value types), as the nested path casts below
+        stored = {f.name: f for f in flat_schema}
+        fields = [stored.get(f.name, f) for f in out.schema]
+        return pa.Table.from_arrays(
+            [_as_type(c, f.type) for c, f in zip(out.columns, fields)],
+            schema=pa.schema(fields))
     from .shred import SEP, flat_prefix, rebuild_arrays
     from pyspark.sql import types as T
 
@@ -136,6 +146,14 @@ def read_table(path: str, specs: list[ColumnSpec] | None = None, *,
     target = [nested_schema.field(f.name) for f in want]
     arrs = [a.cast(t.type) for a, t in zip(arrs, target)]
     return pa.Table.from_arrays(arrs, names=[f.name for f in want])
+
+
+def _as_type(col: pa.ChunkedArray, t: pa.DataType) -> pa.ChunkedArray:
+    """`col` cast to `t`; a dictionary type is re-encoded from the values
+    (Arrow casts no plain type to a dictionary)."""
+    if pa.types.is_dictionary(t):
+        return pc.dictionary_encode(col.cast(t.value_type)).cast(t)
+    return col.cast(t)
 
 
 def verify(path: str) -> list[dict]:

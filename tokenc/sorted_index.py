@@ -11,8 +11,10 @@ SCANS — one pass over every manifest row per predicate, fine as a
 distributed filter but O(row groups) per lookup on the driver-adjacent
 path. At 10^6 row groups a point-lookup service doing thousands of probes
 wants O(log n): build this index ONCE (one O(n) collect of (rg_id, min,
-max, sorted) — tens of MB at 10^6 groups, the same budget read_range
-already spends), then every probe binary-searches the bounds.
+max, sorted, blob bytes) — tens of MB at 10^6 groups, the same budget
+read_range already spends), then every probe binary-searches the bounds.
+The blob bytes let engine.scan bound a probe's decode work before it
+fetches anything.
 
 Correct for ANY overlap pattern, not just perfectly clustered layouts:
 entries sort by (min, max) and the search runs on the RUNNING PREFIX MAX
@@ -37,6 +39,9 @@ class SortedKeyIndex:
                  all_chunks_sorted: bool):
         entries.sort(key=lambda e: (e[0], e[1]))
         self.column = column
+        # rg_id → the group's blob bytes summed over every column; build()
+        # fills it when the frame has blob columns to measure
+        self._sizes = None
         self.mins = [e[0] for e in entries]
         self.maxs = [e[1] for e in entries]
         self.rg_ids = [e[2] for e in entries]
@@ -55,15 +60,26 @@ class SortedKeyIndex:
 
     @classmethod
     def build(cls, enc_df, column: str) -> "SortedKeyIndex":
-        """One metadata collect over (rg_id, min, max, sorted) — never a
-        blob. Min/max parse from the manifest's JSON stats."""
+        """One collect over (rg_id, min, max, sorted, blob bytes): the
+        blob bytes are the lengths of every `*_blob` column summed (the
+        container reads those columns to measure them; no chunk is
+        decoded). Min/max parse from the manifest's JSON stats."""
         from pyspark.sql import functions as F
 
+        blobs = [c for c in enc_df.columns if c.endswith("_blob")]
+        size = (sum((F.coalesce(F.octet_length(c), F.lit(0)) for c in blobs),
+                    F.lit(0)) if blobs else F.lit(None))
         rows = enc_df.select(
             "rg_id",
             F.col(f"{column}_meta.min_json").alias("mn"),
             F.col(f"{column}_meta.max_json").alias("mx"),
-            F.col(f"{column}_meta.sorted").alias("srt")).collect()
+            F.col(f"{column}_meta.sorted").alias("srt"),
+            size.cast("long").alias("nb")).collect()
+        sizes = None
+        if blobs:
+            sizes = {}
+            for r in rows:
+                sizes[r["rg_id"]] = sizes.get(r["rg_id"], 0) + r["nb"]
         entries, no_stats, all_sorted = [], [], True
         kinds = set()
         for r in rows:
@@ -85,7 +101,9 @@ class SortedKeyIndex:
             all_sorted = all_sorted and bool(r["srt"])
         if len(kinds) > 1:  # defensive: never let mixed types hit the sort
             raise TypeError(f"column {column!r} has mixed-type min/max stats")
-        return cls(column, entries, no_stats, all_sorted)
+        idx = cls(column, entries, no_stats, all_sorted)
+        idx._sizes = sizes
+        return idx
 
     def probe(self, lo=None, hi=None) -> list[str]:
         """rg_ids of row groups whose [min, max] may intersect [lo, hi].
@@ -117,6 +135,13 @@ class SortedKeyIndex:
                 out.append(self.rg_ids[j])
             j += 1
         return out
+
+    def _blob_bytes(self, ids) -> int | None:
+        """Blob bytes of the row groups `ids` (as probe() returns them),
+        or None when the index recorded no sizes."""
+        if self._sizes is None:
+            return None
+        return sum(self._sizes[i] for i in ids)
 
     def lookup(self, value) -> list[str]:
         return self.probe(value, value)
