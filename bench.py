@@ -51,7 +51,7 @@ def main():
     from pyspark.sql import functions as F
 
     from tokenc.datagen import TOKENS_ARROW_SCHEMA, synth_tokens_df
-    from tokenc.engine import decode_df, decode_invariants, encode_df
+    from tokenc.engine import decode_df, encode_df
     from tokenc.files import encode_files
     from tokenc.schema import specs_from_arrow_schema
 

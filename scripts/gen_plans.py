@@ -210,7 +210,9 @@ def main():
         "3. **Projected decode reads only the requested blobs** "
         "(`ReadSchema: struct<doc_id_blob,n_tok_blob>`) — the reference's "
         "`ReadPartial` projection pushdown (reader/reader.go:256-263), "
-        "supplied by the container for free.",
+        "supplied by the container for free. `decode_df` is `scan()` with "
+        "no conjunct: its plan is scan's projection of the blob columns "
+        "into one `MapInArrow`, and the `lit(True)` residual folds away.",
         "4. **Row-group pruning touches no blobs.** The stats-prune plan "
         "reads only `rg_id`, `n_rows` + the `n_tok_meta` struct "
         "(nested-schema pruning); blobs decode only after pruning. "

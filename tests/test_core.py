@@ -113,3 +113,41 @@ def test_frontends_agree(spark, src):
     for name, df in decoded.items():
         assert _rows(df.toArrow(), names) == want, name
     assert _rows(local.read_table(local_dir), names) == want
+
+
+def test_decode_tasks_yield_at_most_decode_groups(spark, monkeypatch):
+    """Every Spark decode task yields batches of at most DECODE_GROUPS row
+    groups: the task functions of decode_df, scan's task path and
+    read_range run here in-process on their whole input (10 groups of 100
+    rows) as ONE Arrow batch."""
+    import tokenc.engine as eng
+    from pyspark.sql import functions as F
+
+    src = spark.range(0, 1000, 1, 10).select(
+        F.format_string("d%06d", "id").alias("doc_id"),
+        F.array(F.col("id").cast("int")).alias("tokens"),
+        F.lit(1).alias("n_tok"), F.lit("web").alias("source"))
+    schema = src.limit(0).toArrow().schema
+    specs = specs_from_arrow_schema(schema)
+    enc = eng.encode_df(src, specs).cache()
+    assert enc.count() == 10
+
+    tasks = []
+    cls = type(enc)
+    orig = cls.mapInArrow
+
+    def spy(self, fn, *a, **k):
+        tasks.append((self, fn))
+        return orig(self, fn, *a, **k)
+
+    monkeypatch.setattr(cls, "mapInArrow", spy)
+    monkeypatch.setattr(eng, "DECODE_BATCH_BYTES", -1)
+    eng.decode_df(enc, specs, schema)
+    eng.scan(enc, specs, schema, [("doc_id", ">=", "d")])
+    eng.read_range(enc, specs, schema, 0, 1000)
+    assert len(tasks) == 3
+    for df, fn in tasks:
+        (batch,) = df.toArrow().combine_chunks().to_batches()
+        assert batch.num_rows == 10
+        sizes = [b.num_rows for b in fn(iter([batch]))]
+        assert sizes == [400, 400, 200], sizes

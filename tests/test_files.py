@@ -137,19 +137,40 @@ class TestDecodeFiles:
         for x, y in zip(a["tokens"], b["tokens"]):
             np.testing.assert_array_equal(x, y)
 
-    def test_invariants_files_matches_df_path(self, spark, enc_dir):
-        from tokenc.engine import decode_invariants
+    def test_invariants_files_match_source(self, spark, src_dir, enc_dir):
+        """decode_invariants_files reduces every decoded chunk; the sums
+        equal the source's own: rows, value counts, token and n_tok sums
+        and string byte sums."""
         from tokenc.files import decode_invariants_files
 
-        agg = [F.sum("n_rows").alias("r"), F.sum("n_values").alias("v"),
-               F.sum("num_sum").alias("s"), F.sum("byte_sum").alias("b")]
-        a = (decode_invariants_files(spark, enc_dir, SPECS)
-             .groupBy("column").agg(*agg).orderBy("column").collect())
-        blobs = spark.read.parquet(enc_dir).select(
-            *[f"{s.name}_blob" for s in SPECS])
-        b = (decode_invariants(blobs, SPECS, TOKENS_ARROW_SCHEMA)
-             .groupBy("column").agg(*agg).orderBy("column").collect())
-        assert a == b
+        got = {r["column"]: r for r in (
+            decode_invariants_files(spark, enc_dir, SPECS)
+            .groupBy("column").agg(F.sum("n_rows").alias("r"),
+                                   F.sum("n_values").alias("v"),
+                                   F.sum("num_sum").alias("s"),
+                                   F.sum("byte_sum").alias("b"))
+            .collect())}
+        tok = F.col("tokens")
+        src = spark.read.parquet(src_dir).agg(
+            F.count("*").alias("rows"),
+            F.sum(F.when(tok.isNotNull(), F.size(tok))).alias("tok_v"),
+            F.sum(F.aggregate(tok, F.lit(0).cast("long"),
+                              lambda acc, x: acc + x)).alias("tok_s"),
+            F.count("n_tok").alias("n_tok_v"),
+            F.sum("n_tok").alias("n_tok_s"),
+            *[c for name in ("doc_id", "source") for c in (
+                F.count(name).alias(f"{name}_v"),
+                F.sum(F.octet_length(name)).alias(f"{name}_b"))],
+        ).collect()[0]
+        assert set(got) == {s.name for s in SPECS}
+        assert all(r["r"] == src["rows"] for r in got.values())
+        assert (got["tokens"]["v"], got["tokens"]["s"]) == (
+            src["tok_v"], src["tok_s"])
+        assert (got["n_tok"]["v"], got["n_tok"]["s"]) == (
+            src["n_tok_v"], src["n_tok_s"])
+        for name in ("doc_id", "source"):
+            assert (got[name]["v"], got[name]["b"]) == (
+                src[f"{name}_v"], src[f"{name}_b"])
 
     def test_repeated_file_list_scales_invariants(self, spark, enc_dir):
         """Passing the file list N times (the bench amortization) must

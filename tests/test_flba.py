@@ -132,3 +132,116 @@ class TestDictionaryInput:
         col = read_table(str(tmp_path / "di")).column("c").combine_chunks()
         assert col.type == tbl.schema.field("c").type
         assert col.dictionary_decode().equals(vals)
+
+
+def _chunk_roundtrip(arr: pa.Array, spec) -> pa.Array:
+    from tokenc.chunk import decode_chunk, encode_chunk
+    from tokenc.engine import _extract, _rebuild
+
+    blob, _ = encode_chunk(phys=spec.phys, codec=codecs.PLAIN,
+                           n_rows=len(arr), **_extract(arr, spec))
+    return _rebuild(decode_chunk(blob), spec)
+
+
+class TestFLBAFromBinary:
+    """Spark hands a Parquet FLBA column to encode_df as plain binary: the
+    leaf conversion casts it to the spec's fixed width first."""
+
+    SPEC = specs_from_arrow_schema(pa.schema([("u", pa.binary(2))]))[0]
+
+    def test_binary_input_roundtrips(self):
+        arr = pa.array([b"ab", None, b"cd", b"ef"], pa.binary())
+        out = _chunk_roundtrip(arr, self.SPEC)
+        assert out.type == pa.binary(2)
+        assert out.to_pylist() == [b"ab", None, b"cd", b"ef"]
+
+    def test_width_mismatch_names_column(self):
+        with pytest.raises(ValueError, match="'u'"):
+            _chunk_roundtrip(pa.array([b"ab", b"cde"], pa.binary()),
+                             self.SPEC)
+
+
+N_PARITY = 3000
+
+
+@pytest.fixture(scope="module")
+def parity_src(tmp_path_factory):
+    """A pyarrow-written Parquet source with an FLBA, a decimal(38,0), a
+    list<int32> and a string column (the string a sorted unique key)."""
+    from decimal import Decimal
+
+    rng = np.random.default_rng(11)
+    n = N_PARITY
+    dec = [None if i % 13 == 0 else
+           Decimal(int(v) * 10 ** 20 + i) * (-1 if i % 3 else 1)
+           for i, v in enumerate(rng.integers(0, 10 ** 6, n))]
+    toks = [rng.integers(0, 1000, int(k)).astype(np.int32).tolist()
+            for k in rng.integers(0, 40, n)]
+    tbl = pa.table({
+        "u": _fsb_column(n, 16, nulls=True, seed=5),
+        "d": pa.array(dec, pa.decimal128(38, 0)),
+        "t": pa.array(toks, pa.list_(pa.int32())),
+        "s": pa.array([f"s{i:05d}" for i in range(n)]),
+    })
+    d = tmp_path_factory.mktemp("flba_parity")
+    path = str(d / "src.parquet")
+    pq.write_table(tbl, path, row_group_size=n)
+    return d, path, tbl
+
+
+def _values(tbl: pa.Table) -> list[tuple]:
+    """Rows as Python values in key order; FLBA compares as its bytes."""
+    cols = [tbl.column(c).to_pylist() for c in ("s", "u", "d", "t")]
+    return sorted(zip(*cols))
+
+
+@pytest.mark.parametrize("encoder", ["encode_df", "encode_files"])
+def test_every_decode_frontend_returns_source_bytes(spark, parity_src,
+                                                    encoder, monkeypatch):
+    """FLBA, decimal(38,0), list and string columns encoded by either
+    Spark encoder come back bit for bit from every Spark decode frontend,
+    the FLBA column as binary."""
+    import io
+    from contextlib import redirect_stdout
+
+    import tokenc.engine as eng
+    from tokenc.files import decode_files, encode_files
+
+    d, path, tbl = parity_src
+    schema = pq.read_schema(path)
+    specs = specs_from_arrow_schema(schema)
+    if encoder == "encode_df":
+        enc = eng.encode_df(spark.read.parquet(path), specs,
+                            target_raw_bytes=32 << 10)
+    else:
+        enc = encode_files(spark, path, specs, target_raw_bytes=32 << 10)
+    enc_dir = str(d / encoder)
+    enc.write.mode("overwrite").parquet(enc_dir)
+    enc = spark.read.parquet(enc_dir).cache()
+    assert enc.count() > 2 * eng.DECODE_GROUPS
+
+    want = _values(tbl)
+    keys = [f"s{i:05d}" for i in range(0, N_PARITY, 97)]
+    want_get = [r for r in want if r[0] in set(keys)]
+    decoded = {
+        "decode_df": (eng.decode_df(enc, specs, schema), want),
+        "decode_files": (decode_files(spark, enc_dir, specs, schema), want),
+        "read_range": (eng.read_range(enc, specs, schema, 0, N_PARITY), want),
+    }
+    for path_name, budget in (("driver", eng.DECODE_BATCH_BYTES),
+                              ("task", -1)):
+        monkeypatch.setattr(eng, "DECODE_BATCH_BYTES", budget)
+        sc = eng.scan(enc, specs, schema, [("s", ">=", "s")])
+        gt = eng.get(enc, specs, schema, "s", keys)
+        for df in (sc, gt):
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain()
+            plan = buf.getvalue()
+            assert ("MapInArrow" in plan) == (path_name == "task"), plan
+        decoded[f"scan_{path_name}"] = (sc, want)
+        decoded[f"get_{path_name}"] = (gt, want_get)
+    for name, (df, expect) in decoded.items():
+        out = df.toArrow()
+        assert out.schema.field("u").type == pa.binary(), name
+        assert _values(out) == expect, name

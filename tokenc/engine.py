@@ -94,6 +94,13 @@ def _leaf(arr: pa.Array, spec: ColumnSpec) -> dict:
     dict(ba_data=…, ba_offsets=…). Each leaf type converts here once."""
     at = spec.arrow_type
     if w := _fixed_width(spec):
+        if pa.types.is_fixed_size_binary(at) and arr.type != at:
+            # Spark hands a Parquet FLBA column over as plain binary, whose
+            # buffers()[1] holds offsets, not the values
+            try:
+                arr = arr.cast(at)
+            except pa.ArrowInvalid as e:
+                raise ValueError(f"column {spec.name!r}: {e}") from None
         raw = np.frombuffer(arr.buffers()[1], dtype=np.uint8)
         raw = raw[w * arr.offset: w * (arr.offset + len(arr))]
         if pa.types.is_decimal(at):  # little-endian → big-endian
@@ -468,9 +475,34 @@ def encode_df(df, specs: list[ColumnSpec], *,
 # decode
 # --------------------------------------------------------------------------
 
-# blob bytes per yielded output batch, and the most an index-bounded
-# scan() fetches to decode in the driver
+# the most blob bytes an index-bounded scan() fetches to decode in the
+# driver (the driver-path cap; Spark decode tasks batch by DECODE_GROUPS)
 DECODE_BATCH_BYTES = 64 << 20
+# row groups per output batch of every Spark decode task that returns
+# rows: decode_files, read_range and scan's task path (decode_df, get)
+DECODE_GROUPS = 4
+
+
+def _spark_schema(out_schema: pa.Schema) -> pa.Schema:
+    """The Arrow schema decoded rows cross into Spark with. Spark has no
+    fixed-size binary type, so FLBA columns cross as plain binary (as
+    Spark reads a Parquet FLBA column); tokenc.local returns the exact
+    type. `out_schema` itself when it holds no FLBA column."""
+    flba = [pa.types.is_fixed_size_binary(f.type) for f in out_schema]
+    if not any(flba):
+        return out_schema
+    return pa.schema([f.with_type(pa.binary()) if b else f
+                      for f, b in zip(out_schema, flba)],
+                     metadata=out_schema.metadata)
+
+
+def _task_tables(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
+    """The batch rule of a Spark decode task: its input batches of blob
+    rows, one row group per row, as tables of at most DECODE_GROUPS
+    groups, each decoded into one output batch."""
+    for b in batches:
+        for o in range(0, b.num_rows, DECODE_GROUPS):
+            yield pa.Table.from_batches([b.slice(o, DECODE_GROUPS)])
 
 
 def _blob_views(tbl: pa.Table, name: str) -> list[np.ndarray]:
@@ -496,7 +528,8 @@ def _decode_groups(views: list[list[np.ndarray]], specs: list[ColumnSpec],
                    out_schema: pa.Schema, groups, runs=None, known=None):
     """The one chunk → Arrow assembly behind every Spark decode frontend:
     decode row groups `groups` (indexes into each column's blob views,
-    `views[j]` for `specs[j]`) into ONE RecordBatch of `out_schema`.
+    `views[j]` for `specs[j]`) into ONE RecordBatch of `out_schema` as it
+    crosses into Spark (_spark_schema).
     `runs[k]` says what group `groups[k]` contributes: None → the whole
     chunk (decode_chunk); a list of (row_lo, row_hi) runs → exactly those
     rows, each chunk parsed once for all runs (decode_chunk_rows_multi);
@@ -518,48 +551,26 @@ def _decode_groups(views: list[list[np.ndarray]], specs: list[ColumnSpec],
             cols[j].extend(_rebuild(cd, spec) for cd in cds)
     if not cols or not cols[0]:
         return None
-    return pa.RecordBatch.from_arrays(
+    rb = pa.RecordBatch.from_arrays(
         [a[0] if len(a) == 1 else pa.concat_arrays(a) for a in cols],
         schema=out_schema)
-
-
-def make_decoder(specs: list[ColumnSpec], out_schema: pa.Schema):
-    """mapInArrow decode: zero-copy views into the scanned blob buffers,
-    multiple row groups decoded per yielded RecordBatch (amortizes the
-    Python→JVM Arrow framing over ~DECODE_BATCH_BYTES of payload)."""
-
-    def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            start, acc = 0, 0
-            for i in range(n):
-                acc += sum(len(v[i]) for v in views)
-                if acc < DECODE_BATCH_BYTES and i < n - 1:
-                    continue
-                yield _decode_groups(views, specs, out_schema,
-                                     range(start, i + 1))
-                start, acc = i + 1, 0
-
-    return decode_fn
+    to_spark = _spark_schema(out_schema)
+    return rb if to_spark is out_schema else rb.cast(to_spark)
 
 
 def decode_df(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema):
-    fn = make_decoder(specs, out_schema)
-    return enc_df.mapInArrow(fn, from_arrow_schema(out_schema))
+    """DataFrame of encoded row groups → DataFrame of decoded rows: scan()
+    with no conjunct, so nothing is pruned and the residual is lit(True).
+    Encoded files read faster through files.decode_files, which keeps the
+    blob bytes out of the JVM."""
+    return scan(enc_df, specs, out_schema, [])
 
 
-INVARIANT_FIELDS = pa.schema([
+INVARIANT_SCHEMA = pa.schema([
+    pa.field("column", pa.string()),
     pa.field("n_rows", pa.int64()), pa.field("n_values", pa.int64()),
     pa.field("num_sum", pa.float64()), pa.field("byte_sum", pa.int64()),
 ])
-
-
-INVARIANT_SCHEMA = pa.schema([pa.field("column", pa.string())]
-                             + list(INVARIANT_FIELDS))
 
 
 def _invariant_rows(blob_views: list[list[np.ndarray]],
@@ -601,26 +612,6 @@ def _invariant_rows(blob_views: list[list[np.ndarray]],
                 rows.append({"column": spec.name, "n_rows": cd.n_rows,
                              "n_values": n_vals, "num_sum": s, "byte_sum": 0})
     return rows
-
-
-def decode_invariants(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema):
-    """Decode every chunk and reduce to order-insensitive per-row-group
-    invariants INSIDE the UDF (row count, value count, numeric value sum,
-    raw byte sum of string columns) — one tiny output row per column per
-    row group. This forces the full decode compute while keeping the
-    Python→JVM boundary at row-group granularity; comparing against the
-    same aggregates on the source proves decode correctness at any scale
-    (the bit-exact per-row gate lives in pytest at small scale)."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            rows = _invariant_rows(views, specs)
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=INVARIANT_SCHEMA)
-
-    return enc_df.mapInArrow(fn, from_arrow_schema(INVARIANT_SCHEMA))
 
 
 def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
@@ -699,8 +690,7 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         else F.lit(False)).withColumn("_ck", ck)
 
     def decode_slice(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
+        for tbl in _task_tables(batches):
             parts = tbl.column("rg_part").to_pylist()
             idxs = tbl.column("rg_idx").to_pylist()
             cks = tbl.column("_ck").to_pylist()
@@ -709,6 +699,7 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             # one row group per input row; interior groups decode fully,
             # boundary groups decode ONLY the sub-chunk pages overlapping
             # the requested rows
+            runs = []
             for i in range(tbl.num_rows):
                 key = (parts[i] << 32) | idxs[i]
                 exp = expect_ck.get(key)
@@ -726,10 +717,12 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                         "read_range." % (parts[i], idxs[i], cks[i], exp))
                 skip, take = bounds.get(key, (0, n_rows_col[i]))
                 whole = skip == 0 and take == n_rows_col[i]
-                yield _decode_groups(views, specs, out_schema, [i],
-                                     [None if whole else [(skip, skip + take)]])
+                runs.append(None if whole else [(skip, skip + take)])
+            yield _decode_groups(views, specs, out_schema,
+                                 range(tbl.num_rows), runs)
 
-    return pruned.mapInArrow(decode_slice, from_arrow_schema(out_schema))
+    return pruned.mapInArrow(decode_slice,
+                             from_arrow_schema(_spark_schema(out_schema)))
 
 
 def _bloom_probe_hashes(value) -> np.ndarray | None:
@@ -1253,8 +1246,8 @@ def _lookup_batch(tbl: pa.Table, specs: list[ColumnSpec],
     `drive`'s pre-filter exists the key column decodes first and the rest
     only over its hits (_key_first). `drive` is (column index in specs,
     conjunct index, range bounds, pre-filter or None), or None to decode
-    every surviving group whole. → one RecordBatch of `out_schema`, or
-    None when no row survives."""
+    every surviving group whole. → one RecordBatch of `out_schema` as it
+    crosses into Spark (_spark_schema), or None when no row survives."""
     from . import bloom as _bloom
 
     n = tbl.num_rows
@@ -1320,9 +1313,12 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     decode body runs in the driver: the kept blobs are fetched when
     scan() is called, not lazily, and the result is a local relation
     (LocalTableScan) with the residual on top, so no Python worker
-    starts. Otherwise the body runs in one mapInArrow task per batch of
-    surviving groups; when an index bounds the survivors at k, the frame
-    coalesces to k partitions, so no Python task starts on an empty one.
+    starts. Otherwise the body runs in mapInArrow tasks, one output batch
+    per DECODE_GROUPS surviving groups; when an index bounds the survivors
+    at k, the frame coalesces to k partitions, so no Python task starts on
+    an empty one. With no conjunct (decode_df) nothing is pruned, every
+    group decodes whole and the residual is lit(True). FLBA columns come
+    back as binary (_spark_schema).
 
     `filters` is a list of (column, op, value) conjuncts; op ∈ {'>=', '>',
     '<=', '<', '=', 'between' (value=(lo,hi)), 'in' (value=iterable),
@@ -1367,12 +1363,13 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     cols = [*[f"{s.name}_blob" for s in specs],
             *[F.col(f"{conj[i][0]}_meta.bloom").alias(f"__bloom{i}")
               for i, _ in probes]]
-    schema = from_arrow_schema(out_schema)
+    to_spark = _spark_schema(out_schema)
+    schema = from_arrow_schema(to_spark)
 
     if nbytes is not None and nbytes <= DECODE_BATCH_BYTES:
         rb = _lookup_batch(pruned.select(*cols).toArrow(), specs, out_schema,
                            probes, drive)
-        tbl = (out_schema.empty_table() if rb is None
+        tbl = (to_spark.empty_table() if rb is None
                else pa.Table.from_batches([rb]))
         return enc_df.sparkSession.createDataFrame(tbl, schema=schema) \
             .where(residual)
@@ -1382,9 +1379,8 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         pruned = pruned.coalesce(max(1, k))
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            rb = _lookup_batch(pa.Table.from_batches([b]), specs, out_schema,
-                               probes, drive)
+        for tbl in _task_tables(batches):
+            rb = _lookup_batch(tbl, specs, out_schema, probes, drive)
             if rb is not None:
                 yield rb
 

@@ -26,17 +26,16 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-from .engine import (DEFAULT_PAGE_BYTES, DEFAULT_TARGET_RAW_BYTES,
-                     INVARIANT_SCHEMA, _blob_views, _decode_groups,
-                     _encode_batches, _invariant_rows, _pa_of_spec,
-                     encoded_schema, from_arrow_schema)
+from .engine import (DECODE_GROUPS, DEFAULT_PAGE_BYTES,
+                     DEFAULT_TARGET_RAW_BYTES, INVARIANT_SCHEMA, _blob_views,
+                     _decode_groups, _encode_batches, _invariant_rows,
+                     _pa_of_spec, _spark_schema, encoded_schema,
+                     from_arrow_schema)
 from .schema import ColumnSpec
 
 DEFAULT_BATCH_ROWS = 8192
-# encoded row groups read per pyarrow batch: decoded-rows batches are
-# yielded per DECODE_GROUPS groups; the invariants path reduces each
-# batch to tiny rows, so it reads more groups at a time
-DECODE_GROUPS = 4
+# encoded row groups per pyarrow batch of the invariants path: it reduces
+# each batch to tiny rows, so it reads more than DECODE_GROUPS at a time
 INVARIANT_GROUPS = 8
 
 
@@ -482,18 +481,11 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
     with pyarrow — the read mirror of `encode_files`. The JVM never scans
     or ships the blob bytes; only the DECODED rows cross the Python→JVM
     boundary (unavoidable when the result must be a DataFrame of rows).
+    Each task yields one batch per DECODE_GROUPS row groups.
     """
     blob_cols = [f"{s.name}_blob" for s in specs]
     fs, tasks, task_units = _files_tasks(spark, enc_path, n_tasks,
                                          filesystem)
-    # Spark has no FixedSizeBinary type: FLBA columns surface as plain
-    # binary at the DataFrame boundary (exactly Spark's own FLBA-parquet
-    # behavior); Arrow-native consumers use tokenc.local for the exact type
-    spark_schema = pa.schema([
-        pa.field(f.name, pa.binary(), f.nullable)
-        if pa.types.is_fixed_size_binary(f.type) else f
-        for f in out_schema])
-    has_flba = spark_schema != out_schema
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -507,17 +499,21 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
                 out = _decode_groups(views, specs, out_schema,
                                      range(tbl.num_rows))
                 if out is not None:
-                    yield out.cast(spark_schema) if has_flba else out
+                    yield out
 
-    return tasks.mapInArrow(fn, from_arrow_schema(spark_schema))
+    return tasks.mapInArrow(fn, from_arrow_schema(_spark_schema(out_schema)))
 
 
 def decode_invariants_files(spark, enc_path: str | list[str],
                             specs: list[ColumnSpec], *,
                             n_tasks: int | None = None, filesystem=None):
-    """File-granular decode_invariants: full decode compute inside tasks
-    reading the blob parquet with pyarrow; only tiny invariant rows cross
-    ANY process boundary. This is the headline decode path — like
+    """Decode every chunk inside tasks reading the blob parquet with
+    pyarrow, and reduce it to order-insensitive per-row-group invariants
+    (row count, value count, numeric value sum, raw byte sum of string
+    columns): one tiny row per column per row group is all that crosses
+    ANY process boundary. Comparing them against the same aggregates of
+    the source checks decode at any scale (the bit-exact per-row gate is
+    pytest's, at small scale). This is the headline decode path — like
     encode_files it keeps the whole hot loop columnar (parquet page →
     Arrow buffer → numpy view → decode kernels) with zero JVM involvement
     beyond task scheduling."""

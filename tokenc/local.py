@@ -25,7 +25,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from .engine import (DEFAULT_PAGE_BYTES, DEFAULT_TARGET_RAW_BYTES,
-                     _encode_batches, _pa_of_spec, _rebuild,
+                     _blob_views, _encode_batches, _pa_of_spec, _rebuild,
                      encoded_schema, from_arrow_schema)
 from .chunk import decode_chunk
 from .schema import ColumnSpec, specs_from_arrow_schema
@@ -205,12 +205,12 @@ def _read_flat(path: str, specs: list[ColumnSpec],
     total = int(starts[-1])
     lo = max(0, offset)
     hi = total if count is None else min(total, offset + count)
+    views = [_blob_views(enc, f"{s.name}_blob") for s in sel]
     batches = []
     for pos, i in enumerate(order):
         if starts[pos + 1] <= lo or starts[pos] >= hi:
             continue  # row group skipped without decoding
-        arrays = [_rebuild(decode_chunk(enc[f"{s.name}_blob"][int(i)].as_py()), s)
-                  for s in sel]
+        arrays = [_rebuild(decode_chunk(v[i]), s) for v, s in zip(views, sel)]
         rb = pa.Table.from_arrays(arrays, names=[s.name for s in sel])
         skip = max(0, lo - int(starts[pos]))
         take = min(int(starts[pos + 1]), hi) - max(int(starts[pos]), lo)
