@@ -21,6 +21,8 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
+from tokenc._mem import worker_batches
+
 TOKEN_EXPR_SPARK = (
     "transform(filter(split(text, ' '), w -> length(w) > 0), "
     "w -> cast((length(w)*31 + ascii(substr(w, 1, 1))*7 + ascii(substr(w, length(w), 1))) % 50000 as int))"
@@ -136,7 +138,7 @@ def synth_tokens_df(spark, n_docs: int, *, seed: int = 42, mean_tokens: int = 51
     rng_df = spark.range(start, n_docs, 1, parts)
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
+        for b in worker_batches(batches):
             ids = b.column(0).to_numpy()
             if ids.size == 0:
                 continue

@@ -33,6 +33,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from . import arrow_util, codecs, selector
+from ._mem import worker_batches
 from .chunk import (ChunkStats, decode_chunk, decode_chunk_rows_multi,
                     encode_chunk, page_filter_row_runs,
                     page_filter_row_runs_multi)
@@ -445,8 +446,8 @@ def make_encoder(specs: list[ColumnSpec],
 
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
-        groups = _encode_batches(((b, None) for b in batches), specs,
-                                 target_raw_bytes, page_bytes,
+        source = ((b, None) for b in worker_batches(batches))
+        groups = _encode_batches(source, specs, target_raw_bytes, page_bytes,
                                  selector.WORKER_MEMO)  # per-WORKER memo
         for rg_idx, (row, _) in enumerate(groups):
             # (rg_part, rg_idx) is a total order over row groups whenever the
@@ -500,7 +501,7 @@ def _task_tables(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
     """The batch rule of a Spark decode task: its input batches of blob
     rows, one row group per row, as tables of at most DECODE_GROUPS
     groups, each decoded into one output batch."""
-    for b in batches:
+    for b in worker_batches(batches):
         for o in range(0, b.num_rows, DECODE_GROUPS):
             yield pa.Table.from_batches([b.slice(o, DECODE_GROUPS)])
 
@@ -832,7 +833,7 @@ def verify_table(enc_df, specs):
     ])
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
+        for b in worker_batches(batches):
             tbl = pa.Table.from_batches([b])
             if tbl.num_rows == 0:
                 continue

@@ -26,6 +26,7 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
+from ._mem import worker_batches
 from .engine import (DECODE_GROUPS, DEFAULT_PAGE_BYTES,
                      DEFAULT_TARGET_RAW_BYTES, INVARIANT_SCHEMA, _blob_views,
                      _decode_groups, _encode_batches, _invariant_rows,
@@ -355,16 +356,22 @@ def _unit_tasks(spark, units: list, n_tasks: int | None = None):
     list captured in the closure — the unit list never crosses into the
     JVM and no shuffle spreads it.
 
-    The default n is one wave, min(len(units), defaultParallelism): a
-    Python task costs ~40-75 ms of fixed overhead and mapInArrow runs
-    Python even on an empty partition, so a second wave or a round-robin
+    The default n is one wave, min(len(units), defaultParallelism): every
+    Python task pays pyspark's worker preamble and mapInArrow runs Python
+    even on an empty partition, so a second wave or a round-robin
     repartition costs more than it balances. Units balance by count, not
-    bytes; an explicit `n_tasks` (clamped to len(units)) overrides."""
+    bytes; an explicit `n_tasks` (clamped to len(units)) overrides.
+
+    The preamble's `importlib.invalidate_caches()` re-reads the directory
+    of every zip importer a reused worker holds: 16 zip/jar directories,
+    ~130 ms of CPU per task (103-193 ms, 4 vCPUs). `task_units` drops them
+    when the task ends (`_mem.worker_batches`), so the next task on the
+    same worker re-reads none."""
     n = max(1, min(len(units),
                    n_tasks or spark.sparkContext.defaultParallelism))
 
     def task_units(batches: Iterator[pa.RecordBatch]):
-        for b in batches:
+        for b in worker_batches(batches):
             for k in b.column(0).to_pylist():
                 yield from units[k * len(units) // n:
                                  (k + 1) * len(units) // n]

@@ -46,6 +46,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ._mem import worker_batches
+
 SEP = "__"
 TAG = "~"                 # marker prefix: cannot appear in escaped segments
 VALID = SEP + TAG + "valid"    # nullable struct: per-row presence bit
@@ -437,7 +439,7 @@ def unshred_df(df: DataFrame, schema: T.StructType) -> DataFrame:
     out_schema = to_arrow_schema(relaxed)
 
     def fn(batches):
-        for b in batches:
+        for b in worker_batches(batches):
             if b.num_rows == 0:
                 continue
             tbl = pa.Table.from_batches([b])
