@@ -151,3 +151,25 @@ def test_decode_tasks_yield_at_most_decode_groups(spark, monkeypatch):
         assert batch.num_rows == 10
         sizes = [b.num_rows for b in fn(iter([batch]))]
         assert sizes == [400, 400, 200], sizes
+
+
+def test_rg_id_covers_every_blob_byte():
+    """Two groups equal in row count and in each blob's first and last
+    256 bytes, one token apart in the middle, get different rg_ids (the
+    index fingerprint and the driver's group cache rely on them)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from tokenc.engine import _encode_rowgroup
+
+    toks = np.arange(4000, dtype=np.int32)
+    other = toks.copy()
+    other[2000] = 1999
+    specs = specs_from_arrow_schema(pa.schema([("tokens", pa.int32())]),
+                                    codec_overrides={"tokens": "plain"})
+    a, b = (_encode_rowgroup(pa.table({"tokens": t}), specs)
+            for t in (toks, other))
+    ba, bb = a["tokens_blob"], b["tokens_blob"]
+    assert a["n_rows"] == b["n_rows"] and len(ba) == len(bb) > 512
+    assert ba[:256] == bb[:256] and ba[-256:] == bb[-256:] and ba != bb
+    assert a["rg_id"] != b["rg_id"]

@@ -373,6 +373,11 @@ def paths_enc(spark):
     return enc, specs, schema
 
 
+def _lookup_rows(df):
+    return (df.orderBy("k").toPandas()
+            .assign(toks=lambda d: d["toks"].map(list)))
+
+
 class TestLookupPaths:
     """An index-bounded scan decodes in the driver when the kept blobs fit
     DECODE_BATCH_BYTES, else in a mapInArrow task; both run _lookup_batch
@@ -400,11 +405,7 @@ class TestLookupPaths:
 
         enc, specs, schema = paths_enc
         flt = self.CASES[case]
-
-        def rows(df):
-            return (df.orderBy("k").toPandas()
-                    .assign(toks=lambda d: d["toks"].map(list)))
-
+        rows = _lookup_rows
         drv = eng.scan(enc, specs, schema, flt)
         plan = _plan(drv)
         assert "LocalTableScan" in plan and "MapInArrow" not in plan, plan
@@ -498,3 +499,206 @@ class TestLookupPaths:
             assert df_.count() == want
         assert sorted(g.toPandas()["doc_id"]) == sorted(
             f"doc{k:09d}" for k in present)
+
+
+class TestGroupCache:
+    """The driver path keeps the row groups it fetched from a persisted
+    frame (engine._group_cache): a later lookup takes the groups it holds
+    from there and fetches only the rest."""
+
+    @pytest.mark.parametrize("case", sorted(TestLookupPaths.CASES))
+    def test_cached_rerun_is_exact(self, spark, paths_enc, case,
+                                   monkeypatch):
+        import tokenc.engine as eng
+
+        enc, specs, schema = paths_enc
+        flt = TestLookupPaths.CASES[case]
+        eng._group_cache.clear(enc)
+        first = _lookup_rows(eng.scan(enc, specs, schema, flt))
+        if case != "empty":
+            assert eng._group_cache.held(enc)
+
+        def no_fetch(*a, **k):
+            raise AssertionError("a cached lookup fetched blobs")
+
+        with monkeypatch.context() as m:
+            m.setattr(type(enc), "toArrow", no_fetch)
+            again = eng.scan(enc, specs, schema, flt)
+        want = _lookup_rows(eng.scan(enc, specs, schema, flt,
+                                     auto_index=False))
+        pd.testing.assert_frame_equal(_lookup_rows(again), first)
+        pd.testing.assert_frame_equal(first, want)
+
+    def test_repeat_get_submits_no_job(self, spark, paths_enc):
+        import tokenc.engine as eng
+
+        enc, specs, schema = paths_enc
+        sc = spark.sparkContext
+        index = eng.sorted_index_for(enc, "s")
+        keys = ["s000010", "s007777", "s015000", "nope"]
+        eng._group_cache.clear(enc)
+
+        def jobs(group):
+            sc.setJobGroup(group, group)
+            try:
+                df = eng.get(enc, specs, schema, "s", keys, index=index)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        first, n_first = jobs("cache-miss")
+        again, n_again = jobs("cache-hit")
+        assert n_first >= 1 and n_again == 0, (n_first, n_again)
+        assert sorted(_lookup_rows(again)["s"]) == keys[:3]
+        pd.testing.assert_frame_equal(_lookup_rows(again),
+                                      _lookup_rows(first))
+
+    def test_budget_evicts_and_stays_exact(self, spark, paths_enc,
+                                           monkeypatch):
+        """With room for about one group, alternating one-group lookups
+        evict each other and return exact rows."""
+        import tokenc.engine as eng
+
+        enc, specs, schema = paths_enc
+        index = eng.sorted_index_for(enc, "k")
+        # the three largest groups: room for one, not for two
+        big = sorted(range(len(index.rg_ids)),
+                     key=lambda j: index._sizes[index.rg_ids[j]])[-3:]
+        sizes = [index._sizes[index.rg_ids[j]] for j in big]
+        budget = max(sizes) + 1024
+        assert 2 * min(sizes) > budget
+        monkeypatch.setattr(eng, "DECODE_BATCH_BYTES", budget)
+        eng._group_cache.clear(enc)
+        firsts = [index.mins[j] + 7 for j in big]
+        for key in firsts + firsts[::-1]:
+            flt = [("k", "in", [key, key + 1])]
+            got = _lookup_rows(eng.scan(enc, specs, schema, flt))
+            assert got["k"].tolist() == [key, key + 1]
+            assert got["s"].tolist() == [f"s{key:06d}", f"s{key + 1:06d}"]
+            assert eng._group_cache.nbytes <= budget
+            assert len(eng._group_cache.held(enc)) == 1
+        pd.testing.assert_frame_equal(
+            got, _lookup_rows(eng.scan(enc, specs, schema, flt,
+                                       auto_index=False)))
+
+    def test_fingerprint_rebuild_clears_frame(self, spark, paths_enc):
+        import tokenc.engine as eng
+
+        enc, specs, schema = paths_enc
+        assert eng.scan(enc, specs, schema,
+                        [("k", "between", (100, 200))]).count() == 101
+        assert eng._group_cache.held(enc)
+        # a re-materialized handle: the memo's fingerprint no longer
+        # matches what the aggregate sees
+        tok, state, idx = eng._sorted_indexes[enc]["k"]
+        eng._sorted_indexes[enc]["k"] = ((-1, "gone"), state, idx)
+        eng.sorted_index_for(enc, "k")
+        assert not eng._group_cache.held(enc)
+
+    def test_unpersisted_frame_caches_nothing(self, spark, paths_enc):
+        from pyspark.sql import functions as F
+
+        import tokenc.engine as eng
+
+        enc, specs, schema = paths_enc
+        index = eng.sorted_index_for(enc, "k")
+        view = enc.where(F.col("n_rows") > 0)
+        assert not eng._is_persisted(view)
+        flt = [("k", "between", (4000, 4100))]
+        got = eng.scan(view, specs, schema, flt, indexes={"k": index})
+        assert "LocalTableScan" in _plan(got)
+        assert got.count() == 101
+        assert not eng._group_cache.held(view)
+
+    def test_concurrent_lookups_exact(self, spark, paths_enc, monkeypatch):
+        """4 driver threads running scans and gets, with room for about
+        three groups, so they race on misses and on evictions."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        import tokenc.engine as eng
+
+        enc, specs, schema = paths_enc
+        index = eng.sorted_index_for(enc, "k")
+        queries = [[("k", "between", (lo, lo + 60))]
+                   for lo in (50, 2600, 5200, 7800, 10_400, 13_000)]
+        queries += [[("k", "in", [v, v + 3000, 19_999])]
+                    for v in (11, 4444, 9001)]
+        queries += [[("s", "in", ["s000123", "s012345", "s_absent"])]]
+        want = [_lookup_rows(eng.scan(enc, specs, schema, q,
+                                      auto_index=False)) for q in queries]
+        monkeypatch.setattr(eng, "DECODE_BATCH_BYTES",
+                            max(index._sizes.values()) * 3)
+        eng._group_cache.clear(enc)
+
+        def run(t):
+            out = []
+            for j in range(len(queries)):
+                q = (t * 3 + j) % len(queries)
+                df = eng.scan(enc, specs, schema, queries[q],
+                              indexes={"k": index})
+                out.append((q, _lookup_rows(df)))
+            return out
+
+        with ThreadPoolExecutor(4) as pool:
+            results = [r for rs in pool.map(run, range(4), timeout=600)
+                       for r in rs]
+        assert len(results) == 4 * len(queries)
+        for q, got in results:
+            pd.testing.assert_frame_equal(got, want[q])
+        assert eng._group_cache.nbytes <= eng.DECODE_BATCH_BYTES
+
+    def test_cache_lock_and_frame_lifetime(self, monkeypatch):
+        """8 threads storing and reading one cache under a short switch
+        interval lose no byte count and never pass the budget; a frame's
+        entries go when its handle is collected."""
+        import gc
+        import sys
+        import threading
+
+        import pyarrow as pa
+
+        import tokenc.engine as eng
+
+        class Frame:  # stands in for a DataFrame handle
+            pass
+
+        monkeypatch.setattr(eng, "DECODE_BATCH_BYTES", 40_000)
+        cache, frames = eng._GroupCache(), [Frame() for _ in range(3)]
+
+        def group(rid, n):
+            return pa.table({"rg_id": [rid], "x_blob": [b"\xab" * n]})
+
+        def work(t):
+            for i in range(300):
+                f = frames[(t + i) % 3]
+                rid = f"g{(t * 7 + i) % 11}"
+                hits, missing = cache.get(f, [rid], ["x_blob"])
+                if missing:
+                    cache.put(f, group(rid, 1000 + 37 * (i % 50)))
+                else:
+                    assert hits[rid]["x_blob"][0].as_py()[:1] == b"\xab"
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=work, args=(t,))
+                       for t in range(8)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(th.is_alive() for th in threads)
+        assert cache.nbytes == sum(eng._entry_bytes(e)
+                                   for e in cache._lru.values())
+        assert 0 < cache.nbytes <= 40_000
+        gone = frames.pop()
+        assert cache.held(gone)
+        n_gone = len(cache.held(gone))
+        n_all = len(cache._lru)
+        del gone
+        gc.collect()
+        assert len(cache._lru) == n_all - n_gone
+        assert cache.nbytes == sum(eng._entry_bytes(e)
+                                   for e in cache._lru.values())

@@ -24,7 +24,10 @@ from __future__ import annotations
 import hashlib
 import json
 import operator
+import threading
+import weakref
 import zlib
+from collections import OrderedDict
 from collections.abc import Iterator
 from functools import reduce
 
@@ -371,6 +374,7 @@ def _encode_rowgroup(batch: pa.Table, specs: list[ColumnSpec],
                                 omit_stats=spec.omit_stats,
                                 compression=spec.compression,
                                 page_bytes=page_bytes, **parts)
+        crc = zlib.crc32(blob)
         row[f"{spec.name}_blob"] = blob
         row[f"{spec.name}_meta"] = {
             "codec": codecs.CODEC_NAMES[st.codec], "n_values": st.n_values,
@@ -379,7 +383,7 @@ def _encode_rowgroup(batch: pa.Table, specs: list[ColumnSpec],
             "min_json": _stat_json(st.min_val), "max_json": _stat_json(st.max_val),
             "bloom": _chunk_bloom(parts, spec),
             "distinct_json": _chunk_distinct(parts, spec),
-            "crc32": zlib.crc32(blob),
+            "crc32": crc,
             # boundary order is a SCALAR-column property (a flattened list
             # element stream has no row order to speak of), so the heavy
             # token arrays never pay the comparison pass; scalar columns
@@ -387,6 +391,10 @@ def _encode_rowgroup(batch: pa.Table, specs: list[ColumnSpec],
             # data), small beside their codec work
             "sorted": False if spec.is_list else _chunk_sorted(parts),
         }
+        # the crc covers every blob byte, so groups that differ anywhere
+        # get different rg_ids (the index fingerprint and the driver's
+        # group cache key on them); the edges and length cost no pass
+        hasher.update(b"%d:%d:" % (len(blob), crc))
         hasher.update(blob[:256])
         hasher.update(blob[-256:])
     row["rg_id"] = hasher.hexdigest()
@@ -879,6 +887,110 @@ def _is_persisted(df) -> bool:
         return False
 
 
+class _GroupCache:
+    """The blobs scan()'s driver path fetched, kept in the driver so a
+    later index-bounded lookup takes every row group it already holds
+    from here and fetches only the rest. Entries are keyed by (frame
+    handle, rg_id), one Arrow array per fetched column (each `*_blob`,
+    each `{col}_meta.bloom` a probe reads) holding the rows of that rg_id.
+    Frames are held weakly, like _sorted_indexes, so a frame's entries go
+    with its handle. At most DECODE_BATCH_BYTES bytes are held over all
+    frames, evicting the least recently used group first; each entry owns
+    its buffers (one copy when it is stored), so what an eviction frees
+    is what the budget counted. One lock guards it all, so lookups from
+    several driver threads can share it."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._lru: OrderedDict = OrderedDict()  # (token, rg_id) → entry
+        self._tokens = weakref.WeakKeyDictionary()  # frame → token
+        self._dead: list = []  # tokens of collected frames
+        self.nbytes = 0
+
+    def _forget(self, token):
+        # runs when a frame is collected, maybe inside a locked section
+        # of this thread: purge now only if the lock is free, else at the
+        # next use
+        self._dead.append(token)
+        if self._lock.acquire(blocking=False):
+            try:
+                self._purge()
+            finally:
+                self._lock.release()
+
+    def _purge(self, *tokens):
+        dead = set(tokens)
+        while self._dead:  # pop, not clear: _forget may append meanwhile
+            dead.add(self._dead.pop())
+        if dead:
+            for key in [key for key in self._lru if key[0] in dead]:
+                self.nbytes -= _entry_bytes(self._lru.pop(key))
+
+    def get(self, frame, ids, columns) -> tuple[dict, list]:
+        """→ ({rg_id: entry} for the groups of `ids` held with every one of
+        `columns`, [the other rg_ids])."""
+        hits, missing = {}, []
+        with self._lock:
+            self._purge()
+            token = self._tokens.get(frame)
+            for rid in ids:
+                key = (token, rid)
+                entry = self._lru.get(key)
+                if entry is not None and all(c in entry for c in columns):
+                    self._lru.move_to_end(key)
+                    hits[rid] = entry
+                else:
+                    missing.append(rid)
+        return hits, missing
+
+    def put(self, frame, tbl: pa.Table) -> dict:
+        """Store the groups of `tbl` (an `rg_id` column plus the fetched
+        columns, one row per group) → {rg_id: entry}."""
+        parts: dict = {}
+        for rb in tbl.to_batches():
+            for i, rid in enumerate(rb.column("rg_id").to_pylist()):
+                parts.setdefault(rid, []).append(rb.slice(i, 1))
+        cols = [c for c in tbl.column_names if c != "rg_id"]
+        # concat_arrays copies just these rows into buffers of their own
+        # (Table.take would first combine every chunk of the table)
+        fresh = {rid: {c: pa.concat_arrays([p.column(c) for p in ps])
+                       for c in cols} for rid, ps in parts.items()}
+        with self._lock:
+            self._purge()
+            token = self._tokens.get(frame)
+            if token is None:
+                token = self._tokens[frame] = object()
+                weakref.finalize(frame, self._forget, token)
+            for rid, entry in fresh.items():
+                old = self._lru.pop((token, rid), None)
+                if old is not None:
+                    self.nbytes -= _entry_bytes(old)
+                    entry = {**old, **entry}
+                self._lru[(token, rid)] = entry
+                self.nbytes += _entry_bytes(entry)
+            while self.nbytes > DECODE_BATCH_BYTES and self._lru:
+                self.nbytes -= _entry_bytes(self._lru.popitem(last=False)[1])
+        return fresh
+
+    def clear(self, frame):
+        """Drop every entry of `frame`."""
+        with self._lock:
+            self._purge(self._tokens.get(frame))
+
+    def held(self, frame) -> set:
+        """The rg_ids held for `frame`."""
+        with self._lock:
+            token = self._tokens.get(frame)
+            return {rid for t, rid in self._lru if t is token}
+
+
+def _entry_bytes(entry: dict) -> int:
+    return sum(a.nbytes for a in entry.values())
+
+
+_group_cache = _GroupCache()
+
+
 def _index_mat_token(enc_df, column: str):
     """ONE single-row aggregate over the persisted manifest: a
     materialization fingerprint (row-group count + order-independent
@@ -921,8 +1033,6 @@ def sorted_index_for(enc_df, column: str, require_clustered: bool = False):
     stats can't index (mixed-type or missing stats, list columns):
     callers fall back to the distributed stats-scan prunes."""
     global _sorted_indexes
-    import weakref
-
     from .sorted_index import SortedKeyIndex
 
     if _sorted_indexes is None:
@@ -935,6 +1045,10 @@ def sorted_index_for(enc_df, column: str, require_clustered: bool = False):
         # unavailable, not fatal: the stats-scan prune path handles it
         return None
     hit = cache.get(column)
+    if hit is not None and hit[0] != token:
+        # a new materialization: the driver's cached groups of the old
+        # one go with its index
+        _group_cache.clear(enc_df)
     if hit is not None and hit[0] == token:
         state, idx = hit[1], hit[2]
         if state == "built" or require_clustered:
@@ -1106,19 +1220,20 @@ def _conjuncts(spec_by: dict, filters):
 
 
 def _prune(enc_df, spec_by: dict, conj: list, indexes, auto_index: bool):
-    """prune() on normalised conjuncts → (frame, k, nbytes): every _keep
-    condition, ANDed into one where; k, the fewest row groups any
-    index-answered conjunct kept (None when no index answered) — an
-    upper bound on the surviving groups; and nbytes, the fewest blob
-    bytes any index-answered conjunct kept (None when no answering index
-    knows its groups' sizes). A column's index is
-    `indexes[col]`, else — with `auto_index`, and only on a persisted
-    frame (_is_persisted) — the memoized sorted_index_for: point
-    conjuncts look each value up on any layout (the prefix-max lookup is
-    correct for any overlap pattern), range conjuncts probe it only when
-    it is clustered."""
+    """prune() on normalised conjuncts, with no Spark plan built yet →
+    (keeps, ids, nbytes): keeps, one (spec, op, value, index ids) entry
+    per conjunct, which _where turns into _keep conditions ANDed into one
+    where; ids, the rg_ids every index-answered conjunct kept (their
+    intersection, in the first one's order; None when no index answered)
+    — no other group survives; and nbytes, the fewest blob bytes any
+    index-answered conjunct kept (None when no answering index knows its
+    groups' sizes). A column's index is `indexes[col]`, else — with
+    `auto_index`, and only on a persisted frame (_is_persisted) — the
+    memoized sorted_index_for: point conjuncts look each value up on any
+    layout (the prefix-max lookup is correct for any overlap pattern),
+    range conjuncts probe it only when it is clustered."""
     points = {col for col, op, _ in conj if op == "in"}
-    auto, conds, k, nbytes = {}, [], None, None
+    auto, keeps, kept, nbytes = {}, [], None, None
     for col, op, val in conj:
         idx = (indexes or {}).get(col)
         if (idx is None and op != "match" and auto_index
@@ -1143,15 +1258,21 @@ def _prune(enc_df, spec_by: dict, conj: list, indexes, auto_index: bool):
             # the distributed stats prune
             ids = None
         if ids is not None:
-            k = len(ids) if k is None else min(k, len(ids))
+            held = set(ids)
+            kept = [i for i in (ids if kept is None else kept) if i in held]
             b = idx._blob_bytes(ids)
             if b is not None:
                 nbytes = b if nbytes is None else min(nbytes, b)
-        cond = _keep(spec_by[col], op, val, ids)
-        if cond is not None:
-            conds.append(cond)
-    return (enc_df.where(reduce(operator.and_, conds)) if conds
-            else enc_df), k, nbytes
+        keeps.append((spec_by[col], op, val, ids))
+    return keeps, kept, nbytes
+
+
+def _where(enc_df, keeps, *extra):
+    """enc_df restricted by one where: every keep's _keep condition and
+    the `extra` Column conditions, ANDed (enc_df itself when none)."""
+    conds = [c for c in (_keep(*kp) for kp in keeps) if c is not None]
+    conds += extra
+    return enc_df.where(reduce(operator.and_, conds)) if conds else enc_df
 
 
 def prune(enc_df, specs: list[ColumnSpec], filters,
@@ -1167,8 +1288,9 @@ def prune(enc_df, specs: list[ColumnSpec], filters,
     per value inside its decode body, and prune_rowgroups_eq is the
     metadata-side bloom prune."""
     spec_by = {s.name: s for s in specs}
-    return _prune(enc_df, spec_by, _conjuncts(spec_by, filters)[0],
-                  indexes, auto_index)[0]
+    conj = _conjuncts(spec_by, filters)[0]
+    return _where(enc_df, _prune(enc_df, spec_by, conj, indexes,
+                                 auto_index)[0])
 
 
 def _key_prefilter(spec: ColumnSpec, op: str, val):
@@ -1283,6 +1405,42 @@ def _lookup_batch(tbl: pa.Table, specs: list[ColumnSpec],
     return _decode_groups(views, specs, out_schema, range(n), runs, known)
 
 
+def _driver_input(enc_df, keeps, ids, src: dict) -> pa.Table:
+    """The driver path's _lookup_batch input: the row groups `ids` (as
+    _prune returns them), one per row, with each column of `src` (input
+    name → frame column). On a persisted frame the groups come from
+    _group_cache and only the missing ones are fetched, through the
+    pruned frame restricted to them; cached groups skip the min/max and
+    distinct keeps, which only ever prune (may-match), so the bloom, the
+    key-first mask and the residual still make the rows exact. With
+    nothing missing no Spark job runs and no plan is built. An
+    unpersisted frame fetches every group, every time."""
+    from pyspark.sql import functions as F
+
+    cols = list(dict.fromkeys(src.values()))
+
+    def fetch(*extra) -> pa.Table:
+        # a nested field needs its alias; a top-level column reads faster
+        # without one
+        return _where(enc_df, keeps, *extra).select(
+            "rg_id", *[F.col(c).alias(c) if "." in c else c
+                       for c in cols]).toArrow()
+
+    if not _is_persisted(enc_df):
+        tbl = fetch()
+        return pa.table({a: tbl.column(c) for a, c in src.items()})
+    hits, missing = _group_cache.get(enc_df, ids, cols)
+    if missing:
+        hits.update(_group_cache.put(enc_df, fetch(
+            *([F.col("rg_id").isin(missing)] if hits else []))))
+    entries = [hits[r] for r in dict.fromkeys(ids) if r in hits]
+    if not entries:
+        return pa.table({a: pa.array([], pa.binary()) for a in src})
+    # one chunk per group, no copy: _blob_views walks the chunks
+    return pa.table({a: pa.chunked_array([e[c] for e in entries])
+                     for a, c in src.items()})
+
+
 def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
          filters, indexes: dict | None = None, auto_index: bool = True):
     """Compound-predicate scan — the ONE predicate path, for a conjunction
@@ -1314,12 +1472,19 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     decode body runs in the driver: the kept blobs are fetched when
     scan() is called, not lazily, and the result is a local relation
     (LocalTableScan) with the residual on top, so no Python worker
-    starts. Otherwise the body runs in mapInArrow tasks, one output batch
-    per DECODE_GROUPS surviving groups; when an index bounds the survivors
-    at k, the frame coalesces to k partitions, so no Python task starts on
-    an empty one. With no conjunct (decode_df) nothing is pruned, every
-    group decodes whole and the residual is lit(True). FLBA columns come
-    back as binary (_spark_schema).
+    starts. On a persisted frame the fetched groups stay in the driver
+    (_group_cache, at most DECODE_BATCH_BYTES over all frames, least
+    recently used out first) and a later lookup fetches only the groups
+    it does not hold; one that holds them all fetches nothing (with an
+    explicit index it runs no Spark job at all). The index must come
+    from the frame it is used with: a stale index can make the cache
+    serve groups the frame no longer holds. Otherwise the body runs in
+    mapInArrow tasks, one output batch per DECODE_GROUPS surviving
+    groups; when the indexes bound the survivors at k groups, the frame
+    coalesces to k partitions, so no Python task starts on an empty one.
+    With no conjunct (decode_df) nothing is pruned, every group decodes
+    whole and the residual is lit(True). FLBA columns come back as binary
+    (_spark_schema).
 
     `filters` is a list of (column, op, value) conjuncts; op ∈ {'>=', '>',
     '<=', '<', '=', 'between' (value=(lo,hi)), 'in' (value=iterable),
@@ -1336,7 +1501,7 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
 
     spec_by = {s.name: s for s in specs}
     conj, residual = _conjuncts(spec_by, filters)
-    pruned, k, nbytes = _prune(enc_df, spec_by, conj, indexes, auto_index)
+    keeps, ids, nbytes = _prune(enc_df, spec_by, conj, indexes, auto_index)
 
     # the driving conjunct: only bounds the page directory can compare
     # qualify (numeric or str/bytes — a date/Decimal literal against raw
@@ -1361,23 +1526,24 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     # per-value bloom probe hashes (None = can't disprove), computed once
     probes = [(i, [(v, _bloom_probe_hashes(v)) for v in val])
               for i, (_, op, val) in enumerate(conj) if op == "in"]
-    cols = [*[f"{s.name}_blob" for s in specs],
-            *[F.col(f"{conj[i][0]}_meta.bloom").alias(f"__bloom{i}")
-              for i, _ in probes]]
+    # the decode body's input columns → the frame's columns they read
+    src = {**{f"{s.name}_blob": f"{s.name}_blob" for s in specs},
+           **{f"__bloom{i}": f"{conj[i][0]}_meta.bloom" for i, _ in probes}}
     to_spark = _spark_schema(out_schema)
     schema = from_arrow_schema(to_spark)
 
     if nbytes is not None and nbytes <= DECODE_BATCH_BYTES:
-        rb = _lookup_batch(pruned.select(*cols).toArrow(), specs, out_schema,
-                           probes, drive)
+        rb = _lookup_batch(_driver_input(enc_df, keeps, ids, src), specs,
+                           out_schema, probes, drive)
         tbl = (to_spark.empty_table() if rb is None
                else pa.Table.from_batches([rb]))
         return enc_df.sparkSession.createDataFrame(tbl, schema=schema) \
             .where(residual)
-    if k is not None:
-        # at most k groups survive: Python runs for every partition of
-        # the decode, empty ones included, so fold them into k tasks
-        pruned = pruned.coalesce(max(1, k))
+    pruned = _where(enc_df, keeps)
+    if ids is not None:
+        # at most len(ids) groups survive: Python runs for every partition
+        # of the decode, empty ones included, so fold them into that many
+        pruned = pruned.coalesce(max(1, len(ids)))
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for tbl in _task_tables(batches):
@@ -1385,7 +1551,9 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             if rb is not None:
                 yield rb
 
-    return pruned.select(*cols).mapInArrow(fn, schema).where(residual)
+    return pruned.select(*[c if a == c else F.col(c).alias(a)
+                           for a, c in src.items()]) \
+        .mapInArrow(fn, schema).where(residual)
 
 
 def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
